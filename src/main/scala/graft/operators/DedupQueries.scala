@@ -1326,12 +1326,10 @@ object DedupQueries {
     * closed transitively into connected components, canonical id = the
     * smallest doc id of each cluster (a near-dup of a near-dup is a dup:
     * pairwise output alone would keep both B and C when A~B and B~C but
-    * A‖C). The component loop is g03's min-label propagation with the
-    * broadcast side INVERTED: here the edge list (verified dup pairs) is
-    * the tiny table and the label state is corpus-sized, so the pairs
-    * broadcast and the state never shuffles except for its own merge
-    * groupBy. Exact pairs are the per-fingerprint stars (doc → group min),
-    * which also covers sub-3-token docs that have no shingles for dd3. */
+    * A‖C). The component loop is g03's min-label propagation
+    * ([[clusterRowsOf]]). Exact pairs are the per-fingerprint stars
+    * (doc → group min), which also covers sub-3-token docs that have no
+    * shingles for dd3. */
   /** Verified duplicate-pair rows for a (docs, shingle index, band index)
     * triple — dd3's LSH-candidate + exact-Jaccard verify ∪ the exact-
     * fingerprint stars (doc → per-fp group min, which also covers sub-3-
@@ -1368,67 +1366,34 @@ object DedupQueries {
   /** Min-label propagation over an undirected pair graph: (doc_id, label)
     * with label = the component's smallest doc id — dd6's core, shared with
     * the at-rest cluster build and the contracted loop in
-    * [[appendDupClusters]]. The pair side broadcasts (g03's loop with the
-    * broadcast side INVERTED — the edge list is the tiny table here, the
-    * label state is corpus-sized and never shuffles except its own merge
-    * groupBy); labels only decrease, so (count, Σ label) is monotone until
-    * the fixpoint.
+    * [[appendDupClusters]] ([[Fixpoint.propagateMin]]).
     *
     * PRECONDITION: `nodes` must cover every pair endpoint (every call site
-    * passes the full corpus or the contracted component set). The round-15
-    * folded init derives each node's round-1 label directly, so an endpoint
+    * passes the full corpus or the contracted component set). The folded
+    * init derives each node's round-1 label directly, so an endpoint
     * MISSING from `nodes` would join the state only when a frontier
-    * neighbor reaches it — same labels when it does (the null-safe `imp`
-    * below keeps it propagating), but an endpoint whose every neighbor is
-    * already settled would never enter at all. */
+    * neighbor reaches it — same labels when it does, but an endpoint whose
+    * every neighbor is already settled would never enter at all. */
   private[graft] def clusterRowsOf(nodes: DataFrame, pairs: DataFrame,
       what: String = "dup-cluster labeling"): DataFrame = {
     val s = nodes.sparkSession
     import s.implicits._
-    val und = pairs.select($"d1".as("a"), $"d2".as("b"))
-      .unionAll(pairs.select($"d2".as("a"), $"d1".as("b")))
+    val und = pairs.select($"d1".as("src"), $"d2".as("dst"))
+      .unionAll(pairs.select($"d2".as("src"), $"d1".as("dst")))
       .localCheckpoint(eager = false)
-    // round 14: frontier propagation + signature-proven stop (the g01/g10
-    // discipline) — only improved labels re-probe the pair graph, and an
-    // empty frontier IS the fixpoint, saving the confirmation round the
-    // plain sig-compare needed (~0.4 s fixed cost per round at bench
-    // scale; at 100 TB the frontier join's probe side shrinks from the
-    // full corpus-sized state to the improving tail)
-    //
-    // round 15: round 1 folded into init (the g10 fold, guide §2.3) — from
-    // self-labels, round 1 is label = min(self, min over pair neighbors):
-    // one broadcast left-join of the corpus-sized node set against the
-    // tiny per-endpoint neighbor-min aggregate, replacing the full-corpus
-    // probe + corpus-sized merge groupBy the old round 1 paid. Most nodes
-    // have NO pairs, so the folded init also starts the loop with the
-    // frontier already collapsed to the paired tail.
-    val bmin = und.groupBy($"b").agg(min($"a").as("nmin"))
+    // round 1 folded into init: from self-labels it is min(self, min over
+    // pair neighbors) — one broadcast left-join of the corpus-sized node set
+    // against the tiny per-endpoint neighbor-min aggregate. Most nodes have
+    // NO pairs, so the loop starts with the frontier collapsed to the
+    // paired tail.
+    val bmin = und.groupBy($"dst").agg(min($"src").as("nmin"))
     val init = nodes.select($"doc_id")
-      .join(broadcast(bmin), $"doc_id" === $"b", "left")
+      .join(broadcast(bmin), $"doc_id" === $"dst", "left")
       .select($"doc_id",
         least($"doc_id", coalesce($"nmin", $"doc_id")).as("label"),
         ($"nmin".isNotNull && $"nmin" < $"doc_id").as("imp"))
-    Fixpoint.iterate(init, MaxClusterRounds, what) { df =>
-      val r = df.agg(count(lit(1)), sum($"label"), sum($"imp".cast("long"))).collect()(0)
-      Seq(r.getLong(0), r.getLong(1), r.getLong(2))
-    } ({ (state, _) =>
-      val fr = state.filter($"imp").select($"doc_id".as("f_doc"), $"label")
-      val cand = fr.join(broadcast(und), $"f_doc" === und("a"))
-        .select($"b".as("doc_id"), $"label")
-      state.select($"doc_id", $"label", lit(false).as("isnew"))
-        .unionAll(cand.select($"doc_id", $"label", lit(true).as("isnew")))
-        .groupBy($"doc_id")
-        .agg(min($"label").as("label"), min(when(!$"isnew", $"label")).as("oldl"))
-        // null-safe frontier test (the g01/g13 pattern): a vertex first
-        // introduced via `cand` has oldl = NULL, and a NULL comparison
-        // would silently drop it from the frontier — every call site today
-        // passes a `nodes` covering all pair endpoints, but this shared
-        // helper must fail safe rather than assume it
-        .select($"doc_id", $"label",
-          ($"oldl".isNull || $"label" < $"oldl").as("imp"))
-    // (oneAction A/B'd round 15: flat-to-worse — the corpus-sized merge
-    // groupBy wants AQE's coalescing; the folded init is the win here)
-    }, fixedAt = _(2) == 0L)
+    Fixpoint.propagateMin(init, und, Seq("doc_id"), "label", $"label",
+      MaxClusterRounds, what, oneAction = false, hops = 1)
       .select($"doc_id", $"label")
   }
 

@@ -1,53 +1,70 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
 
-/** Shared driver for DataFrame fixpoint loops (g01 reachability, g02 k-core
-  * peel, g03 components, dd6 dup clustering) — the loop DISCIPLINE lives
-  * here exactly once:
+/** Shared driver for DataFrame fixpoint loops. Two entry points:
+  * [[iterate]] (any monotone loop: g02/g15/g17 peels) and [[propagateMin]]
+  * (frontier min-propagation: g01 reachability, g03/g10 components, g13 BFS
+  * hops, dd6 dup clusters), which is built on it.
+  *
+  * Loop discipline, owned here once:
   *
   *  - each round's state is snapshotted with a lazy `localCheckpoint`
   *    (never persist/unpersist cycling — non-cascading uncache recompiles
   *    dependents and silently replays the whole round chain; see
   *    SCALING.md §8c);
-  *  - ONE action per round: the caller's signature aggregate materializes
-  *    the checkpoint and decides convergence (callers pick a signature
-  *    that is strictly monotone until their fixpoint);
-  *  - a round cap that FAILS LOUDLY — a silently truncated fixpoint is a
-  *    plausible-looking wrong answer that would also diverge from the
-  *    oracle on a deeper corpus.
+  *  - ONE action per round: the signature aggregate materializes the
+  *    checkpoint and decides convergence (signatures are strictly monotone
+  *    until the fixpoint; `fixedAt` lets a frontier loop prove the fixpoint
+  *    from the signature and skip the confirmation round);
+  *  - a round cap that FAILS LOUDLY, naming the loop — a silently truncated
+  *    fixpoint is a plausible-looking wrong answer.
   *
-  * The step function receives the latest signature so callers can pick a
-  * cheaper plan for small frontiers (g01's literal path).
-  *
-  * Round 15 (`oneAction`, guide §1.2 driver-synchronous cost): under AQE,
-  * every lazy `localCheckpoint`'s `toRdd` synchronously executes the round
-  * plan's shuffle stages as separate jobs BEFORE the signature aggregate
-  * runs the final stage — so a "one action" round was really 2+
-  * driver-synchronous plan executions, a fixed ~0.2–0.4 s floor per round
-  * at bench scale (round-14 telemetry) that never amortizes because loop
-  * state is always a stats-free LogicalRDD. Loops whose step plans carry
-  * EXPLICIT join modes everywhere (`broadcast`/`shuffle_hash` hints — AQE
-  * has no strategy decision left to make for them) can opt in to
-  * `oneAction = true`: AQE is disabled for the loop region only, `toRdd`
-  * becomes lazy, and the signature collect is genuinely the round's single
-  * job, computing and persisting the checkpoint blocks on the way. Loops
-  * with unhinted step joins (g15/g17's triangle re-enumeration) must stay
-  * on AQE for its runtime SMJ→broadcast conversion and keep the default.
-  * Results are unaffected — AQE is a physical-planning feature; the
-  * session posture is restored in a finally. (Session conf mutation: safe
-  * because Verify/Bench/tests drive queries single-threaded; a concurrent
-  * caller would at worst plan one query without AQE.)
-  * `spark.graft.fixpoint.aqe=true` force-keeps AQE as an escape hatch. */
+  * `oneAction`: under AQE, every lazy `localCheckpoint`'s `toRdd` runs the
+  * round plan's shuffle stages as separate driver-synchronous jobs BEFORE
+  * the signature aggregate runs the final stage. A loop whose step joins
+  * all carry explicit modes (`broadcast`/`shuffle_hash` hints, as
+  * [[propagateMin]]'s do) can set `oneAction = true`: AQE is off for the
+  * loop region only, `toRdd` becomes lazy, and the signature collect is
+  * the round's single job. Loop shuffles then lose AQE's coalescing, so
+  * their width follows the state row count (the signature's FIRST entry):
+  * one partition per [[RowsPerPartition]] rows, clamped to the session
+  * width. Results are unaffected (AQE is a physical-planning feature); the
+  * session conf is restored in a finally. Measured per loop (round-15 A/B):
+  * it wins for g01/g03/g10 and loses for g02/g13/dd6, whose merge wants
+  * AQE's coalescing more than it wants fewer jobs. Safe because queries
+  * are driven single-threaded; a concurrent caller would at worst plan one
+  * query without AQE. */
 private[operators] object Fixpoint {
 
-  private val KeepAqeKey = "spark.graft.fixpoint.aqe"
+  /** Loop-shuffle partition size under `oneAction`, in state rows (sized
+    * for the narrow ≤32-byte state rows of these loops). */
+  private val RowsPerPartition = 100000L
 
-  /** State rows per loop-shuffle partition under `oneAction` (the manual
-    * stand-in for AQE's coalescing, sized for these narrow ≤32-byte state
-    * rows; production tuning knob). Callers of `oneAction = true` must put
-    * the state ROW COUNT first in their signature — it drives the width. */
-  private val RowsPerPartitionKey = "spark.graft.fixpoint.rowsPerPartition"
+  /** Frontiers at or below this size (and the broadcast ceiling) skip the
+    * join: the (key → value) pairs fold into LITERALS — an `isin` pushed
+    * into the edge scan (batch-stat pruning skips most of a CSR-sorted
+    * index) plus a literal map lookup for the value. The driver-side
+    * collect is bounded by this constant, not by the data. */
+  private val FrontierLiteralMax = 512
+
+  /** Broadcast ceiling, in rows, for vertex-sized loop and state operands:
+    * under it the operand broadcasts and the edge side never moves; above
+    * it the operand is the build side of a keyed shuffle hash join, so the
+    * plan degrades by one exchange and never fails. ~5 M narrow rows is
+    * low-hundreds of MB per build. */
+  val BroadcastMaxKey = "spark.graft.graph.broadcastMaxVertices"
+
+  def broadcastCeiling(s: SparkSession): Long =
+    s.conf.getOption(BroadcastMaxKey).map(_.toLong).getOrElse(5000000L)
+
+  /** Broadcast `df` when `rows` ≤ ceiling, else hint a shuffle hash join. A
+    * hint is needed in both modes: loop state is a checkpointed LogicalRDD
+    * with unknown stats, so unhinted it would sort-merge-join every round. */
+  def sized(df: DataFrame, rows: Long): DataFrame =
+    if (rows <= broadcastCeiling(df.sparkSession)) broadcast(df)
+    else df.hint("shuffle_hash")
 
   def iterate(init: DataFrame, cap: Int, what: String)(
       signature: DataFrame => Seq[Long])(
@@ -61,35 +78,21 @@ private[operators] object Fixpoint {
     val partsKey = "spark.sql.shuffle.partitions"
     val prevAqe = s.conf.get(aqeKey, "true")
     val prevParts = s.conf.get(partsKey)
-    val flipAqe = oneAction && prevAqe == "true" &&
-      !s.conf.getOption(KeepAqeKey).exists(_.toBoolean)
-    // With AQE off, loop shuffles lose its runtime coalescing, so the width
-    // must be SCALE-ADAPTIVE rather than the session constant (guide §2.2):
-    // every oneAction caller's signature leads with the state row count, so
-    // each round plans its shuffles at ~rowsPerPartition state rows per
-    // task, clamped to the session width — one task at bench scale (what
-    // AQE coalesced to), the full session width once the state outgrows it.
-    val rowsPer = s.conf.getOption(RowsPerPartitionKey)
-      .map(_.toLong).getOrElse(100000L)
+    val flipAqe = oneAction && prevAqe == "true"
     def loopWidth(n: Long): Int = math.max(1L,
-      math.min(prevParts.toLong, (n + rowsPer - 1) / rowsPer)).toInt
+      math.min(prevParts.toLong, (n + RowsPerPartition - 1) / RowsPerPartition)).toInt
     if (flipAqe) s.conf.set(aqeKey, "false")
     try {
       var state = init.localCheckpoint(eager = false)
       var sig = signature(state)
       var round = 0
-      var changed = true
+      var changed = !fixedAt(sig)
       while (changed && round < cap) {
         val tr = System.nanoTime()
         if (flipAqe) s.conf.set(partsKey, loopWidth(sig.head).toString)
         val next = step(state, sig).localCheckpoint(eager = false)
         val tc = System.nanoTime()
         val nextSig = signature(next)
-        // round 14: frontier-carrying loops can PROVE the fixpoint from the
-        // signature itself (an empty frontier makes the next round a no-op
-        // by construction), saving the one confirmation round the plain
-        // sig-compare needs — at ~0.4 s of fixed per-round cost (checkpoint
-        // + signature job) that round is pure overhead
         changed = nextSig != sig && !fixedAt(nextSig)
         sig = nextSig
         state = next
@@ -100,10 +103,8 @@ private[operators] object Fixpoint {
       }
       if (changed) throw new IllegalStateException(
         s"$what did not converge within $cap rounds; raise the cap")
-      // round-count telemetry (round 14): per-round driver-synchronous cost
-      // dominates these loops at bench scale, so the profile work needs the
-      // denominator — one stderr line per loop execution, never on stdout
-      // (the Bench JSON contract owns stdout)
+      // one stderr line per loop execution, never on stdout (the Bench
+      // JSON contract owns stdout)
       if (stats) System.err.println(
         f"[fixpoint] $what%s: $round rounds, ${(System.nanoTime() - t0) / 1e9}%.3f s" +
           (if (flipAqe) " (oneAction)" else ""))
@@ -114,5 +115,104 @@ private[operators] object Fixpoint {
         s.conf.set(partsKey, prevParts)
       }
     }
+  }
+
+  /** Frontier min-propagation to the fixpoint: every vertex ends with the
+    * minimum over `transfer` along all edge paths from the init values.
+    *
+    *  - `init`: columns `keys :+ value :+ "imp"`, where `keys.last` is the
+    *    vertex and the other keys partition the graph (g10's `dkey`); `imp`
+    *    marks the frontier, the rows whose value should propagate. Callers
+    *    fold their full-frontier first round into `init` when it is a
+    *    direct aggregation.
+    *  - `edges`: columns `keys.init :+ "src" :+ "dst"` plus any payload
+    *    `transfer` reads (g01's frame array `fs`).
+    *  - `transfer`: the value a frontier row offers `dst`, over the edge
+    *    columns and the frontier's `value` column; NULL offers nothing.
+    *    It must be monotone in `value` (a smaller value never offers a
+    *    larger one), so the min fixpoint is unique and independent of round
+    *    and join order.
+    *
+    * Each round relaxes only the frontier (re-relaxing an unimproved value
+    * reproduces candidates an earlier round already merged) and merges with
+    * ONE hash aggregate; `imp = old.isNull || new < old` is null-safe, so a
+    * vertex first reached by a candidate joins the frontier. The signature
+    * (|state|, Σ value, |frontier|) is monotone until the fixpoint, and an
+    * empty frontier IS the fixpoint. The frontier join's plan is chosen per
+    * round from the signature's counts (Pregelix's sparse-vs-dense message
+    * join): literals up to min([[FrontierLiteralMax]], ceiling) frontier
+    * rows when the key is a single column, else [[sized]].
+    *
+    * `hops` > 1 relaxes that many hops per round, halving (for 2) the fixed
+    * per-round cost on long-diameter graphs while the candidate mass stays
+    * the same: hop k+1 relaxes only hop-k per-key minima that improve the
+    * state (their join operands sized by the state count), and those
+    * minima are marked propagated so they do not re-enter the frontier. */
+  def propagateMin(init: DataFrame, edges: DataFrame, keys: Seq[String],
+      value: String, transfer: Column, cap: Int, what: String,
+      oneAction: Boolean, hops: Int): DataFrame = {
+    val parts = keys.init
+    val fk = keys.map("_f_" + _)
+    val kv = (keys :+ value).map(col)
+    // the frontier side's keys are renamed: state may descend from `edges`
+    // (folded inits), and by-name resolution must stay unambiguous
+    def renamed(df: DataFrame, v: String): DataFrame =
+      df.select(keys.zip(fk).map { case (k, f) => col(k).as(f) } :+ col(value).as(v): _*)
+    def on(pairs: Seq[(String, String)]): Column =
+      pairs.map { case (a, b) => col(a) === col(b) }.reduce(_ && _)
+
+    // one hop from `fr` (keys :+ value) to candidate rows (keys :+ value);
+    // `rows` sizes the frontier operand
+    def relax(fr: DataFrame, rows: Long, literal: Boolean): DataFrame = {
+      val joined =
+        if (literal) {
+          val lits = fr.collect().toSeq
+          edges.filter(col("src").isin(lits.map(_.get(0)): _*))
+            .withColumn(value, element_at(
+              map(lits.flatMap(r => Seq(lit(r.get(0)), lit(r.get(1)))): _*), col("src")))
+        } else {
+          edges.join(sized(renamed(fr, value), rows),
+            on(parts.zip(fk) :+ ("src" -> fk.last)))
+        }
+      joined.select(parts.map(col) :+ col("dst").as(keys.last) :+ transfer.as(value): _*)
+        .filter(col(value).isNotNull)
+    }
+
+    def signature(df: DataFrame): Seq[Long] = {
+      val r = df.agg(count(lit(1)), coalesce(sum(col(value)), lit(0L)),
+        coalesce(sum(col("imp").cast("long")), lit(0L))).collect()(0)
+      Seq(r.getLong(0), r.getLong(1), r.getLong(2))
+    }
+
+    iterate(init, cap, what)(signature)({ (state, sig) =>
+      var fr = state.filter(col("imp")).select(kv: _*)
+      var rows = sig(2)
+      var literal = parts.isEmpty &&
+        rows <= math.min(FrontierLiteralMax, broadcastCeiling(state.sparkSession))
+      // per-key minima of the first hops - 1 hops, snapshotted: each feeds
+      // both the next hop and the merge, computed once
+      val propagated = (1 until hops).map { _ =>
+        val m = relax(fr, rows, literal).groupBy(keys.map(col): _*).agg(min(col(value)).as(value))
+          .localCheckpoint(eager = false)
+        fr = m.join(sized(renamed(state, "_old"), sig(0)), on(keys.zip(fk)), "left")
+          .filter(col("_old").isNull || col(value) < col("_old"))
+          .select(kv: _*)
+        rows = sig(0)
+        literal = false
+        m
+      }
+      // merge tags: 1 = old state, 2 = last-hop candidate, 3 = already
+      // propagated minimum (non-improving ones are harmless: their merged
+      // value comes from the old state anyway)
+      val tagged = (state.select(kv :+ lit(1).as("_k"): _*) +:
+        propagated.map(_.select(kv :+ lit(3).as("_k"): _*)) :+
+        relax(fr, rows, literal).select(kv :+ lit(2).as("_k"): _*)).reduce(_ unionAll _)
+      val v = col(value)
+      tagged.groupBy(keys.map(col): _*)
+        .agg(min(v).as(value), min(when(col("_k") === 1, v)).as("_old"),
+          min(when(col("_k") === 3, v)).as("_prop"))
+        .select(kv :+ ((col("_old").isNull || v < col("_old")) &&
+          (col("_prop").isNull || v < col("_prop"))).as("imp"): _*)
+    }, fixedAt = _(2) == 0L, oneAction = oneAction)
   }
 }

@@ -169,18 +169,6 @@ object GraphMetricsQueries {
     ()
   }
 
-  /** Broadcast ceiling for the per-vertex state tables this module joins
-    * against the day-edge list (k-core members, component labels, ranks,
-    * degrees). Their size is the PROBE-DAY vertex count — data-dependent,
-    * so the broadcast that keeps the edge set un-shuffled on a normal day
-    * must degrade to a keyed shuffle join on a 100×-hotter day instead of
-    * failing the job (the a03 guard pattern; round 6 cured the forced dim
-    * broadcasts of the same defect). Sized like a03's grid guard: ~5 M
-    * narrow (actor_id, value) rows ≈ low-hundreds of MB built per
-    * partition, well under executor memory. */
-  val StateBroadcastMaxKey = "spark.graft.graph.broadcastMaxVertices"
-  private val StateBroadcastMaxDefault = 5000000L
-
   /** One memoized vertex-count probe per (corpus, mutation epoch) decides
     * every state-side join mode in this module — a scalar distinct-count
     * over the at-rest day-edge table, cost ≪ any of the joins it plans. */
@@ -190,17 +178,13 @@ object GraphMetricsQueries {
       e.select(col("actor1")).unionAll(e.select(col("actor2"))).distinct().count()
     }
 
-  /** State-side join operand: broadcast under the vertex ceiling, shuffled
-    * hash join above it (the state side is still the hash build side — just
-    * keyed, not replicated, so the plan degrades by one exchange and never
-    * fails). A hint is needed in BOTH modes because loop state is a
-    * checkpointed LogicalRDD with unknown stats: unhinted, the planner
-    * assumes worst-case size and sort-merge-joins every round. */
-  private[operators] def guarded(s: SparkSession, d: String, state: DataFrame): DataFrame = {
-    val max = s.conf.getOption(StateBroadcastMaxKey)
-      .map(_.toLong).getOrElse(StateBroadcastMaxDefault)
-    if (dayVertices(s, d) <= max) broadcast(state) else state.hint("shuffle_hash")
-  }
+  /** State-side join operand (k-core members, ranks, degrees, labels) sized
+    * by the probe-day vertex count ([[Fixpoint.sized]]): data-dependent, so
+    * the broadcast that keeps the edge set un-shuffled on a normal day must
+    * degrade to a keyed shuffle join on a 100×-hotter day instead of
+    * failing the job. */
+  private[operators] def guarded(s: SparkSession, d: String, state: DataFrame): DataFrame =
+    Fixpoint.sized(state, dayVertices(s, d))
 
   private def c12(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
@@ -355,15 +339,11 @@ object GraphMetricsQueries {
   }
 
   /** g03: connected components on the probe-day window — min-label
-    * propagation to fixpoint (label = smallest reachable actor id, GraphX's
-    * `connectedComponents` convention, differentially tested against it).
-    * Same loop discipline as g01/g02: lazy localCheckpoint snapshots, one
-    * signature action per round, loud failure at the round cap, and (round
-    * 14) FRONTIER propagation — only improved labels re-propagate, so late
-    * rounds probe the improving tail instead of the full edge list.
-    * Rounds are bounded by the component diameter; at 100 TB the edge list
-    * stays partitioned by `src` and the label table shuffles on actor —
-    * the Pregel CC superstep expressed relationally. */
+    * propagation to fixpoint ([[Fixpoint.propagateMin]]; label = smallest
+    * reachable actor id, GraphX's `connectedComponents` convention,
+    * differentially tested against it). Rounds are bounded by the component
+    * diameter; at 100 TB the edge list stays partitioned by `src` — the
+    * Pregel CC superstep expressed relationally. */
   private def g03(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val e = dayEdges(s, d)
@@ -372,31 +352,15 @@ object GraphMetricsQueries {
     val und = e.select($"actor1".as("src"), $"actor2".as("dst"))
       .unionAll(e.select($"actor2".as("src"), $"actor1".as("dst")))
       .localCheckpoint(eager = false)
-    // Round 15: round 1 folded into init (the g10 fold, guide §2.3) — the
-    // full-frontier first round is min(self, min over neighbors), a direct
-    // aggregation over the edge list that subsumes the init distinct
+    // round 1 folded into init: from self-labels it is min(self, min over
+    // neighbors), a direct aggregation over the edge list
     val init = und.select($"dst".as("actor_id"), $"src")
       .groupBy($"actor_id").agg(min($"src").as("nmin"))
       .select($"actor_id",
         least($"actor_id", $"nmin").as("label"),
         ($"nmin" < $"actor_id").as("imp"))
-    // Round 14: frontier (delta) propagation — the g01/g10 discipline;
-    // labels only decrease and the frontier empties exactly at the
-    // fixpoint, so (count, Σ label, |frontier|) is monotone-then-stable
-    val state = Fixpoint.iterate(init, MaxRounds, "component labeling") { df =>
-      val r = df.agg(count(lit(1)), sum($"label"), sum($"imp".cast("long"))).collect()(0)
-      Seq(r.getLong(0), r.getLong(1), r.getLong(2))
-    } ({ (state, _) =>
-      // label table is vertex-bounded — same guarded join mode as g02
-      val frontier = state.filter($"imp").select($"actor_id", $"label")
-      val cand = und.join(guarded(s, d, frontier), und("src") === frontier("actor_id"))
-        .select($"dst".as("actor_id"), $"label")
-      state.select($"actor_id", $"label", lit(false).as("isnew"))
-        .unionAll(cand.select($"actor_id", $"label", lit(true).as("isnew")))
-        .groupBy($"actor_id")
-        .agg(min($"label").as("label"), min(when(!$"isnew", $"label")).as("oldl"))
-        .select($"actor_id", $"label", ($"label" < $"oldl").as("imp"))
-    }, fixedAt = _(2) == 0L, oneAction = true)
+    val state = Fixpoint.propagateMin(init, und, Seq("actor_id"), "label", $"label",
+      MaxRounds, "component labeling", oneAction = true, hops = 1)
     state.select($"actor_id", $"label".as("component"))
       .orderBy($"actor_id")
   }
@@ -649,16 +613,6 @@ object GraphMetricsQueries {
       .orderBy($"dkey")
   }
 
-  /** One memoized count of (day, actor) label rows decides g10's state-side
-    * join mode — the whole-run sibling of [[dayVertices]]. */
-  private def allDayVertices(s: SparkSession, d: String): Long =
-    EpochMemo.scalar(s, "graph.allDayVertices", d) {
-      val e = edgesByDay(s, d)
-      e.select(col("dkey"), col("actor1").as("a"))
-        .unionAll(e.select(col("dkey"), col("actor2").as("a")))
-        .distinct().count()
-    }
-
   /** g10: component evolution — connected components of EVERY day's contact
     * graph in one pass, rolled up to the per-day structure curve
     * (actors, edges, component count, giant-component size) that
@@ -667,69 +621,31 @@ object GraphMetricsQueries {
     * components). The fixpoint runs ONCE over all days simultaneously:
     * labels are keyed (dkey, actor), propagation joins on (dkey, src), so
     * round count is the MAX component diameter across days — not the sum —
-    * and each round is one equi-join + one hash agg exactly like g03. At
-    * 100 TB the day-keyed edge table stays partitioned on (dkey, src) and
-    * the label table broadcasts under the [[StateBroadcastMaxKey]] ceiling
-    * (counted over all days by [[allDayVertices]]), degrading to a keyed
-    * shuffle join above it. The DuckDB oracle runs the same semantics as a
-    * day-scoped recursive CTE; GraphMetricsSpec differentially checks a
-    * driver-side union-find recompute. */
+    * and each round is one equi-join + one hash agg exactly like g03
+    * ([[Fixpoint.propagateMin]] with `dkey` as a partition key). The DuckDB
+    * oracle runs the same semantics as a day-scoped recursive CTE;
+    * GraphMetricsSpec differentially checks a driver-side union-find
+    * recompute. */
   private def g10(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val e = edgesByDay(s, d)
     val und = e.select($"dkey", $"actor1".as("src"), $"actor2".as("dst"))
       .unionAll(e.select($"dkey", $"actor2".as("src"), $"actor1".as("dst")))
       .localCheckpoint(eager = false)
-    // Round 15 (guide §2.3 — aggregate instead of join when the frontier is
-    // everyone): round 1 of min-label propagation from self-labels computes,
-    // per (dkey, vertex), min(self, min over neighbors) — a DIRECT
-    // aggregation over the day-edge table. Folding it into init retires both
-    // the per-execution init `distinct` (the same shuffle re-keyed) and the
-    // full-frontier round-1 probe join that merged |directed day-edges|
-    // (2.67 M at sf0.1) candidate rows against the complete state: the loop
-    // now starts at the post-round-1 state with the frontier already
-    // collapsed to the improving tail. Exactness: every vertex of und
-    // appears as `dst` (the union is symmetric), min is the same merge the
-    // loop applies, and `imp` = (neighbor-min < self) is round 1's
-    // improvement test verbatim.
+    // round 1 folded into init: from self-labels, round 1 computes per
+    // (dkey, vertex) min(self, min over neighbors) — a DIRECT aggregation
+    // over the day-edge table instead of a full-frontier probe join that
+    // merged |directed day-edges| (2.67 M at sf0.1) candidate rows. Every
+    // vertex of und appears as `dst` (the union is symmetric).
     val init = und.select($"dkey", $"dst".as("actor_id"), $"src")
       .groupBy($"dkey", $"actor_id").agg(min($"src").as("nmin"))
       .select($"dkey", $"actor_id",
         least($"actor_id", $"nmin").as("label"),
         ($"nmin" < $"actor_id").as("imp"))
-    val ceiling = s.conf.getOption(StateBroadcastMaxKey)
-      .map(_.toLong).getOrElse(StateBroadcastMaxDefault)
-    val broadcastState = allDayVertices(s, d) <= ceiling
-    // Round 14 (guide §2 — don't re-shuffle/probe what didn't change):
-    // FRONTIER (delta) propagation, the g01 discipline applied to the
-    // min-label loop. Only actors whose label IMPROVED last round
-    // re-propagate — re-propagating an unimproved label reproduces
-    // candidates an earlier round already merged, so the fixpoint is
-    // unchanged — which shrinks the per-round candidate mass from
-    // |directed day-edges| (measured 2.67 M rows probed and merged EVERY
-    // round at sf0.1) to the improving tail after round 1. Signature:
-    // labels only decrease and the frontier empties exactly once at the
-    // fixpoint, so (count, Σ label, |frontier|) is monotone-then-stable.
-    val state = Fixpoint.iterate(init, G10Rounds,
-      "per-day component labeling (deeper than the oracle unroll — raise G10Rounds in code AND oracle)") { df =>
-      val r = df.agg(count(lit(1)), sum($"label"), sum($"imp".cast("long"))).collect()(0)
-      Seq(r.getLong(0), r.getLong(1), r.getLong(2))
-    } ({ (st, _) =>
-      // explicit state-side aliases: state descends from `und`, so unaliased
-      // column refs would lean on self-join disambiguation
-      val stA = st.filter($"imp")
-        .select($"dkey".as("s_dkey"), $"actor_id".as("s_actor"), $"label")
-      val hinted = if (broadcastState) broadcast(stA) else stA.hint("shuffle_hash")
-      val cand = und.join(hinted, $"dkey" === $"s_dkey" && $"src" === $"s_actor")
-        .select($"dkey", $"dst".as("actor_id"), $"label")
-      // merge = ONE hash aggregate; every vertex is in state from round 0,
-      // so the old label is never null and `imp` is a strict improvement
-      st.select($"dkey", $"actor_id", $"label", lit(false).as("isnew"))
-        .unionAll(cand.select($"dkey", $"actor_id", $"label", lit(true).as("isnew")))
-        .groupBy($"dkey", $"actor_id")
-        .agg(min($"label").as("label"), min(when(!$"isnew", $"label")).as("oldl"))
-        .select($"dkey", $"actor_id", $"label", ($"label" < $"oldl").as("imp"))
-    }, fixedAt = _(2) == 0L, oneAction = true)
+    val state = Fixpoint.propagateMin(init, und, Seq("dkey", "actor_id"), "label",
+      $"label", G10Rounds,
+      "per-day component labeling (deeper than the oracle unroll — raise G10Rounds in code AND oracle)",
+      oneAction = true, hops = 1)
     val sizes = state.groupBy($"dkey", $"label").agg(count(lit(1)).as("sz"))
     val comps = sizes.groupBy($"dkey").agg(
       sum($"sz").as("n_actors"),
@@ -814,12 +730,9 @@ object GraphMetricsQueries {
     * away is everyone on that day" (the ego-distance profile behind
     * small-world analyses and k-hop neighborhood sampling; C9b's 4-hop
     * common-neighbor query is its fixed-depth special case). Min-distance
-    * propagation to fixpoint — the g03 loop with labels = hop counts:
-    * once a vertex is reached its distance is final (synchronous BFS
-    * layers), so (|reached|, Σ dist) is monotone until convergence. Per
-    * round: one equi-join of the undirected edge list against the guarded
-    * vertex-bounded state + one min-agg. Unreached actors are absent, as
-    * in g01. */
+    * propagation to fixpoint ([[Fixpoint.propagateMin]]) — the g03 loop
+    * with labels = hop counts: each round reaches exactly the next BFS
+    * layer. Unreached actors are absent, as in g01. */
   private def g13(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val g = GraphCache(s, d)
@@ -828,29 +741,10 @@ object GraphMetricsQueries {
     val und = e.select($"actor1".as("src"), $"actor2".as("dst"))
       .unionAll(e.select($"actor2".as("src"), $"actor1".as("dst")))
       .localCheckpoint(eager = false)
-    // round 14: frontier BFS + signature-proven stop (the g01/g10
-    // discipline) — only the newly-reached layer re-probes the edge list
-    // (synchronous BFS reaches every vertex at its minimal hop, so an
-    // already-reached vertex can never improve), and an empty layer IS
-    // the fixpoint, saving the plain sig-compare's confirmation round
     val init = Seq((pa1, 0L, true)).toDF("actor_id", "dist", "imp")
-    val state = Fixpoint.iterate(init, BfsCap,
-      "BFS hop propagation (deeper than the oracle bound — raise BfsCap in code AND oracle)") { df =>
-      val r = df.agg(count(lit(1)), sum($"dist"), sum($"imp".cast("long"))).collect()(0)
-      Seq(r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1), r.getLong(2))
-    } ({ (st, _) =>
-      val frontier = st.filter($"imp").select($"actor_id".as("src"), $"dist")
-      val cand = und
-        .join(guarded(s, d, frontier), "src")
-        .select($"dst".as("actor_id"), ($"dist" + 1L).as("dist"))
-      st.select($"actor_id", $"dist", lit(false).as("isnew"))
-        .unionAll(cand.select($"actor_id", $"dist", lit(true).as("isnew")))
-        .groupBy($"actor_id")
-        .agg(min($"dist").as("dist"), min(when(!$"isnew", $"dist")).as("oldd"))
-        .select($"actor_id", $"dist", $"oldd".isNull.as("imp"))
-    }, fixedAt = _(2) == 0L)
-    // (oneAction measured flat-to-worse here: the BFS frontier is tiny and
-    // AQE's runtime coalescing beats the saved stage jobs — A/B'd round 15)
+    val state = Fixpoint.propagateMin(init, und, Seq("actor_id"), "dist", $"dist" + 1L,
+      BfsCap, "BFS hop propagation (deeper than the oracle bound — raise BfsCap in code AND oracle)",
+      oneAction = false, hops = 1)
     state.select($"actor_id", $"dist".as("hops")).orderBy($"actor_id")
   }
 
@@ -865,7 +759,7 @@ object GraphMetricsQueries {
     *
     * Each round is one equi-join of the undirected edge list against the
     * vertex-bounded label table (guarded broadcast-or-shuffle, the
-    * g03/g04 mode) + one hash agg per (dst, label) + one argmax — the
+    * g02/g04 mode) + one hash agg per (dst, label) + one argmax — the
     * argmax as `max(struct(count, -label))`, a second hash agg rather than
     * a per-vertex window, so map-side partial aggregation applies and no
     * window partition exists at any scale. The DuckDB oracle unrolls the

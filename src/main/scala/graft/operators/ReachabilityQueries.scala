@@ -11,31 +11,15 @@ import graft.build.{DerivedCache, DocTables, EventGraphSql, GraphCache}
   * flow forward in time). Output = every reachable actor with its EARLIEST
   * arrival frame.
   *
-  * Execution model: iterative frontier relaxation (earliest-arrival BFS) as
-  * a driver-side loop of DataFrame joins — the standard distributed shape
-  * for fixpoint algorithms (GraphX's Pregel is the same loop internally).
-  * Two structural choices keep the loop cheap at scale:
-  *
-  *  - **At-rest temporal adjacency** ([[adjacency]]): the frame-exploded
-  *    edge stream is folded ONCE at ingest into one row per directed
-  *    neighbor pair carrying its sorted active-frame array (the CSR layout
-  *    every temporal-graph engine builds). A relaxation round then joins
-  *    the frontier to |pairs| rows instead of |frame_interactions| rows —
-  *    orders of magnitude fewer at realistic frames-per-pair — and the
-  *    earliest usable hop is a codegen'd `array_min(filter(fs, >= f))`
-  *    per pair, not a per-frame group-by.
-  *  - **Frontier (delta) relaxation**: a round only re-propagates from
-  *    actors whose arrival IMPROVED last round, so late rounds touch a
-  *    handful of rows instead of re-joining the full reached set. The min
-  *    fixpoint is unchanged (re-relaxing a non-improved actor can never
-  *    produce a better arrival than it already produced).
-  *
-  * One action per round (the convergence signature) materializes both the
-  * new frontier and the merged state through their persist markers. Rounds
-  * are bounded by the temporal diameter (tiny for social contact graphs);
-  * per-round cost is one broadcast-or-hash join keyed on actor — at 100 TB
-  * the adjacency stays partitioned by `src` and the frontier (≤ |actors|
-  * rows) broadcasts.
+  * Execution model: earliest-arrival frontier relaxation
+  * ([[Fixpoint.propagateMin]]) over the **at-rest temporal adjacency**
+  * ([[adjacency]]): the frame-exploded edge stream is folded ONCE at ingest
+  * into one row per directed neighbor pair carrying its sorted active-frame
+  * array (the CSR layout every temporal-graph engine builds). A relaxation
+  * round then joins the frontier to |pairs| rows instead of
+  * |frame_interactions| rows, and the earliest usable hop is a codegen'd
+  * binary search per pair, not a per-frame group-by. Rounds are bounded by
+  * the temporal diameter (tiny for social contact graphs).
   *
   * The fixpoint (min arrival per actor) is unique regardless of join or
   * iteration order, so the result is deterministic and the DuckDB oracle
@@ -47,15 +31,6 @@ object ReachabilityQueries {
 
   /** Safety cap on relaxation rounds (temporal diameter bound). */
   private val MaxRounds = 50
-
-  /** Frontiers at or below this size skip the broadcast join entirely: the
-    * (id → arrival) pairs fold into LITERALS (an `isin` pushed into the
-    * cached adjacency scan — batch-stat pruning skips most of the index —
-    * plus a literal map lookup for the arrival). Round 0 (single source)
-    * and the late delta rounds take this path; only the mid-BFS explosion
-    * rounds pay a full index scan. The driver-side collect is bounded by
-    * this constant — the A3 seed-lookup pattern, not a data-sized collect. */
-  private val FrontierLiteralMax = 512
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "g01_temporal_reach" -> g01)
@@ -147,102 +122,16 @@ object ReachabilityQueries {
     val pa1 = g.probes.pa1
     val adj = adjacency(s, d)
 
-    // Loop discipline (checkpoint per round, one signature action, loud
-    // cap) lives in [[Fixpoint]]. The state table CARRIES the frontier flag
-    // (`imp` = arrival improved last round) instead of a separate frontier
-    // DataFrame: under AQE every localCheckpoint's toRdd synchronously
-    // executes its shuffle stages, so a two-table round (frontier ckpt +
-    // merged-state ckpt + signature) paid three driver-synchronous
-    // executions. One merged table = one checkpoint + one signature action
-    // per round, and the candidate pre-aggregation folds into the merge
-    // groupBy — ONE shuffle per round total.
-    //
-    // arrival(start) = -1: the first hop may use any frame.
-    // Convergence signature: arrivals only ever decrease and the reached
-    // set only ever grows, so (|state|, Σ arrivals, |frontier|) is strictly
-    // monotone until the fixpoint.
+    // arrival(start) = -1: the first hop may use any frame; the earliest
+    // usable hop per neighbor pair is the first active frame >= the
+    // arrival, an alloc-free binary search over the sorted frame array.
+    // Two hops per round: the per-round fixed cost is most of what the
+    // long-diameter tail rounds cost (sf1: 18 one-hop rounds, 9 two-hop).
     val init = Seq((pa1, -1L, true)).toDF("actor_id", "f", "imp")
-    // Round 15, session 2 (the VERDICT stretch item): TWO relaxation hops
-    // per round. The per-round driver-synchronous floor (checkpoint + the
-    // signature job) is most of what the long-diameter tail rounds cost
-    // (sf1 telemetry: 18 one-hop rounds), so halving the round count
-    // halves it while total candidate mass is unchanged — every arrival
-    // improvement still relaxes exactly once. Exactness: the earliest-
-    // arrival fixpoint is confluent (candidates relaxed from ANY sound
-    // upper bound stay sound upper bounds; the per-actor min only ever
-    // tightens toward the unique fixpoint), and hop 2 relaxes only hop-1
-    // per-actor mins that IMPROVE the state. The frontier flag stays exact
-    // via the propagated marker (src_k = 3, the g10 argument).
-    val state = Fixpoint.iterate(init, MaxRounds,
-      "temporal reachability (corpus temporal diameter exceeds the cap)") { df =>
-      val r = df.agg(count(lit(1)), sum($"f"), sum($"imp".cast("long"))).collect()(0)
-      Seq(r.getLong(0), r.getLong(1), r.getLong(2))
-    } (fixedAt = _(2) == 0L, oneAction = true, step = { (state, sig) =>
-      // earliest usable hop per neighbor pair: first active frame >= the
-      // frontier arrival, via the alloc-free binary-search expression
-      // (sorted_first_geq) straight off the sorted frame array.
-      //
-      // The frontier side is EXPLICITLY broadcast: loop state is a
-      // checkpointed LogicalRDD with unknown stats, so the planner would
-      // otherwise default it to "huge" and SHUFFLE the million-row adjacency
-      // on every round (measured ~1 s/round at sf0.1 — AQE only converts
-      // the join after the adjacency map stage already ran). Broadcasting
-      // the ≤|actors| frontier is also the stated 100 TB design: adjacency
-      // stays partitioned by src and never moves.
-      val impCount = sig(2)
-      val frontier = state.filter($"imp").select($"actor_id", $"f")
-      val cand =
-        if (impCount <= FrontierLiteralMax) {
-          // literal path: fold the tiny frontier into the scan predicate
-          val rows = frontier.collect()
-          if (rows.isEmpty) adj.filter(lit(false))
-            .select($"dst".as("actor_id"), lit(null).cast("long").as("f"))
-          else {
-            val arrivals = map(rows.toSeq.flatMap(r =>
-              Seq(lit(r.getLong(0)), lit(r.getLong(1)))): _*)
-            adj.filter($"src".isin(rows.toSeq.map(_.getLong(0)): _*))
-              .select($"dst".as("actor_id"),
-                graft.functions.ArraySearch
-                  .sortedFirstGeq($"fs", element_at(arrivals, $"src")).as("f"))
-              .filter($"f".isNotNull)
-          }
-        } else {
-          adj.join(broadcast(frontier), adj("src") === frontier("actor_id"))
-            .select($"dst".as("actor_id"),
-              graft.functions.ArraySearch.sortedFirstGeq($"fs", $"f").as("f"))
-            .filter($"f".isNotNull)
-        }
-      // hop-1 per-actor min arrivals, snapshotted: m1 feeds BOTH hop 2 and
-      // the merge (min-equivalent to cand there), and the lazy checkpoint
-      // makes the diamond compute the hop-1 probe once
-      val m1 = cand.groupBy($"actor_id").agg(min($"f").as("f"))
-        .localCheckpoint(eager = false)
-      // hop-2 frontier: hop-1 arrivals that improve the state — new actors
-      // or strictly earlier arrivals (relaxing anything else reproduces
-      // candidates an earlier hop already merged)
-      val stA = state.select($"actor_id".as("s_actor"), $"f".as("oldf0"))
-      val f2 = m1.join(broadcast(stA), $"actor_id" === $"s_actor", "left")
-        .filter($"oldf0".isNull || $"f" < $"oldf0")
-        .select($"actor_id".as("f_actor"), $"f".as("f_arr"))
-      val cand2 = adj.join(broadcast(f2), adj("src") === f2("f_actor"))
-        .select($"dst".as("actor_id"),
-          graft.functions.ArraySearch.sortedFirstGeq($"fs", $"f_arr").as("f"))
-        .filter($"f".isNotNull)
-      // merge = ONE hash aggregate. src_k: 1 = old state, 2 = hop-2
-      // candidate, 3 = hop-1 min (its improving values were already
-      // relaxed from in hop 2; marking the non-improving ones too is
-      // harmless — their merged arrival comes from oldf anyway)
-      state.select($"actor_id", $"f", lit(1).as("src_k"))
-        .unionAll(m1.select($"actor_id", $"f", lit(3).as("src_k")))
-        .unionAll(cand2.select($"actor_id", $"f", lit(2).as("src_k")))
-        .groupBy($"actor_id")
-        .agg(min($"f").as("f"),
-          min(when($"src_k" === 1, $"f")).as("oldf"),
-          min(when($"src_k" === 3, $"f")).as("propf"))
-        .select($"actor_id", $"f",
-          (($"oldf".isNull || $"f" < $"oldf") &&
-            ($"propf".isNull || $"f" < $"propf")).as("imp"))
-    })
+    val state = Fixpoint.propagateMin(init, adjacency(s, d), Seq("actor_id"), "f",
+      graft.functions.ArraySearch.sortedFirstGeq($"fs", $"f"), MaxRounds,
+      "temporal reachability (corpus temporal diameter exceeds the cap)",
+      oneAction = true, hops = 2)
     state.filter($"actor_id" =!= pa1)
       .select($"actor_id", $"f".as("first_frame"))
       .orderBy($"actor_id")

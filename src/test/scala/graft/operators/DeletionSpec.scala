@@ -34,10 +34,13 @@ class DeletionSpec extends SparkSpec {
     30L -> t6, 31L -> t6)         // whole cluster deleted
   private val deletedIds = Set(1L, 8L, 21L, 30L, 31L)
 
-  test("deleteDocumentBatch == fresh build over the remaining corpus, every table") {
+  /** Deletes `ids` from a built corpus and asserts every maintained table
+    * equals a fresh build over the remaining documents; returns the
+    * deletion-side cache dir. */
+  private def deleteMatchesFreshBuild(ids: Set[Long]): String = {
     val docs = all.toDF("doc_id", "text")
-    val batch = docs.filter($"doc_id".isInCollection(deletedIds))
-    val remaining = docs.filter(!$"doc_id".isInCollection(deletedIds))
+    val batch = docs.filter($"doc_id".isInCollection(ids))
+    val remaining = docs.filter(!$"doc_id".isInCollection(ids))
 
     val dDel = s"/deletion-spec/${java.util.UUID.randomUUID()}"
     val dRef = s"/deletion-ref/${java.util.UUID.randomUUID()}"
@@ -67,6 +70,11 @@ class DeletionSpec extends SparkSpec {
         else (del0, ref0)
       assert(rows(del) == rows(ref), s"table ${t._1} must equal the fresh build")
     }
+    dDel
+  }
+
+  test("deleteDocumentBatch == fresh build over the remaining corpus, every table") {
+    val dDel = deleteMatchesFreshBuild(deletedIds)
 
     // semantics pins: deleting star center 1 must KEEP {2,3} one cluster
     // (re-centered on 2), not split them into singletons
@@ -79,5 +87,11 @@ class DeletionSpec extends SparkSpec {
     assert(pairs.contains((2L, 3L)), "the star must re-center on the new min")
     assert(pairs.forall { case (a, b) => !deletedIds(a) && !deletedIds(b) },
       "no pair may reference a deleted document")
+  }
+
+  test("deleting only documents whose clusters keep no survivor == fresh build") {
+    // singleton 8 and the whole cluster {30, 31}: the relabeling loop runs
+    // on an empty survivor set
+    deleteMatchesFreshBuild(Set(8L, 30L, 31L))
   }
 }

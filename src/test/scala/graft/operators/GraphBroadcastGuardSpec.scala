@@ -8,7 +8,7 @@ import graft.SparkSpec
 /** The per-vertex state tables the graph metrics join against the day-edge
   * list (k-core members, component labels, ranks, degrees) are sized by the
   * probe-day vertex count — data-dependent, so each broadcast sits behind
-  * the a03-style guard ([[GraphMetricsQueries.StateBroadcastMaxKey]]):
+  * the a03-style guard ([[Fixpoint.BroadcastMaxKey]]):
   * broadcast under the ceiling, keyed shuffle join above it. This suite
   * pins the OVER-threshold path for every query in the family: identical
   * rows to the broadcast mode, no broadcast hint anywhere in the plan, and
@@ -22,8 +22,13 @@ class GraphBroadcastGuardSpec extends SparkSpec {
       "g05_link_prediction", "g07_assortativity", "g12_label_propagation",
       "g13_bfs_hops")
 
+  /** The other [[Fixpoint.propagateMin]] loops, whose frontier joins
+    * share the ceiling: at 0 every frontier plan is the shuffle join. */
+  private val loopQueries =
+    Seq("g01_temporal_reach", "g10_component_evolution", "dd6_dup_clusters")
+
   private def run(name: String): DataFrame =
-    GraphMetricsQueries.queries(name)(spark, dir)
+    graft.SparkEntry.queries(name)(spark, dir)
 
   private def assertEquiJoinsOnly(df: DataFrame, name: String): Unit = {
     val p = df.queryExecution.sparkPlan.toString
@@ -36,7 +41,8 @@ class GraphBroadcastGuardSpec extends SparkSpec {
     * returned frame's analyzed plan is a LogicalRDD and cannot carry the
     * in-loop hints — their hint discipline is pinned at the [[guarded]]
     * helper level below instead. */
-  private val loopInteriorOnly = Set("g03_components", "g13_bfs_hops")
+  private val loopInteriorOnly =
+    Set("g03_components", "g13_bfs_hops") ++ loopQueries
 
   private def shuffleHashHints(df: DataFrame) =
     df.queryExecution.analyzed.collect {
@@ -48,12 +54,12 @@ class GraphBroadcastGuardSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     val state = s.range(5).select($"id".as("actor_id"), $"id".as("label"))
-    spark.conf.set(GraphMetricsQueries.StateBroadcastMaxKey, "0")
+    spark.conf.set(Fixpoint.BroadcastMaxKey, "0")
     try
       assert(shuffleHashHints(GraphMetricsQueries.guarded(s, dir, state)).nonEmpty,
         "over-ceiling guarded() must hint shuffle_hash — unhinted loop state " +
           "has unknown stats and would sort-merge-join every round")
-    finally spark.conf.unset(GraphMetricsQueries.StateBroadcastMaxKey)
+    finally spark.conf.unset(Fixpoint.BroadcastMaxKey)
     val under = GraphMetricsQueries.guarded(s, dir, state)
     val bc = under.queryExecution.analyzed.collect {
       case h: ResolvedHint if h.hints.strategy.exists(
@@ -62,10 +68,10 @@ class GraphBroadcastGuardSpec extends SparkSpec {
     assert(bc.nonEmpty, "under-ceiling guarded() must broadcast")
   }
 
-  for (name <- guardedQueries)
+  for (name <- guardedQueries ++ loopQueries)
     test(s"$name over the vertex ceiling degrades to a keyed shuffle join, result-identical") {
       val base = run(name).collect().toSeq
-      spark.conf.set(GraphMetricsQueries.StateBroadcastMaxKey, "0")
+      spark.conf.set(Fixpoint.BroadcastMaxKey, "0")
       try {
         val df = run(name)
         // the guard must swap the broadcast hint for a shuffle-keyed one —
@@ -89,7 +95,7 @@ class GraphBroadcastGuardSpec extends SparkSpec {
         assertEquiJoinsOnly(df, name)
         assert(df.collect().toSeq == base,
           s"$name must return identical rows in both join modes")
-      } finally spark.conf.unset(GraphMetricsQueries.StateBroadcastMaxKey)
+      } finally spark.conf.unset(Fixpoint.BroadcastMaxKey)
     }
 
   for (name <- guardedQueries)
