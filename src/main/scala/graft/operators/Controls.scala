@@ -3,6 +3,7 @@ package graft.operators
 import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.broadcast
 
 import graft.build.DerivedCache
 
@@ -115,8 +116,8 @@ private[operators] object Controls {
 
 /** Memoized scalar data properties keyed by (session, name, corpus,
   * mutation epoch) — the shared machinery behind every size probe that
-  * plans a query (the control gates above, the a03-pattern broadcast
-  * guards). Probes are data properties, so they must not re-run on every
+  * plans a query (the control gates above, the [[Guard]] ceilings
+  * below). Probes are data properties, so they must not re-run on every
   * timed rep; but the at-rest inputs are NOT immutable (the incremental
   * append paths grow them), so the corpus's [[DerivedCache.mutationEpoch]]
   * keys each entry and any append/replace forces a recompute. Entries for
@@ -152,4 +153,32 @@ private[operators] object EpochMemo {
       .foreach(memo.remove)
     memo.getOrElseUpdate((s, name, corpus, epoch), new Cell(() => compute)).value
   }
+}
+
+/** The one row ceiling behind every data-sized broadcast — graph state and
+  * loop frontiers, text term stats, dedup hash sets, a03's exploded grid,
+  * the ss9/ss15 query batch. Under the ceiling the operand broadcasts and
+  * the corpus-sized side never moves; above it the join degrades by one
+  * exchange and never fails at Spark's broadcast limit or in a driver OOM.
+  * The caller supplies the operand's row count, normally a memoized
+  * [[EpochMemo]] probe. One key, [[BroadcastMaxKey]], overrides every
+  * family's default `max` (sized per family by row width: 5 M narrow rows
+  * is low-hundreds of MB per build); 0 forces every fallback. */
+private[operators] object Guard {
+
+  val BroadcastMaxKey = "spark.graft.broadcastMaxRows"
+
+  def fits(s: SparkSession, rows: Long, max: Long = 5000000L): Boolean = {
+    val ceiling = s.conf.getOption(BroadcastMaxKey).fold(max) { v =>
+      v.toLongOption.filter(_ >= 0).getOrElse(throw new IllegalArgumentException(
+        s"$BroadcastMaxKey must be a non-negative row count, got '$v'"))
+    }
+    rows <= ceiling
+  }
+
+  /** Broadcast `df` when `rows` fits, else hint a shuffle hash join. A hint
+    * is needed in both modes: loop state is a checkpointed LogicalRDD with
+    * unknown stats, so unhinted it would sort-merge-join every round. */
+  def sized(df: DataFrame, rows: Long, max: Long = 5000000L): DataFrame =
+    if (fits(df.sparkSession, rows, max)) broadcast(df) else df.hint("shuffle_hash")
 }

@@ -367,25 +367,20 @@ object DedupQueries {
     // also being re-keyed on h (the probe is a memoized per-epoch scalar
     // off the at-rest index, the dayVertices discipline; above the
     // ceiling the join degrades to the v1 keyed shuffle, never fails)
-    val dupOp = guard match {
-      case Some((gs, gd)) =>
-        val max = gs.conf.getOption(DupHashBroadcastMaxKey)
-          .map(_.toLong).getOrElse(DupHashBroadcastMaxDefault)
-        val n = EpochMemo.scalar(gs, "dedup.dupWindowHashes", gd) {
-          windows(gs, gd).groupBy($"h").agg(count(lit(1)).as("c"))
-            .filter($"c" > 1).count()
-        }
-        if (n <= max) broadcast(dupH) else dupH.hint("shuffle_hash")
-      case None => dupH
+    val dupOp = guard.fold(dupH) { case (gs, gd) =>
+      Guard.sized(dupH, dupWindowHashes(gs, gd))
     }
     islandSpansOf(win.join(dupOp, "h").select($"doc_id", $"pos"))
   }
 
-  /** Broadcast ceiling for the duplicated/boilerplate window-hash sets
-    * (dd11/dd12/dd18) — 32-char hash rows, ~5 M ≈ 300 MB built; above it
-    * the hash-set join degrades to a keyed shuffle, never fails. */
-  val DupHashBroadcastMaxKey = "spark.graft.dedup.broadcastMaxHashes"
-  private val DupHashBroadcastMaxDefault = 5000000L
+  /** Distinct duplicated window hashes of the corpus — the memoized
+    * [[Guard]] probe for the duplicated/boilerplate hash-set joins
+    * (dd11/dd12/dd18; 32-char hash rows, ~5 M ≈ 300 MB built). */
+  private def dupWindowHashes(s: SparkSession, d: String): Long =
+    EpochMemo.scalar(s, "dedup.dupWindowHashes", d) {
+      windows(s, d).groupBy(col("h")).agg(count(lit(1)).as("c"))
+        .filter(col("c") > 1).count()
+    }
 
   /** The island merge alone, over an explicit (doc_id, pos) start set —
     * shared by [[spanRowsOf]] (corpus-duplicated windows) and dd18
@@ -501,16 +496,8 @@ object DedupQueries {
     val boilerH = win.join(docs.select($"doc_id", $"source"), "doc_id")
       .groupBy($"h").agg(countDistinct($"source").as("ns"))
       .filter($"ns" >= BoilerMinSources).select($"h")
-    val boilerOp = guard match {
-      case Some((gs, gd)) =>
-        val max = gs.conf.getOption(DupHashBroadcastMaxKey)
-          .map(_.toLong).getOrElse(DupHashBroadcastMaxDefault)
-        val n = EpochMemo.scalar(gs, "dedup.dupWindowHashes", gd) {
-          windows(gs, gd).groupBy($"h").agg(count(lit(1)).as("c"))
-            .filter($"c" > 1).count()
-        }
-        if (n <= max) broadcast(boilerH) else boilerH.hint("shuffle_hash")
-      case None => boilerH
+    val boilerOp = guard.fold(boilerH) { case (gs, gd) =>
+      Guard.sized(boilerH, dupWindowHashes(gs, gd))
     }
     val spans = islandSpansOf(win.join(boilerOp, "h").select($"doc_id", $"pos"))
     val cover = spans.groupBy($"doc_id").agg(sum($"span_len").as("boiler_tokens"))
@@ -866,16 +853,13 @@ object DedupQueries {
       expr("conv(substring(md5(cast(doc_id as string)), 1, 2), 16, 10)").cast("long") < 64
     val trainSg = sh.filter(!isEval).select($"sg").distinct()
     // round 14: the train-shingle set is distinct-shingle bounded —
-    // broadcast it under the hash-set ceiling (memoized per-epoch probe,
+    // broadcast it under the Guard ceiling (memoized per-epoch probe,
     // the dd11/dd18 discipline) so the eval rows stream straight into
     // their doc-keyed rollup; keyed shuffle-hash above the ceiling
-    val max = s.conf.getOption(DupHashBroadcastMaxKey)
-      .map(_.toLong).getOrElse(DupHashBroadcastMaxDefault)
     val nSg = EpochMemo.scalar(s, "dedup.distinctShingles", d) {
       sh.select($"sg").distinct().count()
     }
-    val trainOp = if (nSg <= max) broadcast(trainSg.withColumn("hit", lit(1L)))
-      else trainSg.withColumn("hit", lit(1L)).hint("shuffle_hash")
+    val trainOp = Guard.sized(trainSg.withColumn("hit", lit(1L)), nSg)
     sh.filter(isEval)
       .join(trainOp, Seq("sg"), "left")
       .groupBy($"doc_id")

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Shared driver for DataFrame fixpoint loops. Two entry points:
@@ -42,29 +42,12 @@ private[operators] object Fixpoint {
     * for the narrow ≤32-byte state rows of these loops). */
   private val RowsPerPartition = 100000L
 
-  /** Frontiers at or below this size (and the broadcast ceiling) skip the
+  /** Frontiers at or below this size (and the [[Guard]] ceiling) skip the
     * join: the (key → value) pairs fold into LITERALS — an `isin` pushed
     * into the edge scan (batch-stat pruning skips most of a CSR-sorted
     * index) plus a literal map lookup for the value. The driver-side
     * collect is bounded by this constant, not by the data. */
   private val FrontierLiteralMax = 512
-
-  /** Broadcast ceiling, in rows, for vertex-sized loop and state operands:
-    * under it the operand broadcasts and the edge side never moves; above
-    * it the operand is the build side of a keyed shuffle hash join, so the
-    * plan degrades by one exchange and never fails. ~5 M narrow rows is
-    * low-hundreds of MB per build. */
-  val BroadcastMaxKey = "spark.graft.graph.broadcastMaxVertices"
-
-  def broadcastCeiling(s: SparkSession): Long =
-    s.conf.getOption(BroadcastMaxKey).map(_.toLong).getOrElse(5000000L)
-
-  /** Broadcast `df` when `rows` ≤ ceiling, else hint a shuffle hash join. A
-    * hint is needed in both modes: loop state is a checkpointed LogicalRDD
-    * with unknown stats, so unhinted it would sort-merge-join every round. */
-  def sized(df: DataFrame, rows: Long): DataFrame =
-    if (rows <= broadcastCeiling(df.sparkSession)) broadcast(df)
-    else df.hint("shuffle_hash")
 
   def iterate(init: DataFrame, cap: Int, what: String)(
       signature: DataFrame => Seq[Long])(
@@ -141,7 +124,7 @@ private[operators] object Fixpoint {
     * empty frontier IS the fixpoint. The frontier join's plan is chosen per
     * round from the signature's counts (Pregelix's sparse-vs-dense message
     * join): literals up to min([[FrontierLiteralMax]], ceiling) frontier
-    * rows when the key is a single column, else [[sized]].
+    * rows when the key is a single column, else [[Guard.sized]].
     *
     * `hops` > 1 relaxes that many hops per round, halving (for 2) the fixed
     * per-round cost on long-diameter graphs while the candidate mass stays
@@ -171,7 +154,7 @@ private[operators] object Fixpoint {
             .withColumn(value, element_at(
               map(lits.flatMap(r => Seq(lit(r.get(0)), lit(r.get(1)))): _*), col("src")))
         } else {
-          edges.join(sized(renamed(fr, value), rows),
+          edges.join(Guard.sized(renamed(fr, value), rows),
             on(parts.zip(fk) :+ ("src" -> fk.last)))
         }
       joined.select(parts.map(col) :+ col("dst").as(keys.last) :+ transfer.as(value): _*)
@@ -188,13 +171,13 @@ private[operators] object Fixpoint {
       var fr = state.filter(col("imp")).select(kv: _*)
       var rows = sig(2)
       var literal = parts.isEmpty &&
-        rows <= math.min(FrontierLiteralMax, broadcastCeiling(state.sparkSession))
+        rows <= FrontierLiteralMax && Guard.fits(state.sparkSession, rows)
       // per-key minima of the first hops - 1 hops, snapshotted: each feeds
       // both the next hop and the merge, computed once
       val propagated = (1 until hops).map { _ =>
         val m = relax(fr, rows, literal).groupBy(keys.map(col): _*).agg(min(col(value)).as(value))
           .localCheckpoint(eager = false)
-        fr = m.join(sized(renamed(state, "_old"), sig(0)), on(keys.zip(fk)), "left")
+        fr = m.join(Guard.sized(renamed(state, "_old"), sig(0)), on(keys.zip(fk)), "left")
           .filter(col("_old").isNull || col(value) < col("_old"))
           .select(kv: _*)
         rows = sig(0)

@@ -179,12 +179,12 @@ object GraphMetricsQueries {
     }
 
   /** State-side join operand (k-core members, ranks, degrees, labels) sized
-    * by the probe-day vertex count ([[Fixpoint.sized]]): data-dependent, so
+    * by the probe-day vertex count ([[Guard.sized]]): data-dependent, so
     * the broadcast that keeps the edge set un-shuffled on a normal day must
     * degrade to a keyed shuffle join on a 100×-hotter day instead of
     * failing the job. */
   private[operators] def guarded(s: SparkSession, d: String, state: DataFrame): DataFrame =
-    Fixpoint.sized(state, dayVertices(s, d))
+    Guard.sized(state, dayVertices(s, d))
 
   private def c12(s: SparkSession, d: String): DataFrame = {
     import s.implicits._

@@ -28,18 +28,6 @@ object SessionQueries {
   /** Inactivity gap closing a session, seconds. */
   private val GapSec = 1800L
 
-  /** Max exploded distinct-range rows a03 may BROADCAST. Above this the
-    * plan degrades to a keyed shuffle equi-join on frame_id — one extra
-    * exchange, never a driver OOM or a job killed at Spark's broadcast
-    * limit. ~24 B/row (3 longs), so the default caps the broadcast near
-    * 100 MB. Override per session via [[A03BroadcastMaxRowsKey]]. */
-  val A03BroadcastMaxRowsKey = "spark.graft.a03.broadcastMaxRows"
-  private val A03BroadcastMaxRowsDefault = 4000000L
-
-  /** Exploded-grid row count per (session, corpus) — see a03's size probe. */
-  private val gridRowsMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Long]
-
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "a02_sessionize" -> a02,
     "a03_session_copresence" -> a03,
@@ -131,21 +119,17 @@ object SessionQueries {
     // map-side-combined agg over the at-rest session table at a cost ≪ the
     // join it plans — and picks: broadcast under the threshold, keyed
     // shuffle equi-join on frame_id above it (degraded by one exchange,
-    // never failed).
+    // never failed). Guard's default here is 4 M rows: ~24 B/row (3
+    // longs) caps the broadcast near 100 MB. Above it the grid stays
+    // unhinted and AQE sizes the join.
     val distinctRanges = sess.select($"f0", $"f1").distinct()
     val grid = distinctRanges
       .select($"f0", $"f1", explode(sequence($"f0", $"f1")).as("frame_id"))
-    val maxRows = s.conf.getOption(A03BroadcastMaxRowsKey)
-      .map(_.toLong).getOrElse(A03BroadcastMaxRowsDefault)
-    // memoized per (session, corpus): the at-rest session table is
-    // immutable, so the size probe is a data property — one scalar job per
-    // corpus, not one per query construction
-    gridRowsMemo.keys.filter(_._1.sparkContext.isStopped).foreach(gridRowsMemo.remove)
-    val nGridRows = gridRowsMemo.getOrElseUpdate((s, d),
-      distinctRanges.agg(coalesce(sum($"f1" - $"f0" + 1L), lit(0L))).head.getLong(0))
+    val nGridRows = EpochMemo.scalar(s, "a03.gridRows", d) {
+      distinctRanges.agg(coalesce(sum($"f1" - $"f0" + 1L), lit(0L))).head.getLong(0)
+    }
     val joined =
-      if (nGridRows <= maxRows) fa.join(broadcast(grid), "frame_id")
-      else fa.join(grid, "frame_id")
+      fa.join(if (Guard.fits(s, nGridRows, 4000000L)) broadcast(grid) else grid, "frame_id")
     val rangeCounts = joined
       .groupBy($"f0", $"f1")
       .agg(countDistinct($"actor_id").as("n_all"))

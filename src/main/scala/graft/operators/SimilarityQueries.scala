@@ -333,20 +333,32 @@ object SimilarityQueries {
   /** Neighbors returned per query vector in the ss9 kNN join. */
   private val KnnK = 3
 
-  /** Row ceiling for broadcasting the batch-signature side of ss9's
-    * compressed-domain scan (~280 B/row: id + [[RankPlanes]]-char sig).
-    * Above it the scan degrades to a partition-pair cartesian of the two
-    * narrow sig frames — more network, never a driver/executor OOM. */
-  val KnnBroadcastMaxRowsKey = "spark.graft.knn.broadcastMaxRows"
-  private val KnnBroadcastMaxRowsDefault = 2000000L
+  /** The two sides of the ss9/ss15 compressed-domain batch scan: the
+    * batch sigs (vec_id % 10 = 0, as (qid, qsig)) and the corpus sigs
+    * (as (nid, nsig)). The batch side broadcasts while its memoized row
+    * count fits the [[Guard]] ceiling (default 2 M rows, ~280 B/row: id +
+    * [[RankPlanes]]-char sig). Above it the batch stays unhinted and the
+    * scan degrades to a partition-pair cartesian of the two narrow sig
+    * frames — more network, never a driver/executor OOM. No shuffle_hash
+    * hint: the scan is a cross join, where Spark ignores one. */
+  private def batchScanSides(s: SparkSession, d: String,
+      idx: DataFrame): (DataFrame, DataFrame) = {
+    import s.implicits._
+    val qsig = idx.filter($"vec_id" % 10 === 0)
+      .select($"vec_id".as("qid"), $"sig".as("qsig"))
+    val csig = idx.filter($"vec_id" % 10 =!= 0)
+      .select($"vec_id".as("nid"), $"sig".as("nsig"))
+    val nBatch = EpochMemo.scalar(s, "ss9_batch_rows", d)(qsig.count())
+    (if (Guard.fits(s, nBatch, 2000000L)) broadcast(qsig) else qsig, csig)
+  }
 
   /** ss9: kNN JOIN — top-k ANN for a whole QUERY BATCH at once (the
     * deterministic synthetic batch vec_id % 10 = 0) against the corpus
     * side. Every ss1–ss8 query scores ONE probe; the shape a training
     * pipeline actually runs is millions of queries at a time. Per query
     * row, the plan is ss2's: a compressed-domain Hamming scan over the
-    * narrow sig columns (batch sigs broadcast under
-    * [[KnnBroadcastMaxRowsKey]], partition-pair cartesian above — result-
+    * narrow sig columns ([[batchScanSides]]: batch sigs broadcast under
+    * the [[Guard]] ceiling, partition-pair cartesian above — result-
     * identical, SimilarityGuardSpec), a per-query top-[[KnnPool]] window
     * over (ham, nid), then exact cosine ONLY on the pooled pairs and a
     * per-query top-k — never a float dot outside the pools, never a
@@ -363,16 +375,7 @@ object SimilarityQueries {
   private def ss9(s: SparkSession, d: String, pool: Int): DataFrame = {
     import s.implicits._
     val idx = index(s, d)
-    val qsig = idx.filter($"vec_id" % 10 === 0)
-      .select($"vec_id".as("qid"), $"sig".as("qsig"))
-    val csig = idx.filter($"vec_id" % 10 =!= 0)
-      .select($"vec_id".as("nid"), $"sig".as("nsig"))
-    val maxRows = s.conf.getOption(KnnBroadcastMaxRowsKey)
-      .map(_.toLong).getOrElse(KnnBroadcastMaxRowsDefault)
-    // the batch size is a data property — memoized per (session, corpus,
-    // mutation epoch) like every planning probe (the a03 guard pattern)
-    val nBatch = EpochMemo.scalar(s, "ss9_batch_rows", d)(qsig.count())
-    val qside = if (nBatch <= maxRows) broadcast(qsig) else qsig
+    val (qside, csig) = batchScanSides(s, d, idx)
     val pooled = csig.crossJoin(qside)
       .select($"qid", $"nid", hammingDist($"nsig", $"qsig").as("ham"))
       .withColumn("pn", row_number().over(
@@ -1127,10 +1130,10 @@ object SimilarityQueries {
     * (every within-[[RangeTau]] pair between the vec_id%10 batch and the
     * corpus side), completing the single-probe/batch symmetry the top-k
     * family already has (ss2 ↔ ss9). The shape is ss9's compressed-domain
-    * scan — batch sigs broadcast under [[KnnBroadcastMaxRowsKey]], the
-    * corpus side streamed — but admission is ss11's STATIC Hamming bound
-    * (a pure per-pair filter, derived at mean + 3.5 sd under the
-    * hyperplane collision model), so unlike the kNN join there is NO
+    * scan ([[batchScanSides]]) — batch sigs broadcast under the [[Guard]]
+    * ceiling, the corpus side streamed — but admission is ss11's STATIC
+    * Hamming bound (a pure per-pair filter, derived at mean + 3.5 sd under
+    * the hyperplane collision model), so unlike the kNN join there is NO
     * per-query window anywhere: the scan is fully pipelined, and the
     * float payload is fetched only for admitted pairs through plain
     * equi-joins that AQE sizes. Output cardinality is radius-dependent
@@ -1140,14 +1143,7 @@ object SimilarityQueries {
   private def ss15(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val idx = index(s, d)
-    val qsig = idx.filter($"vec_id" % 10 === 0)
-      .select($"vec_id".as("qid"), $"sig".as("qsig"))
-    val csig = idx.filter($"vec_id" % 10 =!= 0)
-      .select($"vec_id".as("nid"), $"sig".as("nsig"))
-    val maxRows = s.conf.getOption(KnnBroadcastMaxRowsKey)
-      .map(_.toLong).getOrElse(KnnBroadcastMaxRowsDefault)
-    val nBatch = EpochMemo.scalar(s, "ss9_batch_rows", d)(qsig.count())
-    val qside = if (nBatch <= maxRows) broadcast(qsig) else qsig
+    val (qside, csig) = batchScanSides(s, d, idx)
     val cand = csig.crossJoin(qside)
       .filter(hammingDist($"nsig", $"qsig") <= RangeHamMax)
       .select($"qid", $"nid")

@@ -207,22 +207,16 @@ object TextQueries {
 
   /** Term-stat join operand for posting-index joins (the
     * GraphMetricsQueries.guarded analog, round 14): term-keyed stats
-    * frames are VOCABULARY-bounded, so they broadcast under a ceiling —
-    * keeping the corpus-sized posting scan un-shuffled — and degrade to a
-    * keyed shuffle-hash join above it, never fail. The vocabulary probe
-    * is one memoized narrow count off the at-rest index (the
-    * dayVertices discipline: one scalar job per corpus mutation epoch,
-    * cost ≪ the join it plans). */
-  private[operators] val TermBroadcastMaxKey = "spark.graft.text.broadcastMaxTerms"
-  private val TermBroadcastMaxDefault = 5000000L
-  private def guardedTerms(s: SparkSession, d: String, stats: DataFrame): DataFrame = {
-    val max = s.conf.getOption(TermBroadcastMaxKey)
-      .map(_.toLong).getOrElse(TermBroadcastMaxDefault)
-    val vocab = EpochMemo.scalar(s, "text.vocab", d) {
+    * frames are VOCABULARY-bounded, so they broadcast under the [[Guard]]
+    * ceiling — keeping the corpus-sized posting scan un-shuffled — and
+    * degrade to a keyed shuffle-hash join above it, never fail. The
+    * vocabulary probe is one memoized narrow count off the at-rest index
+    * (the dayVertices discipline: one scalar job per corpus mutation
+    * epoch, cost ≪ the join it plans). */
+  private def guardedTerms(s: SparkSession, d: String, stats: DataFrame): DataFrame =
+    Guard.sized(stats, EpochMemo.scalar(s, "text.vocab", d) {
       postings(s, d).select(col("t")).distinct().count()
-    }
-    if (vocab <= max) broadcast(stats) else stats.hint("shuffle_hash")
-  }
+    })
 
   /** Incremental maintenance for the inverted index — `DedupQueries.
     * appendDocuments`'s fulltext sibling: derive posting rows for a NEW
@@ -783,17 +777,13 @@ object TextQueries {
       .localCheckpoint(eager = false)
     val corpus = dpc.groupBy($"w1", $"w2").agg(sum($"k").as("c_ab"))
     // round 14: the corpus-count table is bounded by the DISTINCT bigram
-    // vocabulary; broadcast under the term ceiling (total-token scalar as
+    // vocabulary; broadcast under the Guard ceiling (total-token scalar as
     // the cheap over-bound — distinct bigrams ≤ corpus tokens) keeps the
     // (doc, bigram) rows un-shuffled ahead of their doc-keyed rollup
-    val maxTerms = s.conf.getOption(TermBroadcastMaxKey)
-      .map(_.toLong).getOrElse(TermBroadcastMaxDefault)
     val bigramBound = EpochMemo.scalar(s, "text.bigramBound", d) {
       postings(s, d).agg(coalesce(sum($"tf"), lit(0L)).as("n")).head.getLong(0)
     }
-    val corpusOp = if (bigramBound <= maxTerms) broadcast(corpus)
-      else corpus.hint("shuffle_hash")
-    val per = dpc.join(corpusOp, Seq("w1", "w2"))
+    val per = dpc.join(Guard.sized(corpus, bigramBound), Seq("w1", "w2"))
       .groupBy($"doc_id").agg(
         sum($"k").as("n_bigrams"),
         sum(when($"c_ab" < LmMinCount, $"k").otherwise(0L)).as("n_oov"),

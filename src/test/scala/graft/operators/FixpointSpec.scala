@@ -83,8 +83,8 @@ class FixpointSpec extends SparkSpec {
   }
 
   private def withCeiling[T](n: Long)(body: => T): T = {
-    spark.conf.set(Fixpoint.BroadcastMaxKey, n.toString)
-    try body finally spark.conf.unset(Fixpoint.BroadcastMaxKey)
+    spark.conf.set(Guard.BroadcastMaxKey, n.toString)
+    try body finally spark.conf.unset(Guard.BroadcastMaxKey)
   }
 
   private val chain = (0L until 12L).map(i => (i, i + 1))

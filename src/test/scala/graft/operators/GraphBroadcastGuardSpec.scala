@@ -8,11 +8,12 @@ import graft.SparkSpec
 /** The per-vertex state tables the graph metrics join against the day-edge
   * list (k-core members, component labels, ranks, degrees) are sized by the
   * probe-day vertex count — data-dependent, so each broadcast sits behind
-  * the a03-style guard ([[Fixpoint.BroadcastMaxKey]]):
-  * broadcast under the ceiling, keyed shuffle join above it. This suite
-  * pins the OVER-threshold path for every query in the family: identical
-  * rows to the broadcast mode, no broadcast hint anywhere in the plan, and
-  * no nested-loop/cartesian degradation in either mode. */
+  * the one row ceiling ([[Guard.BroadcastMaxKey]]): broadcast under the
+  * ceiling, keyed shuffle join above it. The text term-stat and dedup
+  * hash-set joins share the same guard. This suite pins the
+  * OVER-threshold path for every query in those families: identical rows
+  * to the broadcast mode, no broadcast hint anywhere in the plan, and no
+  * nested-loop/cartesian degradation in either mode. */
 class GraphBroadcastGuardSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
@@ -26,6 +27,13 @@ class GraphBroadcastGuardSpec extends SparkSpec {
     * share the ceiling: at 0 every frontier plan is the shuffle join. */
   private val loopQueries =
     Seq("g01_temporal_reach", "g10_component_evolution", "dd6_dup_clusters")
+
+  /** Text and dedup queries whose vocabulary- or hash-set-sized joins sit
+    * under the same ceiling. */
+  private val corpusQueries =
+    Seq("tx9_tfidf_terms", "tx10_rarity_profile", "tx18_rake_phrases",
+      "tx19_lm_familiarity", "dd5_contamination", "dd11_dup_spans",
+      "dd12_dup_doc_filter", "dd18_boilerplate")
 
   private def run(name: String): DataFrame =
     graft.SparkEntry.queries(name)(spark, dir)
@@ -54,12 +62,12 @@ class GraphBroadcastGuardSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     val state = s.range(5).select($"id".as("actor_id"), $"id".as("label"))
-    spark.conf.set(Fixpoint.BroadcastMaxKey, "0")
+    spark.conf.set(Guard.BroadcastMaxKey, "0")
     try
       assert(shuffleHashHints(GraphMetricsQueries.guarded(s, dir, state)).nonEmpty,
         "over-ceiling guarded() must hint shuffle_hash — unhinted loop state " +
           "has unknown stats and would sort-merge-join every round")
-    finally spark.conf.unset(Fixpoint.BroadcastMaxKey)
+    finally spark.conf.unset(Guard.BroadcastMaxKey)
     val under = GraphMetricsQueries.guarded(s, dir, state)
     val bc = under.queryExecution.analyzed.collect {
       case h: ResolvedHint if h.hints.strategy.exists(
@@ -68,10 +76,25 @@ class GraphBroadcastGuardSpec extends SparkSpec {
     assert(bc.nonEmpty, "under-ceiling guarded() must broadcast")
   }
 
-  for (name <- guardedQueries ++ loopQueries)
-    test(s"$name over the vertex ceiling degrades to a keyed shuffle join, result-identical") {
+  test("a non-numeric or negative ceiling is rejected by name; 0 is legal") {
+    for (bad <- Seq("lots", "-1")) {
+      spark.conf.set(Guard.BroadcastMaxKey, bad)
+      try {
+        val e = intercept[IllegalArgumentException](Guard.fits(spark, 1L))
+        assert(e.getMessage.contains(Guard.BroadcastMaxKey) && e.getMessage.contains(bad),
+          e.getMessage)
+      } finally spark.conf.unset(Guard.BroadcastMaxKey)
+    }
+    spark.conf.set(Guard.BroadcastMaxKey, "0")
+    try assert(Guard.fits(spark, 0L) && !Guard.fits(spark, 1L))
+    finally spark.conf.unset(Guard.BroadcastMaxKey)
+  }
+
+  for (name <- guardedQueries ++ loopQueries ++ corpusQueries) {
+    val ceiling = if (corpusQueries.contains(name)) "broadcast" else "vertex"
+    test(s"$name over the $ceiling ceiling degrades to a keyed shuffle join, result-identical") {
       val base = run(name).collect().toSeq
-      spark.conf.set(Fixpoint.BroadcastMaxKey, "0")
+      spark.conf.set(Guard.BroadcastMaxKey, "0")
       try {
         val df = run(name)
         // the guard must swap the broadcast hint for a shuffle-keyed one —
@@ -95,8 +118,9 @@ class GraphBroadcastGuardSpec extends SparkSpec {
         assertEquiJoinsOnly(df, name)
         assert(df.collect().toSeq == base,
           s"$name must return identical rows in both join modes")
-      } finally spark.conf.unset(Fixpoint.BroadcastMaxKey)
+      } finally spark.conf.unset(Guard.BroadcastMaxKey)
     }
+  }
 
   for (name <- guardedQueries)
     test(s"$name under the vertex ceiling keeps equi-joins (broadcast mode)") {

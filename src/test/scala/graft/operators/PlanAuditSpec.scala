@@ -160,7 +160,7 @@ abstract class PlanAuditBase extends SparkSpec {
     val p = plan(SimilarityQueries.queries("ss9_knn_join")(spark, dir))
     // the batch×corpus product is the DECLARED compressed-domain scan —
     // but it must run over the narrow sig columns only (the broadcast side
-    // is the batch sigs, guarded by KnnBroadcastMaxRows), with every
+    // is the batch sigs, under the Guard ceiling), with every
     // embedding access behind the pooled equi-joins
     assert("""ReadSchema: struct<vec_id:bigint,sig:string>""".r.findFirstIn(p).isDefined,
       s"ss9's Hamming scan must read only (vec_id, sig):\n${p.take(1500)}")
@@ -196,7 +196,7 @@ abstract class PlanAuditBase extends SparkSpec {
   test("a03 over the broadcast threshold degrades to a keyed shuffle join, result-identical") {
     import org.apache.spark.sql.catalyst.plans.logical.ResolvedHint
     val base = SessionQueries.queries("a03_session_copresence")(spark, dir).collect().toSeq
-    spark.conf.set(SessionQueries.A03BroadcastMaxRowsKey, "0")
+    spark.conf.set(Guard.BroadcastMaxKey, "0")
     try {
       val df = SessionQueries.queries("a03_session_copresence")(spark, dir)
       // the guard must drop the broadcast HINT entirely (AQE may still pick
@@ -208,7 +208,7 @@ abstract class PlanAuditBase extends SparkSpec {
       assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
         s"degraded a03 must stay an equi-join:\n${p.take(1500)}")
       assert(df.collect().toSeq == base, "both modes must return identical rows")
-    } finally spark.conf.unset(SessionQueries.A03BroadcastMaxRowsKey)
+    } finally spark.conf.unset(Guard.BroadcastMaxKey)
   }
 
   test("c12 probe-day metrics read the at-rest day-edge table, not frame_interactions") {

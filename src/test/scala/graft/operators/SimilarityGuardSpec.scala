@@ -4,13 +4,12 @@ import org.apache.spark.sql.catalyst.plans.logical.ResolvedHint
 
 import graft.SparkSpec
 
-/** ss9's compressed-domain Hamming scan broadcasts its batch-signature
-  * side — data-proportional (corpus/10 here), so the broadcast sits behind
-  * the a03-style row-ceiling guard
-  * ([[SimilarityQueries.KnnBroadcastMaxRowsKey]]). Over the ceiling the
-  * scan degrades to a partition-pair cartesian of the two NARROW sig
-  * frames (id + sig only — more network, never a driver OOM), and the
-  * result must be identical in both modes. */
+/** ss9's and ss15's compressed-domain Hamming scans broadcast their
+  * batch-signature side — data-proportional (corpus/10 here), so the
+  * broadcast sits behind the row ceiling ([[Guard.BroadcastMaxKey]]). Over
+  * the ceiling each scan degrades to a partition-pair cartesian of the two
+  * NARROW sig frames (id + sig only — more network, never a driver OOM),
+  * and the result must be identical in both modes. */
 class SimilarityGuardSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
@@ -38,21 +37,24 @@ class SimilarityGuardSpec extends SparkSpec {
     } finally spark.conf.unset(SimilarityQueries.KnnPoolKey)
   }
 
-  test("ss9 over the batch ceiling drops the broadcast, result-identical") {
-    val run = SimilarityQueries.queries("ss9_knn_join")
-    val base = run(spark, dir).collect().toSeq
-    assert(base.nonEmpty)
-    spark.conf.set(SimilarityQueries.KnnBroadcastMaxRowsKey, "0")
-    try {
-      val df = run(spark, dir)
-      val broadcastHints = df.queryExecution.analyzed.collect {
-        case h: ResolvedHint if h.hints.strategy.exists(
-          _.toString.toLowerCase.contains("broadcast")) => h
-      }
-      assert(broadcastHints.isEmpty,
-        s"over-threshold ss9 must not force a broadcast: $broadcastHints")
-      assert(df.collect().toSeq == base,
-        "ss9 must return identical rows in both scan modes")
-    } finally spark.conf.unset(SimilarityQueries.KnnBroadcastMaxRowsKey)
+  for (name <- Seq("ss9_knn_join", "ss15_range_join")) {
+    val q = name.takeWhile(_ != '_')
+    test(s"$q over the batch ceiling drops the broadcast, result-identical") {
+      val run = SimilarityQueries.queries(name)
+      val base = run(spark, dir).collect().toSeq
+      assert(base.nonEmpty)
+      spark.conf.set(Guard.BroadcastMaxKey, "0")
+      try {
+        val df = run(spark, dir)
+        val broadcastHints = df.queryExecution.analyzed.collect {
+          case h: ResolvedHint if h.hints.strategy.exists(
+            _.toString.toLowerCase.contains("broadcast")) => h
+        }
+        assert(broadcastHints.isEmpty,
+          s"over-threshold $q must not force a broadcast: $broadcastHints")
+        assert(df.collect().toSeq == base,
+          s"$q must return identical rows in both scan modes")
+      } finally spark.conf.unset(Guard.BroadcastMaxKey)
+    }
   }
 }
