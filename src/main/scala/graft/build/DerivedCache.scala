@@ -6,6 +6,7 @@ import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /** Build-once, at-rest cache for derived index tables (LSH signatures,
   * shingle sets, minhash bands, …), sharing the [[GraphCache]] philosophy:
@@ -169,22 +170,34 @@ object DerivedCache {
     bumpEpoch(dir)
   }
 
+  /** PURGE the rows whose `key` is in `ids` (a one-column frame) — the
+    * delete path's staged anti-join filter-rewrite. The using-column join
+    * moves the key first; the stored column order is re-selected so the
+    * rewrite is layout-identical to a fresh build. */
+  def purge(spark: SparkSession, dir: String, t: (String, Int), ids: DataFrame,
+      key: String = "doc_id"): Unit = {
+    val cur = existing(spark, dir, t)
+    replace(spark, dir, t)(
+      cur.join(ids.toDF(key), Seq(key), "left_anti").select(cur.columns.map(col): _*))
+  }
+
+  /** Target file size of a compacted table. */
+  private val CompactTargetBytes = 128L * 1024 * 1024
+
   /** COMPACT an appended at-rest table: rewrite its many small files (one
     * parquet file group per daily append — the classic small-files
     * pathology of any long-lived append path) into size-targeted files.
     * Content-neutral by construction (a [[replace]] with a coalesced scan
-    * of the table itself); width = total bytes / `spark.graft.compact.
-    * targetBytes` (default 128 MB), so a compacted 100-TB index reads at
-    * full scan parallelism while a small one collapses to a single file.
-    * `coalesce`, never `repartition` — compaction must not pay a shuffle. */
+    * of the table itself); width = total bytes / [[CompactTargetBytes]],
+    * so a compacted 100-TB index reads at full scan parallelism while a
+    * small one collapses to a single file. `coalesce`, never
+    * `repartition` — compaction must not pay a shuffle. */
   def compact(spark: SparkSession, dir: String, name: String, version: Int): Unit = {
     val path = s"${baseDir(spark)}/${dirKey(dir)}/${name}_v$version"
     require(Files.exists(Paths.get(s"$path/_GRAFT_DONE")),
       s"compact target $name (v$version) is not built for $dir — build the base index first")
-    val target = spark.conf.getOption("spark.graft.compact.targetBytes")
-      .map(_.toLong).getOrElse(128L * 1024 * 1024)
     val bytes = parquetBytes(path)
-    val parts = math.max(1L, (bytes + target - 1) / target).toInt
+    val parts = math.max(1L, (bytes + CompactTargetBytes - 1) / CompactTargetBytes).toInt
     replace(spark, dir, name, version)(
       spark.read.parquet(path).coalesce(parts))
   }

@@ -3,6 +3,11 @@ package graft.build
 /** The (name, layout-version) identity of every INCREMENTALLY-MAINTAINED
   * at-rest table — one constant per table, shared by the builder, the
   * append/replace path, the batch entry points, the bench, and the specs.
+  * The per-document tables among them are declared once more, with their
+  * upstream and derivation, in the `graft.operators.DocIndex` registry,
+  * which derives their build, read, append, delete and compaction paths;
+  * the dup pair/cluster tables and the vector-side tables are maintained
+  * by hand-written steps.
   * Before this object each site carried its own literal pair, so a version
   * bump in the read path (the documented procedure for layout changes)
   * could leave the write path appending to the retired directory: the

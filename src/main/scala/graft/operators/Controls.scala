@@ -114,12 +114,13 @@ private[operators] object Controls {
   }
 }
 
-/** Memoized scalar data properties keyed by (session, name, corpus,
-  * mutation epoch) — the shared machinery behind every size probe that
-  * plans a query (the control gates above, the [[Guard]] ceilings
-  * below). Probes are data properties, so they must not re-run on every
-  * timed rep; but the at-rest inputs are NOT immutable (the incremental
-  * append paths grow them), so the corpus's [[DerivedCache.mutationEpoch]]
+/** Memoized data properties keyed by (session, name, corpus, mutation
+  * epoch) — the shared machinery behind every size probe that plans a
+  * query (the control gates above, the [[Guard]] ceilings below) and the
+  * collected probe rows folded into plans as literals. Probes are data
+  * properties, so they must not re-run on every timed rep; but the at-rest
+  * inputs are NOT immutable (the incremental append and delete paths
+  * change them), so the corpus's [[DerivedCache.mutationEpoch]]
   * keys each entry and any append/replace forces a recompute. Entries for
   * superseded epochs (and stopped sessions) are evicted on access, so a
   * long-lived ingest session holds at most one entry per (name, corpus).
@@ -133,25 +134,27 @@ private[operators] object Controls {
   * surface. */
 private[operators] object EpochMemo {
 
-  private final class Cell(@volatile private var compute: () => Long) {
+  private final class Cell[V](@volatile private var compute: () => V) {
     // release the thunk once forced: the closure can capture a DataFrame
-    // and its whole plan graph, dead weight next to the 8-byte result
-    lazy val value: Long = {
+    // and its whole plan graph, dead weight next to the small result
+    lazy val value: V = {
       val v = compute()
       compute = null
       v
     }
   }
 
-  private val memo = TrieMap.empty[(SparkSession, String, String, Long), Cell]
+  private val memo = TrieMap.empty[(SparkSession, String, String, Long), Cell[_]]
 
-  def scalar(s: SparkSession, name: String, corpus: String)(compute: => Long): Long = {
+  /** `name` must identify one value type. */
+  def scalar[V](s: SparkSession, name: String, corpus: String)(compute: => V): V = {
     memo.keys.filter(_._1.sparkContext.isStopped).foreach(memo.remove)
     val epoch = DerivedCache.mutationEpoch(corpus)
     memo.keys
       .filter(k => k._1 == s && k._2 == name && k._3 == corpus && k._4 != epoch)
       .foreach(memo.remove)
-    memo.getOrElseUpdate((s, name, corpus, epoch), new Cell(() => compute)).value
+    memo.getOrElseUpdate((s, name, corpus, epoch), new Cell(() => compute))
+      .asInstanceOf[Cell[V]].value
   }
 }
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.build.{DerivedCache, DocTables, Par}
+import graft.build.{DerivedCache, DocTables}
 import graft.functions.Fingerprint.fingerprintMd5
 import graft.sources.Tables
 
@@ -103,7 +103,7 @@ object DedupQueries {
   // cross-document state (shingle distinct, minhash min, band hash all
   // group on doc_id). That property is what makes incremental maintenance
   // exact: deriving the same function over an appended batch and appending
-  // the rows IS a full rebuild ([[appendDocuments]], IncrementalIndexSpec).
+  // the rows IS a full rebuild ([[DocIndex.append]], IncrementalIndexSpec).
 
   /** Distinct word-3-gram shingles (doc_id, sg) for a documents frame —
     * 1-based positions, mirroring the oracle's list indexing. */
@@ -191,92 +191,30 @@ object DedupQueries {
 
   /** At-rest positional window index (doc_id, pos, h) — see
     * [[windowRowsOf]]. */
-  private def windows(s: SparkSession, d: String): DataFrame =
-    DerivedCache.table(s, d, DocTables.Windows) {
-      windowRowsOf(Tables.documents(s, d))
-    }
-
-  /** Incremental index maintenance — the 100-TB ingest path: derive
-    * shingle / per-hash MinHash / LSH band rows for a batch of NEW
-    * documents and append them to the at-rest index tables, leaving the
-    * existing files untouched (a daily append must never re-shingle the
-    * corpus). Because every derivation is per-document, the appended state
-    * is EXACTLY what a full rebuild over base ∪ delta would produce
-    * (IncrementalIndexSpec proves set equality). Caller contract: `newDocs`
-    * doc_ids must not already be indexed — doc_id is the index key, and an
-    * existence anti-join per append is precisely the corpus-sized work this
-    * path exists to avoid. The pair graph and cluster table are maintained
-    * by [[appendDupClusters]]; dd7's df-ranked prefix index is maintained
-    * against its FROZEN df snapshot ([[appendPrefix]] — complete under
-    * stale ranks, re-ranked once corpus growth passes the configured
-    * threshold). */
-  def appendDocuments(s: SparkSession, d: String, newDocs: DataFrame): Unit = {
-    // persist the two intermediate stages for the duration of the call:
-    // the band append's lineage otherwise re-shingles and re-minhashes the
-    // batch (the most expensive derivations), tripling the ingest cost
-    val sh = shingleRowsOf(newDocs).persist()
-    val mh = minhashRowsOf(sh).persist()
-    try {
-      // the first two appends ALSO materialize the persisted sh/mh frames,
-      // so the parallel section below (§2.6) reads cached blocks instead of
-      // racing to re-derive them
-      DerivedCache.append(s, d, DocTables.Shingles)(sh)
-      DerivedCache.append(s, d, DocTables.Minhash)(mh)
-      Par.run(Seq(
-        () => DerivedCache.append(s, d, DocTables.Bands)(bandRowsOf(mh)),
-        () => DerivedCache.append(s, d, DocTables.Fingerprints)(fpRowsOf(newDocs)),
-        () => {
-          // chained, not parallel: appendPrefix's re-rank growth trigger
-          // counts the size table, so it must observe the completed append
-          DerivedCache.append(s, d, DocTables.Sizes)(sizeRowsOf(sh))
-          appendPrefix(s, d, sh)
-        },
-        () => DerivedCache.append(s, d, DocTables.Windows)(windowRowsOf(newDocs)),
-        () => if (DerivedCache.isBuilt(s, d, SimTable)) {
-          DerivedCache.append(s, d, SimTable)(simHashRowsOf(newDocs))
-          refreshSimStats(s, d)
-        }))
-    } finally {
-      mh.unpersist()
-      sh.unpersist()
-    }
-  }
+  private def windows(s: SparkSession, d: String): DataFrame = DocIndex.Windows.read(s, d)
 
   /** Shingle index, at rest ([[DerivedCache]]): derived once at ingest;
     * every near-dup query starts from the index scan instead of
     * re-tokenizing the corpus. */
   private[operators] def shingles(s: SparkSession, d: String): DataFrame =
-    DerivedCache.table(s, d, DocTables.Shingles) {
-      shingleRowsOf(Tables.documents(s, d))
-    }
+    DocIndex.Shingles.read(s, d)
 
   /** At-rest per-hash MinHash signatures (doc_id, i, mh) — the sketch the
     * band index derives from, kept queryable for estimate audits (dd8). */
-  private def docMinhash(s: SparkSession, d: String): DataFrame =
-    DerivedCache.table(s, d, DocTables.Minhash) {
-      minhashRowsOf(shingles(s, d))
-    }
+  private def docMinhash(s: SparkSession, d: String): DataFrame = DocIndex.Minhash.read(s, d)
 
   /** At-rest MinHash band index (doc_id, band, bh) — the LSH bucket table a
     * 100-TB dedup pipeline would persist next to the corpus. Identical
     * output to the pre-round-5 single-step build (the per-hash table is
     * materialized on the way, so no version bump). */
-  private def minhashBands(s: SparkSession, d: String): DataFrame =
-    DerivedCache.table(s, d, DocTables.Bands) {
-      bandRowsOf(docMinhash(s, d))
-    }
+  private def minhashBands(s: SparkSession, d: String): DataFrame = DocIndex.Bands.read(s, d)
 
   /** At-rest fingerprint index (doc_id, fp) — see [[fpRowsOf]]. */
   private[operators] def docFp(s: SparkSession, d: String): DataFrame =
-    DerivedCache.table(s, d, DocTables.Fingerprints) {
-      fpRowsOf(Tables.documents(s, d))
-    }
+    DocIndex.Fingerprints.read(s, d)
 
   /** At-rest shingle-count table (doc_id, n) — see [[sizeRowsOf]]. */
-  private def docSizes(s: SparkSession, d: String): DataFrame =
-    DerivedCache.table(s, d, DocTables.Sizes) {
-      sizeRowsOf(shingles(s, d))
-    }
+  private def docSizes(s: SparkSession, d: String): DataFrame = DocIndex.Sizes.read(s, d)
 
   /** dd1: exact duplicate detection — md5 over normalized text, canonical id
     * per cluster via window min. */
@@ -589,7 +527,7 @@ object DedupQueries {
   }
 
   /** dd9: ONLINE dedup — match an ingest batch against the ALREADY-INDEXED
-    * corpus: the query the incremental append path ([[appendDocuments]])
+    * corpus: the query the incremental append path ([[DocIndex.append]])
     * exists to serve. A daily batch appends its per-document index rows,
     * then probes the band index for batch×corpus candidates ONLY
     * (corpus×corpus pairs were resolved when THEIR day was ingested), and
@@ -758,8 +696,7 @@ object DedupQueries {
   /** At-rest SimHash index, built lazily from the corpus on first use (or
     * eagerly at ingest via [[Ingest.buildDocumentIndexes]]). */
   private[operators] def simHashes(s: SparkSession, d: String): DataFrame =
-    DerivedCache.table(s, d, SimTable)(
-      simHashRowsOf(Tables.documents(s, d)))
+    DocIndex.Sim.read(s, d)
 
   /** The single-band occupancy statistics row: m_single = Σ C(occ, 2)
     * over the (band, chunk) buckets (the exact pre-distinct candidate
@@ -774,7 +711,7 @@ object DedupQueries {
         coalesce(sum($"occ"), lit(0L)).as("n_band_rows"))
   }
 
-  private def refreshSimStats(s: SparkSession, d: String): Unit = {
+  private[operators] def refreshSimStats(s: SparkSession, d: String): Unit = {
     if (DerivedCache.isBuilt(s, d, SimStatsTable))
       DerivedCache.replace(s, d, SimStatsTable)(simStatsRowsOf(s, d))
     else buildSimStats(s, d)
@@ -1011,10 +948,7 @@ object DedupQueries {
     * [[providePairIndexIfSaturated]] at ingest when the corpus profile
     * already shows saturation), then maintained like every other
     * per-document index. */
-  private[graft] def docPairs(s: SparkSession, d: String): DataFrame =
-    DerivedCache.table(s, d, PairTable) {
-      pairRowsOf(shingles(s, d))
-    }
+  private[graft] def docPairs(s: SparkSession, d: String): DataFrame = DocIndex.Pairs.read(s, d)
 
   /** At-rest containment-prefix index (d1, sg) — an INDEX structure like
     * shingles/minhashBands: the df ranking and per-doc windows run once at
@@ -1082,19 +1016,37 @@ object DedupQueries {
     * triggers [[rerankPrefix]] to restore rarity-minimal prefixes. No-op
     * when the prefix family was never built: a later lazy build snapshots
     * base ∪ batch wholesale, so query results are batch-inclusive either
-    * way (the pre-round-7 lazy build made them timing-dependent). */
-  private def appendPrefix(s: SparkSession, d: String, batchShingles: DataFrame): Unit = {
-    import s.implicits._
-    if (DerivedCache.isBuilt(s, d, PairTable))
-      DerivedCache.append(s, d, PairTable)(pairRowsOf(batchShingles))
-    if (!DerivedCache.isBuilt(s, d, PrefixTable)) return
-    val dfFrozen = DerivedCache.existing(s, d, PrefixDfTable)
-    DerivedCache.append(s, d, PrefixTable)(prefixRowsOf(batchShingles, dfFrozen))
+    * way (the pre-round-7 lazy build made them timing-dependent). Runs
+    * after the batch's shingle and size appends. */
+  private[operators] def appendPrefix(s: SparkSession, d: String, batchShingles: DataFrame): Unit =
+    maintainPrefix(s, d, shrink = false) {
+      DerivedCache.append(s, d, PrefixTable)(
+        prefixRowsOf(batchShingles, DerivedCache.existing(s, d, PrefixDfTable)))
+    }
+
+  /** The delete mirror of [[appendPrefix]]: purge the deleted documents'
+    * prefix rows under the FROZEN ranks — correctness is rank-independent
+    * ([[prefixRowsOf]]): stale ranks cost join width, never a missed pair
+    * — and re-rank once the corpus SHRINKS past the same configured
+    * fraction growth re-ranks at. Runs after the shingle and size purges. */
+  private[operators] def deletePrefix(s: SparkSession, d: String, ids: DataFrame): Unit =
+    maintainPrefix(s, d, shrink = true) {
+      DerivedCache.purge(s, d, PrefixTable, ids, "d1")
+    }
+
+  /** `update` the prefix rows when the family is built, then re-rank if
+    * the size table has drifted past the configured fraction of the
+    * snapshot's corpus size, else refresh the stats row. */
+  private def maintainPrefix(s: SparkSession, d: String, shrink: Boolean)
+      (update: => Unit): Unit = if (DerivedCache.isBuilt(s, d, PrefixTable)) {
+    update
     val atRank = DerivedCache.existing(s, d, PrefixMetaTable).head.getLong(0)
     val now = docSizes(s, d).count()
     val growth = s.conf.getOption(PrefixRerankGrowthKey).map(_.toDouble)
       .getOrElse(PrefixRerankGrowthDefault)
-    if (now > atRank * (1.0 + growth)) rerankPrefix(s, d)
+    val drifted =
+      if (shrink) now < atRank * (1.0 - growth) else now > atRank * (1.0 + growth)
+    if (drifted) rerankPrefix(s, d)
     else refreshStats(s, d) // rerankPrefix refreshed already
   }
 
@@ -1406,7 +1358,7 @@ object DedupQueries {
   /** Incremental CLUSTER maintenance — the cross-document index the
     * round-6 append path deliberately left on periodic rebuild, now
     * maintained exactly under appends via graph CONTRACTION. On a batch
-    * ingest (call AFTER [[appendDocuments]], so the per-document indexes
+    * ingest (call AFTER [[DocIndex.append]], so the per-document indexes
     * include the batch; the cluster table must not yet):
     *
     *  1. verified pairs touching the batch only: batch bands probe the full
@@ -1500,57 +1452,6 @@ object DedupQueries {
       newPairs.unpersist()
       ()
     }
-  }
-
-  /** Delete previously-ingested documents from the per-document dedup
-    * indexes — the right-to-be-forgotten mirror of [[appendDocuments]].
-    * Each per-document table pays one staged filter-rewrite (anti-join on
-    * the id set — the compaction cost class: a columnar scan+filter+write,
-    * embarrassingly parallel, amortized by batching deletes exactly like
-    * appends). The df-ranked prefix family keeps its FROZEN ranks —
-    * correctness is rank-independent ([[prefixRowsOf]]): stale ranks cost
-    * join width, never a missed pair — and re-ranks once the corpus
-    * SHRINKS past the same configured fraction growth re-ranks at.
-    * Caller contract: ids were previously ingested. Pair/cluster repair is
-    * [[deleteDupClusters]] — call it AFTER this, so the recomputed region
-    * reads post-delete indexes (the append ordering, mirrored). */
-  def deleteDocuments(s: SparkSession, d: String, ids: DataFrame): Unit = {
-    import s.implicits._
-    val idSet = ids.select($"doc_id").distinct()
-    def purge(t: (String, Int), key: String = "doc_id"): Unit = {
-      val cur = DerivedCache.existing(s, d, t)
-      // the using-column join moves the key first; re-select the stored
-      // column order so the rewrite is layout-identical to a fresh build
-      DerivedCache.replace(s, d, t)(
-        cur.join(idSet.withColumnRenamed("doc_id", key), Seq(key), "left_anti")
-          .select(cur.columns.map(col): _*))
-    }
-    // §2.6: each purge is a staged replace of its own table's scan —
-    // disjoint tables overlap; the prefix family chains behind the shingle
-    // and size purges it reads (shrink trigger + possible re-rank)
-    Par.run(Seq(
-      () => purge(DocTables.Minhash),
-      () => purge(DocTables.Bands),
-      () => purge(DocTables.Fingerprints),
-      () => purge(DocTables.Windows),
-      () => if (DerivedCache.isBuilt(s, d, PairTable)) purge(PairTable),
-      () => {
-        purge(DocTables.Shingles)
-        purge(DocTables.Sizes)
-        if (DerivedCache.isBuilt(s, d, PrefixTable)) {
-          purge(PrefixTable, "d1")
-          val atRank = DerivedCache.existing(s, d, PrefixMetaTable).head.getLong(0)
-          val now = docSizes(s, d).count()
-          val growth = s.conf.getOption(PrefixRerankGrowthKey).map(_.toDouble)
-            .getOrElse(PrefixRerankGrowthDefault)
-          if (now < atRank * (1.0 - growth)) rerankPrefix(s, d)
-          else refreshStats(s, d) // rerankPrefix refreshed already
-        }
-      },
-      () => if (DerivedCache.isBuilt(s, d, SimTable)) {
-        purge(SimTable)
-        refreshSimStats(s, d)
-      }))
   }
 
   /** Pair/cluster maintenance under deletion — [[appendDupClusters]]'s

@@ -4,63 +4,31 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.build.{DerivedCache, DocTables, Par}
 
-/** The document-ingest entry points — ONE list of the at-rest document
-  * index tables, so the bench, the specs, and a library user can't drift
-  * on which tables a batch ingest maintains.
+/** The document-ingest entry points. The per-document indexes come from
+  * ONE declared list ([[DocIndex]]); this object adds the stateful
+  * families around them, so the bench, the specs, and a library user
+  * can't drift on which tables a batch ingest maintains.
   *
   *  - [[buildDocumentIndexes]]: day-0 (or periodic-rebuild) materialization
   *    of every per-document index plus the pair graph and cluster table,
   *    over an explicit documents frame under an explicit corpus key.
-  *  - [[appendDocumentBatch]]: the daily path — per-document index appends
-  *    (`DedupQueries.appendDocuments`, `TextQueries.appendDocuments`)
-  *    followed by the incremental pair-graph/cluster fold
-  *    (`DedupQueries.appendDupClusters`).
+  *  - [[appendDocumentBatch]]: the daily path — the registry's
+  *    per-document appends followed by the incremental pair-graph/cluster
+  *    fold (`DedupQueries.appendDupClusters`).
   */
 object Ingest {
 
   /** Build every at-rest document index over `docs` under corpus key `d`.
-    * Idempotent per table ([[DerivedCache.table]] markers). */
+    * Idempotent per table ([[DerivedCache.table]] markers). The pair graph,
+    * the prefix family and the packing offsets follow the per-document
+    * build: they read the band, fingerprint, shingle and size tables. */
   def buildDocumentIndexes(s: SparkSession, d: String, docs: DataFrame): Unit = {
     import s.implicits._
-    // Round 15 (guide §2.6 — overlap independent jobs): the table builds
-    // below are independent Spark jobs once their inputs exist; phased
-    // parallel submission preserves every original happens-before edge
-    // (sh → {mh → bd, sizes, prefix}; {bd, fp, sizes} → pairs → clusters;
-    // SimTable → sim stats) while letting the rest back-fill the scheduler.
-    val sh = DerivedCache.table(s, d, DocTables.Shingles)(
-      DedupQueries.shingleRowsOf(docs))
+    DocIndex.build(s, d, docs)
     Par.run(Seq(
       () => {
-        val mh = DerivedCache.table(s, d, DocTables.Minhash)(
-          DedupQueries.minhashRowsOf(sh))
-        DerivedCache.table(s, d, DocTables.Bands)(
-          DedupQueries.bandRowsOf(mh))
-        ()
-      },
-      () => { DerivedCache.table(s, d, DocTables.Fingerprints)(
-        DedupQueries.fpRowsOf(docs)); () },
-      () => { DerivedCache.table(s, d, DocTables.Sizes)(
-        DedupQueries.sizeRowsOf(sh)); () },
-      () => { DerivedCache.table(s, d, DocTables.Windows)(
-        DedupQueries.windowRowsOf(docs)); () },
-      () => { DerivedCache.table(s, d, DocTables.Postings)(
-        TextQueries.postingRowsOf(docs)); () },
-      () => { DerivedCache.table(s, d, DocTables.Cms)(
-        TextQueries.cmsRowsOf(docs)); () },
-      () => { DerivedCache.table(s, d, DocTables.MediaFp)(
-        MultimodalQueries.mediaFpRowsOf(docs)); () },
-      // the at-rest SimHash index + its stats meta (dd4's route constants)
-      () => { DerivedCache.table(s, d, DedupQueries.SimTable)(
-        DedupQueries.simHashRowsOf(docs)); () }))
-    val bd = DerivedCache.existing(s, d, DocTables.Bands)
-    val fp = DerivedCache.existing(s, d, DocTables.Fingerprints)
-    val sizes = DerivedCache.existing(s, d, DocTables.Sizes)
-    Par.run(Seq(
-      () => {
-        val pairs = DerivedCache.table(s, d, DocTables.DupPairs)(
-          DedupQueries.dupPairRowsOf(sh, bd, fp, Some(sizes)))
         DerivedCache.table(s, d, DocTables.DupClusters)(
-          DedupQueries.clusterRowsOf(docs.select($"doc_id"), pairs)
+          DedupQueries.clusterRowsOf(docs.select($"doc_id"), DedupQueries.dupPairs(s, d))
             .withColumnRenamed("label", "cluster_id"))
         ()
       },
@@ -81,20 +49,21 @@ object Ingest {
   }
 
   /** Fold a NEW document batch into every at-rest index — the daily ingest.
-    * Caller contract: batch doc_ids must not already be indexed. Ends with
-    * the compaction sweep ([[compactIfNeeded]]) so file counts are bounded
-    * by policy, not by how long the append cadence has been running. */
+    * Caller contract: batch doc_ids must not already be indexed. The
+    * prefix family follows the shingle and size appends (its re-rank
+    * trigger counts the size table), the SimHash stats follow the SimHash
+    * append, and the pair-graph/cluster fold follows every per-document
+    * append: it reads the batch rows back OUT of the band / shingle /
+    * fingerprint indexes. Ends with the compaction sweep
+    * ([[compactIfNeeded]]) so file counts are bounded by policy, not by
+    * how long the append cadence has been running. */
   def appendDocumentBatch(s: SparkSession, d: String, batch: DataFrame): Unit = {
-    // §2.6: the four per-document append families touch disjoint tables and
-    // derive only from `batch` — overlap them. The pair-graph/cluster fold
-    // stays a second phase: it reads the batch rows back OUT of the band /
-    // shingle / fingerprint indexes, so it must observe the completed
-    // appends (the original sequential ordering, kept as a barrier).
-    Par.run(Seq(
-      () => DedupQueries.appendDocuments(s, d, batch),
-      () => TextQueries.appendDocuments(s, d, batch),
-      () => MultimodalQueries.appendDocuments(s, d, batch),
-      () => PipelineQueries.appendOffsets(s, d, batch)))
+    DocIndex.append(s, d, batch,
+      alongside = Seq(() => PipelineQueries.appendOffsets(s, d, batch)),
+      after = {
+        case DocIndex.Sizes => batchShingles => DedupQueries.appendPrefix(s, d, batchShingles)
+        case DocIndex.Sim => _ => DedupQueries.refreshSimStats(s, d)
+      })
     DedupQueries.appendDupClusters(s, d, batch)
     compactIfNeeded(s, d)
     ()
@@ -103,10 +72,10 @@ object Ingest {
   /** Delete a batch of previously-ingested documents from every at-rest
     * document index — the right-to-be-forgotten path every large training
     * pipeline eventually runs (user opt-outs, licensing takedowns),
-    * mirroring [[appendDocumentBatch]]. Caller contract: the batch rows
-    * are the ORIGINAL ingested rows (doc_id + text) — the text is needed
-    * so per-document derivations (the CMS's negated partial cells) never
-    * re-read the corpus.
+    * mirroring [[appendDocumentBatch]] step for step. Caller contract: the
+    * batch rows are the ORIGINAL ingested rows (doc_id + text) — the text
+    * is needed so per-document derivations (the CMS's negated partial
+    * cells) never re-read the corpus.
     *
     * Cost model (deletes are BATCHED like appends): each per-document
     * table pays one staged filter-rewrite (the compaction cost class — a
@@ -120,40 +89,36 @@ object Ingest {
     * (prefix ranks, k-means centroids, BPE merges). */
   def deleteDocumentBatch(s: SparkSession, d: String, batch: DataFrame): Unit = {
     val ids = batch.select("doc_id")
-    // §2.6 like the append path: disjoint-table filter-rewrites overlap;
-    // cluster repair stays a second phase (its scaladoc contract: it must
-    // read the post-delete indexes)
-    Par.run(Seq(
-      () => DedupQueries.deleteDocuments(s, d, ids),
-      () => TextQueries.deleteDocuments(s, d, batch),
-      () => MultimodalQueries.deleteDocuments(s, d, ids),
-      () => PipelineQueries.deleteOffsets(s, d, ids)))
+    DocIndex.delete(s, d, batch,
+      alongside = Seq(() => PipelineQueries.deleteOffsets(s, d, ids)),
+      after = {
+        case DocIndex.Sizes => deleted => DedupQueries.deletePrefix(s, d, deleted)
+        case DocIndex.Sim => _ => DedupQueries.refreshSimStats(s, d)
+      })
     DedupQueries.deleteDupClusters(s, d, ids)
     compactIfNeeded(s, d)
     ()
   }
 
-  /** ONE list of every at-rest table the document-batch path maintains —
-    * the compaction sweep's worklist (replace-maintained tables are listed
-    * too: replace rewrites wholesale so they rarely trip the threshold,
-    * and listing them keeps the policy exhaustive by construction). */
-  private[graft] def maintainedDocTables: Seq[(String, Int)] = Seq(
-    DocTables.Shingles, DocTables.Minhash, DocTables.Bands,
-    DocTables.Fingerprints, DocTables.Sizes, DocTables.Windows,
-    DocTables.Postings, DocTables.Cms, DocTables.MediaFp,
-    DocTables.DupPairs, DocTables.DupClusters,
-    DedupQueries.PrefixTable, DedupQueries.PrefixDfTable,
-    DedupQueries.PrefixMetaTable, DedupQueries.PairTable,
-    DedupQueries.SimTable, DedupQueries.SimStatsTable,
-    DedupQueries.PrefixStatsTable,
-    PipelineQueries.OffsetsTable, PipelineQueries.OffsetsMetaTable)
+  /** Every at-rest table the document-batch path maintains — the
+    * compaction sweep's worklist: the registry's tables plus the stateful
+    * ones (replace-maintained tables are listed too: replace rewrites
+    * wholesale so they rarely trip the threshold, and listing them keeps
+    * the policy exhaustive by construction). */
+  private[graft] def maintainedDocTables: Seq[(String, Int)] =
+    DocIndex.all.map(_.id) ++ Seq(
+      DocTables.DupPairs, DocTables.DupClusters,
+      DedupQueries.PrefixTable, DedupQueries.PrefixDfTable,
+      DedupQueries.PrefixMetaTable, DedupQueries.SimStatsTable,
+      DedupQueries.PrefixStatsTable,
+      PipelineQueries.OffsetsTable, PipelineQueries.OffsetsMetaTable)
 
   /** Data-file ceiling per maintained table before the ingest path compacts
     * it. Each daily append adds one parquet file group per index, so a year
     * of dailies is ~365 small files — scan-task explosion and row-group
     * inefficiency. The default (64 ≈ two months of dailies) bounds both;
     * [[graft.build.DerivedCache.compact]] rewrites to size-targeted files
-    * (`spark.graft.compact.targetBytes`, 128 MB), so a compacted 100-TB
+    * (128 MB), so a compacted 100-TB
     * index still reads at full scan parallelism while a small one collapses
     * to a single row-group-efficient file. */
   val CompactMaxFilesKey = "spark.graft.compact.maxFiles"

@@ -4,10 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.build.{DerivedCache, DocTables}
 import graft.functions.Exact.{dsum, sqlSum}
 import graft.multimodal.MultimodalPipeline
-import graft.sources.Tables
 
 /** Declared, oracle-checked query over the multimodal pipeline (SURVEY.md §7
   * extensions; round-1 verdict item 9): the full asset → decode →
@@ -371,28 +369,7 @@ object MultimodalQueries {
     * so mm7/mm8's candidate joins scan 26-byte rows and never re-decode a
     * raster or PCM stream at query time. */
   private[operators] def mediaFp(s: SparkSession, d: String): DataFrame =
-    DerivedCache.table(s, d, DocTables.MediaFp)(
-      mediaFpRowsOf(Tables.documents(s, d)))
-
-  /** Incremental maintenance — the media sibling of `TextQueries.
-    * appendDocuments`: fingerprint the NEW batch only and file-append
-    * (per-document rows, so append == rebuild by construction; proven
-    * table-for-table with the rest of the family in DeletionSpec /
-    * StreamingDocumentIngestSpec sweeps). */
-  def appendDocuments(s: SparkSession, d: String, newDocs: DataFrame): Unit = {
-    DerivedCache.append(s, d, DocTables.MediaFp)(mediaFpRowsOf(newDocs))
-    ()
-  }
-
-  /** Deletion mirror — staged anti-join filter-rewrite, the per-document
-    * table treatment (`DedupQueries.deleteDocuments`'s purge shape). */
-  def deleteDocuments(s: SparkSession, d: String, ids: DataFrame): Unit = {
-    val idSet = ids.select(col("doc_id")).distinct()
-    val cur = DerivedCache.existing(s, d, DocTables.MediaFp)
-    DerivedCache.replace(s, d, DocTables.MediaFp)(
-      cur.join(idSet, Seq("doc_id"), "left_anti")
-        .select(cur.columns.map(col): _*))
-  }
+    DocIndex.MediaFp.read(s, d)
 
   /** Force at-rest fingerprint materialization (untimed in Bench). */
   def warm(s: SparkSession, d: String): Unit = {

@@ -695,11 +695,9 @@ object PipelineQueries {
   private val SelBuckets = 4096L
 
   /** p11's level-3 subdivision width: doc_ids per sub-bucket within a
-    * constant-quality run (session-tunable like [[PackBucketKey]] — C
-    * trades the per-run ordered-pass row count, docRange/C, against the
-    * row-level window partition size). */
-  val SelSubBucketKey = "spark.graft.select.subbucket"
-  private val SelSubBucketDefault = 4096L
+    * constant-quality run (C trades the per-run ordered-pass row count,
+    * docRange/C, against the row-level window partition size). */
+  private val SelSubBucket = 4096L
 
   /** p11: token-BUDGET data selection — the greedy "take the best
     * documents until the token budget is spent" step every
@@ -752,12 +750,11 @@ object PipelineQueries {
       when(nTok > 0, nStop / nTok).otherwise(lit(0.0)),
       when(nChars > 0, nPunct / nChars).otherwise(lit(0.0)))
     val n = s.conf.get("spark.sql.shuffle.partitions").toInt
-    val c = s.conf.getOption(SelSubBucketKey).map(_.toLong).getOrElse(SelSubBucketDefault)
     val scored = Tables.documentsWide(s, d)
       .select($"doc_id", quality.as("quality"),
         size(toks).cast("long").as("n_tokens"))
       .withColumn("qb", floor($"quality" * SelBuckets).cast("long"))
-      .withColumn("sb", expr(s"doc_id div $c"))
+      .withColumn("sb", expr(s"doc_id div $SelSubBucket"))
       .localCheckpoint(eager = false)
     // level-3 cell sums: one map-side agg on the full nested key
     val ssums = scored.groupBy($"qb", $"quality", $"sb")

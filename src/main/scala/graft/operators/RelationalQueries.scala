@@ -357,9 +357,9 @@ object RelationalQueries {
   /** Bloom blob sizing for q20 — plan-time constants, so the collected blob
     * is `bits/8` bytes REGARDLESS of input rows. A production caller sizes
     * these from table stats (items ≈ expected dim keys, bits ≈ 10× items
-    * for ~1% fpp); session confs so the knob exists without a code edit. */
-  private val BloomItemsKey = "spark.graft.bloom.items"
-  private val BloomBitsKey = "spark.graft.bloom.bits"
+    * for ~1% fpp). */
+  private val BloomItems = 100000L
+  private val BloomBits = 1L << 20
 
   /** q20: bloom-pruned semi-join — the EXPLICIT runtime-filter layout for
     * the fact×selective-dim shape at 100 TB. Spark's own
@@ -379,13 +379,11 @@ object RelationalQueries {
     * and measures the prune actually dropping rows. */
   private def q20(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val est = s.conf.getOption(BloomItemsKey).map(_.toLong).getOrElse(100000L)
-    val bits = s.conf.getOption(BloomBitsKey).map(_.toLong).getOrElse(1L << 20)
     val dim = Tables.orders(s, d)
       .filter($"o_orderpriority" === "1-URGENT")
       .select($"o_orderkey")
     val bloom = dim
-      .agg(graft.functions.Bloom.bloomAgg($"o_orderkey", est, bits).as("bf"))
+      .agg(graft.functions.Bloom.bloomAgg($"o_orderkey", BloomItems, BloomBits).as("bf"))
       .head.getAs[Array[Byte]](0)
     Tables.lineitem(s, d)
       .filter(graft.functions.Bloom.mightContain(bloom, $"l_orderkey"))

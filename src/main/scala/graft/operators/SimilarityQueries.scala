@@ -231,17 +231,14 @@ object SimilarityQueries {
         expr(s"substring(sig, band * $BandWidth + 1, $BandWidth)").as("bkey"))
 
   /** Collected probe row (min vec_id: id, embedding, nsq, sig), memoized per
-    * (session, corpus) — one tiny index lookup shared by ss2/ss4. */
-  private val probeMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), org.apache.spark.sql.Row]
-  private def probeRow(s: SparkSession, d: String): org.apache.spark.sql.Row = {
-    probeMemo.keys.filter(_._1.sparkContext.isStopped).foreach(probeMemo.remove)
-    probeMemo.getOrElseUpdate((s, d), {
-      import s.implicits._
-      index(s, d).orderBy($"vec_id").limit(1)
-        .select($"vec_id", $"embedding", $"nsq", $"sig").collect()(0)
-    })
-  }
+    * (session, corpus, mutation epoch) — one tiny index lookup shared by
+    * ss2/ss4 and the other probe readers, re-run after a delete removes
+    * the probe vector. */
+  private def probeRow(s: SparkSession, d: String): org.apache.spark.sql.Row =
+    EpochMemo.scalar(s, "ss.probeRow", d) {
+      index(s, d).orderBy(col("vec_id")).limit(1)
+        .select(col("vec_id"), col("embedding"), col("nsq"), col("sig")).collect()(0)
+    }
 
   /** ss2: ANN top-k — Hamming-ranked candidate pool + exact rerank. Stage 1
     * scans only the narrow (vec_id, sig) columns of the at-rest index and
@@ -487,7 +484,7 @@ object SimilarityQueries {
   }
 
   /** Incremental embedding-index maintenance — the vector-side analog of
-    * `DedupQueries.appendDocuments`: derive the per-vector LSH index rows,
+    * `DocIndex.append`: derive the per-vector LSH index rows,
     * int8 SQ codes, and IVF cell assignments for a batch of NEW vectors and
     * append them to the at-rest tables ([[graft.build.DerivedCache.append]]).
     * LSH/SQ rows are per-vector, so incremental == full rebuild
@@ -641,12 +638,8 @@ object SimilarityQueries {
     val anchorHit = DerivedCache.existing(s, d, DocTables.EmbIndex)
       .orderBy($"vec_id").limit(math.max(nc, PqKs))
       .join(idSet, "vec_id").count() > 0
-    def purge(t: (String, Int)): Unit = if (DerivedCache.isBuilt(s, d, t)) {
-      val cur = DerivedCache.existing(s, d, t)
-      DerivedCache.replace(s, d, t)(
-        cur.join(idSet, Seq("vec_id"), "left_anti")
-          .select(cur.columns.map(col): _*))
-    }
+    def purge(t: (String, Int)): Unit =
+      if (DerivedCache.isBuilt(s, d, t)) DerivedCache.purge(s, d, t, idSet, "vec_id")
     // §2.6: each purge is a staged replace of its own table's scan —
     // disjoint tables, overlap them; the anchor branch below reads the
     // post-purge EmbIndex, so it stays behind the barrier

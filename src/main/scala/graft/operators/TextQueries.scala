@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.build.{DerivedCache, DocTables, Par}
 import graft.functions.Fingerprint.fingerprintMd5
 import graft.sources.Tables
 
@@ -190,7 +189,7 @@ object TextQueries {
     * reference's Lucene `actors_<run>` index (`load_gexf_to_neo4j.py:148`,
     * dropped by SURVEY §1.3 because nothing queried it; tx6 gives the
     * capability a real, tested analog). Built once at ingest like every
-    * other [[DerivedCache]] table; at 100 TB the posting list is the
+    * other [[graft.build.DerivedCache]] table; at 100 TB the posting list is the
     * standard token-bucketed layout search engines shard on.
     *
     * INVARIANT (load-bearing since round 14): rows are UNIQUE per
@@ -201,9 +200,7 @@ object TextQueries {
     * as a plain COUNT with map-side partials instead of countDistinct's
     * two-phase distinct shuffle of the whole index (guide §2.3). */
   private[operators] def postings(s: SparkSession, d: String): DataFrame =
-    DerivedCache.table(s, d, DocTables.Postings) {
-      postingRowsOf(Tables.documents(s, d))
-    }
+    DocIndex.Postings.read(s, d)
 
   /** Term-stat join operand for posting-index joins (the
     * GraphMetricsQueries.guarded analog, round 14): term-keyed stats
@@ -217,44 +214,6 @@ object TextQueries {
     Guard.sized(stats, EpochMemo.scalar(s, "text.vocab", d) {
       postings(s, d).select(col("t")).distinct().count()
     })
-
-  /** Incremental maintenance for the inverted index — `DedupQueries.
-    * appendDocuments`'s fulltext sibling: derive posting rows for a NEW
-    * document batch only and file-append them (same caller contract: batch
-    * doc_ids must not already be indexed). The daily ingest never
-    * re-tokenizes the corpus. */
-  def appendDocuments(s: SparkSession, d: String, newDocs: DataFrame): Unit = {
-    // §2.6: two independent single-table appends — overlap them
-    Par.run(Seq(
-      () => DerivedCache.append(s, d, DocTables.Postings)(postingRowsOf(newDocs)),
-      // the CMS is a MERGEABLE sketch: the batch's partial cells simply
-      // file-append, and reads fold by summation ([[cmsCells]]) — no
-      // read-modify-write, the cheapest maintained table in the set
-      () => DerivedCache.append(s, d, DocTables.Cms)(cmsRowsOf(newDocs))))
-  }
-
-  /** Delete previously-ingested documents from the text indexes —
-    * [[appendDocuments]]'s right-to-be-forgotten mirror. The posting index
-    * pays one staged filter-rewrite; the CMS cells need NO rewrite at all:
-    * the sketch is LINEAR, so deletion appends the batch's NEGATED partial
-    * cells and the read-side fold cancels them exactly ([[cmsCells]] drops
-    * fully-cancelled cells, so the folded sketch equals a rebuild over the
-    * remaining corpus). Needs the original rows (doc_id + text) so the
-    * negative partials derive without re-reading the corpus — the same
-    * per-document-derivation contract the append side carries. */
-  def deleteDocuments(s: SparkSession, d: String, batch: DataFrame): Unit = {
-    import s.implicits._
-    val ids = batch.select($"doc_id").distinct()
-    // §2.6: the posting rewrite and the CMS negative partial are
-    // independent — overlap them
-    Par.run(Seq(
-      () => DerivedCache.replace(s, d, DocTables.Postings)(
-        DerivedCache.existing(s, d, DocTables.Postings)
-          .join(ids, Seq("doc_id"), "left_anti")
-          .select($"t", $"doc_id", $"tf")),
-      () => DerivedCache.append(s, d, DocTables.Cms)(
-        cmsRowsOf(batch).withColumn("cnt", -$"cnt"))))
-  }
 
   /** tx6: fulltext AND-search over the inverted index. The probe is
     * data-derived like every graph probe: the two highest-document-frequency
@@ -518,16 +477,14 @@ object TextQueries {
     * and zero are the same cell state, and dropping them keeps the folded
     * sketch identical to a rebuild over the remaining corpus. */
   private[operators] def cmsCells(s: SparkSession, d: String): DataFrame =
-    DerivedCache.table(s, d, DocTables.Cms) {
-      cmsRowsOf(Tables.documents(s, d))
-    }.groupBy("r", "c").agg(sum("cnt").as("cnt"))
+    DocIndex.Cms.read(s, d).groupBy("r", "c").agg(sum("cnt").as("cnt"))
       .filter(col("cnt") =!= 0L)
 
   /** tx14: count-min-sketch heavy hitters — the point-query sketch
     * completing the repo's sketch trio (KMV cardinality p02, bloom
     * membership q20, CMS frequency). The sketch is an at-rest MAINTAINED
     * table ([[cmsRowsOf]], appended as batch partials by
-    * [[appendDocuments]] and folded at read by [[cmsCells]]); the exact
+    * [[DocIndex.append]] and folded at read by [[cmsCells]]); the exact
     * top-[[CmsTopK]] pass exists to make the estimate's one-sided error a
     * measured column (`overcount` ≥ 0 — the dd8 estimate-vs-exact
     * discipline), not because the sketch needs it. Deterministic md5 row

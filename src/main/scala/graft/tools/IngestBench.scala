@@ -8,10 +8,11 @@ import graft.sources.Tables
 
 /** Measures the incremental-ingest claim instead of asserting it: fold a
   * FIXED-SIZE daily batch into the at-rest document indexes
-  * (`appendDocuments` ×2 + `appendDupClusters`) at each scale factor, next
-  * to the cost of rebuilding every index from scratch over the same final
-  * corpus. The correctness side is proven (IncrementalIndexSpec /
-  * IncrementalClusterSpec — append == full rebuild); this reports the
+  * (`Ingest.appendDocumentBatch`: the registry append + `appendDupClusters`)
+  * at each scale factor, next to the cost of rebuilding every index from
+  * scratch over the same final corpus. The correctness side is proven
+  * (IncrementalIndexSpec / IncrementalClusterSpec — append == full
+  * rebuild); this reports the
   * GROWTH: as the corpus scales 100× under a constant batch, the full
   * rebuild must track the corpus while the append path tracks the day
   * (plus a linear pass over the narrow cluster state — the documented

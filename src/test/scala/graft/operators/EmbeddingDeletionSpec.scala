@@ -46,6 +46,26 @@ class EmbeddingDeletionSpec extends SparkSpec {
     }
   }
 
+  test("ss2 after an anchor delete == ss2 on a fresh build") {
+    // ss2 probes the lowest vec_id; once a delete removes it, the memoized
+    // probe row must follow the mutation, not keep probing a deleted vector
+    val deleted = Set(allIds.head)
+    val batch = emb.filter($"vec_id".isInCollection(deleted)).select($"vec_id")
+    val remaining = emb.filter(!$"vec_id".isInCollection(deleted))
+    def ss2(d: String): Seq[String] =
+      rows(SimilarityQueries.queries("ss2_lsh_topk")(spark, d))
+
+    val dDel = s"/emb-del-probe/${java.util.UUID.randomUUID()}"
+    val dRef = s"/emb-del-probe-ref/${java.util.UUID.randomUUID()}"
+    SimilarityQueries.buildEmbeddingIndexes(spark, dDel, emb)
+    val before = ss2(dDel)
+    SimilarityQueries.deleteEmbeddings(spark, dDel, batch)
+    SimilarityQueries.buildEmbeddingIndexes(spark, dRef, remaining)
+    val after = ss2(dDel)
+    assert(after == ss2(dRef), "ss2 after the delete must equal ss2 on the fresh build")
+    assert(after != before, "deleting the probe vector must change ss2's answer")
+  }
+
   test("non-anchor delete: purge alone reproduces the fresh build") {
     val nc = SimilarityQueries.DefaultCells
     // ids strictly above every anchor: the derived quantizers are

@@ -7,7 +7,7 @@ import graft.build.{DerivedCache, DocTables}
 import graft.sources.Tables
 
 /** Incremental index maintenance: appending the per-document derivations of
-  * a document delta to the at-rest shingle / minhash / band tables must
+  * a document delta to every declared at-rest table ([[DocIndex]]) must
   * equal a full rebuild over base ∪ delta — the property that lets a 100-TB
   * pipeline ingest a daily append without re-shingling the corpus. */
 class IncrementalIndexSpec extends SparkSpec {
@@ -20,78 +20,66 @@ class IncrementalIndexSpec extends SparkSpec {
   private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
 
-  test("appendDocuments == full rebuild for shingle/minhash/band indexes") {
-    val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-      .select($"doc_id", $"text")
+  private val message = Map(
+    DocIndex.Shingles -> "appended shingle index must equal the full rebuild",
+    DocIndex.Minhash -> "appended minhash index must equal the full rebuild",
+    DocIndex.Bands -> "appended band index must equal the full rebuild",
+    DocIndex.Fingerprints -> "appended fingerprint index must equal the full rebuild",
+    DocIndex.Sizes -> "appended size table must equal the full rebuild",
+    DocIndex.Windows -> "appended positional window index must equal the full rebuild",
+    DocIndex.Postings -> "appended posting index must equal the full rebuild",
+    DocIndex.Cms -> "folded appended CMS cells must equal the single-pass rebuild",
+    DocIndex.MediaFp -> "appended media fingerprint table must equal the full rebuild",
+    DocIndex.Sim -> "appended SimHash index must equal the full rebuild",
+    DocIndex.Pairs -> "appended shingle-pair index must equal the full rebuild")
+
+  private lazy val docs = Tables.documents(spark, "/root/testdata/sf0.001")
+    .select($"doc_id", $"text")
+
+  // ingest day 0 builds every at-rest index over the BASE corpus only (plus
+  // the on-demand pair index, so the append maintains every table); ingest
+  // day 1 appends the derivations of the delta docs ONLY. Done once, shared
+  // by the checks below.
+  private lazy val appended: Unit = {
     val base = docs.filter($"doc_id" % 3 =!= 0)
     val delta = docs.filter($"doc_id" % 3 === 0)
     assert(base.count() > 0 && delta.count() > 0, "split must be non-trivial")
+    DocIndex.build(spark, d, base)
+    DocIndex.Pairs.read(spark, d)
+    DocIndex.append(spark, d, delta)
+  }
 
-    // ingest day 0: build the at-rest indexes over the BASE corpus only
-    val sh0 = DerivedCache.table(spark, d, DocTables.Shingles)(
-      DedupQueries.shingleRowsOf(base))
-    val mh0 = DerivedCache.table(spark, d, DocTables.Minhash)(
-      DedupQueries.minhashRowsOf(sh0))
-    DerivedCache.table(spark, d, DocTables.Bands)(
-      DedupQueries.bandRowsOf(mh0))
-    DerivedCache.table(spark, d, DocTables.Fingerprints)(
-      DedupQueries.fpRowsOf(base))
-    DerivedCache.table(spark, d, DocTables.Sizes)(
-      DedupQueries.sizeRowsOf(sh0))
-    DerivedCache.table(spark, d, DocTables.Windows)(
-      DedupQueries.windowRowsOf(base))
+  private val textTables = Seq(DocIndex.Postings, DocIndex.Cms)
 
-    // ingest day 1: the delta appends — derivation over delta docs ONLY
-    DedupQueries.appendDocuments(spark, d, delta)
+  /** Each table read back through the cache with a poisoned build closure —
+    * it must be served from the appended files, never rebuilt — equals its
+    * derivation over base ∪ delta. */
+  private def assertAppendedEqualsRebuild(tables: Seq[DocIndex]): Unit = {
+    appended
+    for (t <- tables) {
+      val atRest = DerivedCache.table(spark, d, t.id)(
+        sys.error(s"${t.id._1} must come from the at-rest files, not a rebuild"))
+      // the CMS table holds batch PARTIALS: equality to a rebuild is the
+      // mergeable-sketch property, and holds only after the read-side fold
+      val got =
+        if (t == DocIndex.Cms)
+          atRest.groupBy("r", "c").agg(org.apache.spark.sql.functions.sum("cnt").as("cnt"))
+        else atRest
+      assert(rows(got) == rows(t.derive(docs)), message(t))
+    }
+  }
 
-    // read back through the cache with a poisoned build closure: the tables
-    // must be served from the appended files, never rebuilt
-    def readBack(name: String): DataFrame =
-      DerivedCache.table(spark, d, name, 1)(
-        sys.error(s"$name must come from the at-rest files, not a rebuild"))
-
-    val fullSh = DedupQueries.shingleRowsOf(docs)
-    val fullMh = DedupQueries.minhashRowsOf(fullSh)
-    assert(rows(readBack("doc_shingles")) == rows(fullSh),
-      "appended shingle index must equal the full rebuild")
-    assert(rows(readBack("doc_minhash")) == rows(fullMh),
-      "appended minhash index must equal the full rebuild")
-    assert(rows(readBack("doc_mh_bands")) == rows(DedupQueries.bandRowsOf(fullMh)),
-      "appended band index must equal the full rebuild")
-    assert(rows(readBack("doc_fp")) == rows(DedupQueries.fpRowsOf(docs)),
-      "appended fingerprint index must equal the full rebuild")
-    assert(rows(readBack("doc_sizes")) == rows(DedupQueries.sizeRowsOf(fullSh)),
-      "appended size table must equal the full rebuild")
-    assert(rows(readBack("doc_windows")) == rows(DedupQueries.windowRowsOf(docs)),
-      "appended positional window index must equal the full rebuild")
+  test("appendDocuments == full rebuild for shingle/minhash/band indexes") {
+    assert(message.keySet == DocIndex.all.toSet)
+    assertAppendedEqualsRebuild(DocIndex.all.filterNot(textTables.contains))
   }
 
   test("TextQueries.appendDocuments == full rebuild for the posting index") {
-    val dd = s"/incremental-postings/${java.util.UUID.randomUUID()}"
-    val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-      .select($"doc_id", $"text")
-    val base = docs.filter($"doc_id" % 3 =!= 0)
-    val delta = docs.filter($"doc_id" % 3 === 0)
-
-    DerivedCache.table(spark, dd, DocTables.Postings)(
-      TextQueries.postingRowsOf(base))
-    DerivedCache.table(spark, dd, DocTables.Cms)(
-      TextQueries.cmsRowsOf(base))
-    TextQueries.appendDocuments(spark, dd, delta)
-
-    assert(rows(DerivedCache.existing(spark, dd, DocTables.Postings))
-        == rows(TextQueries.postingRowsOf(docs)),
-      "appended posting index must equal the full rebuild")
-    // the CMS table holds batch PARTIALS: equality to a rebuild is the
-    // mergeable-sketch property, and holds only after the read-side fold
-    val folded = DerivedCache.existing(spark, dd, DocTables.Cms)
-      .groupBy("r", "c").agg(org.apache.spark.sql.functions.sum("cnt").as("cnt"))
-    assert(rows(folded) == rows(TextQueries.cmsRowsOf(docs)),
-      "folded appended CMS cells must equal the single-pass rebuild")
+    assertAppendedEqualsRebuild(textTables)
     // and the partials really are partials (two builds present at rest)
-    assert(DerivedCache.existing(spark, dd, DocTables.Cms).count()
-        > TextQueries.cmsRowsOf(docs).count() ||
-      rows(DerivedCache.existing(spark, dd, DocTables.Cms)) != rows(folded),
+    val cms = DerivedCache.existing(spark, d, DocTables.Cms)
+    assert(cms.count() > TextQueries.cmsRowsOf(docs).count() ||
+      rows(cms) != rows(TextQueries.cmsRowsOf(docs)),
       "append must file-append partials, not rewrite the folded table")
   }
 
@@ -101,5 +89,12 @@ class IncrementalIndexSpec extends SparkSpec {
         Seq((1L, "a b c")).toDF("doc_id", "sg"))
     }
     assert(e.getMessage.contains("not built"))
+    // the registry never skips an unbuilt non-optional table: a later lazy
+    // build would serve a corpus without the appended batch
+    val viaRegistry = intercept[IllegalArgumentException] {
+      DocIndex.append(spark, s"$d-unbuilt-registry",
+        Seq((1L, "a b c")).toDF("doc_id", "text"))
+    }
+    assert(viaRegistry.getMessage.contains("not built"))
   }
 }

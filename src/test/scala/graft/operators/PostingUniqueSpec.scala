@@ -33,17 +33,15 @@ class PostingUniqueSpec extends SparkSpec {
   test("uniqueness and count==countDistinct survive the append path") {
     import spark.implicits._
     // base ∪ appended batch through the REAL maintenance entry point
-    // (TextQueries.appendDocuments) — the second way rows enter the index
+    // (the registry append, DocIndex.append) — the second way rows enter
+    // the index
     val d = s"/posting-unique-append/${java.util.UUID.randomUUID()}"
     val docs = graft.sources.Tables.documents(spark, dir)
       .select($"doc_id", $"text")
     val base = docs.filter($"doc_id" % 3 =!= 0)
     val delta = docs.filter($"doc_id" % 3 === 0)
-    graft.build.DerivedCache.table(spark, d, graft.build.DocTables.Postings)(
-      TextQueries.postingRowsOf(base))
-    graft.build.DerivedCache.table(spark, d, graft.build.DocTables.Cms)(
-      TextQueries.cmsRowsOf(base))
-    TextQueries.appendDocuments(spark, d, delta)
+    DocIndex.build(spark, d, base)
+    DocIndex.append(spark, d, delta)
     val merged = TextQueries.postings(spark, d)
     val dup = merged.groupBy(col("t"), col("doc_id")).agg(count(lit(1)).as("c"))
       .filter(col("c") > 1).count()
