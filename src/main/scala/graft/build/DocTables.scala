@@ -5,9 +5,10 @@ package graft.build
   * append/replace path, the batch entry points, the bench, and the specs.
   * The per-document tables among them are declared once more, with their
   * upstream and derivation, in the `graft.operators.DocIndex` registry,
-  * which derives their build, read, append, delete and compaction paths;
-  * the dup pair/cluster tables and the vector-side tables are maintained
-  * by hand-written steps.
+  * and the vector-side tables, with their quantizers, in the
+  * `graft.operators.VecIndex` registry; each registry derives its tables'
+  * build, read, append, delete and compaction paths. The dup pair/cluster
+  * tables are maintained by hand-written steps.
   * Before this object each site carried its own literal pair, so a version
   * bump in the read path (the documented procedure for layout changes)
   * could leave the write path appending to the retired directory: the
@@ -20,7 +21,7 @@ package graft.build
   * (`DedupQueries.PrefixTable` + its df-snapshot/meta companions) — keep
   * their identity constants at their call sites.) */
 object DocTables {
-  // vector-side maintained tables (SimilarityQueries.appendEmbeddings);
+  // vector-side maintained tables (the root of operators.VecIndex);
   // EmbIndex v2: sig widened from the 32 banding planes to the 256-plane
   // rank signature (first 32 chars unchanged — band substrings still apply)
   val EmbIndex = ("emb_index", 2)

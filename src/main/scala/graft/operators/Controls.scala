@@ -29,8 +29,7 @@ private[operators] object Controls {
     * guard; throws otherwise. `corpus` + its mutation epoch key the
     * memoized count. */
   def gate(df: DataFrame, what: String, corpus: String): DataFrame = {
-    val max = df.sparkSession.conf.getOption(MaxRowsKey)
-      .map(_.toLong).getOrElse(MaxRowsDefault)
+    val max = Conf.long(df.sparkSession, MaxRowsKey, MaxRowsDefault)
     val n = EpochMemo.scalar(df.sparkSession, what, corpus)(df.count())
     check(n, what, max)
     df
@@ -102,8 +101,7 @@ private[operators] object Controls {
     * route's value after an escalation flip. */
   private[operators] def massCheck(s: SparkSession, what: String,
       instrument: String, m: Long): Unit = {
-    val max = s.conf.getOption(CandMassKey)
-      .map(_.toLong).getOrElse(CandMassDefault)
+    val max = Conf.long(s, CandMassKey, CandMassDefault)
     require(m <= max,
       s"$what pre-flight: candidate mass $m exceeds $CandMassKey=$max — " +
         "this corpus is in the VOCABULARY-SATURATION regime for the index " +
@@ -172,11 +170,7 @@ private[operators] object Guard {
   val BroadcastMaxKey = "spark.graft.broadcastMaxRows"
 
   def fits(s: SparkSession, rows: Long, max: Long = 5000000L): Boolean = {
-    val ceiling = s.conf.getOption(BroadcastMaxKey).fold(max) { v =>
-      v.toLongOption.filter(_ >= 0).getOrElse(throw new IllegalArgumentException(
-        s"$BroadcastMaxKey must be a non-negative row count, got '$v'"))
-    }
-    rows <= ceiling
+    rows <= Conf.long(s, BroadcastMaxKey, max)
   }
 
   /** Broadcast `df` when `rows` fits, else hint a shuffle hash join. A hint
@@ -184,4 +178,40 @@ private[operators] object Guard {
     * unknown stats, so unhinted it would sort-merge-join every round. */
   def sized(df: DataFrame, rows: Long, max: Long = 5000000L): DataFrame =
     if (fits(df.sparkSession, rows, max)) broadcast(df) else df.hint("shuffle_hash")
+}
+
+/** The one parse of every numeric `spark.graft.*` option: unset, the
+  * caller's default; a value that is not a non-negative number throws an
+  * error naming the key and the value, never a bare NumberFormatException
+  * from deep inside a query or an ingest batch. */
+private[operators] object Conf {
+
+  def long(s: SparkSession, key: String, default: Long): Long =
+    read(s, key, default)(_.toLongOption)
+  def int(s: SparkSession, key: String, default: Int): Int =
+    read(s, key, default)(_.toIntOption)
+  def double(s: SparkSession, key: String, default: Double): Double =
+    read(s, key, default)(_.toDoubleOption)
+
+  private def read[N](s: SparkSession, key: String, default: N)
+      (parse: String => Option[N])(implicit n: Numeric[N]): N =
+    s.conf.getOption(key).fold(default) { v =>
+      parse(v).filter(n.gteq(_, n.zero)).getOrElse(throw new IllegalArgumentException(
+        s"$key must be a non-negative number, got '$v'"))
+    }
+}
+
+/** The one frozen-until-drift rule of every trained at-rest artifact — the
+  * prefix family's df ranks, the PQ codebook, the k-means centroids. A
+  * stale artifact costs fan-out or recall, never correctness, so it stays
+  * frozen while the corpus is within half its size at the snapshot; the
+  * mutation that moves it past either bound retrains. Checked after every
+  * append and delete, so an append can only leave the band upward and a
+  * delete downward. */
+private[operators] object Drift {
+
+  private val Fraction = 0.5
+
+  def past(snapshot: Long, now: Long): Boolean =
+    now > snapshot * (1.0 + Fraction) || now < snapshot * (1.0 - Fraction)
 }

@@ -737,8 +737,7 @@ object DedupQueries {
     def stats = DerivedCache.table(s, d, SimStatsTable)(simStatsRowsOf(s, d)).head
     val mSingle = EpochMemo.scalar(s, "mass1:dd4_simhash", d)(stats.getLong(0))
     val nBandRows = EpochMemo.scalar(s, "bandrows:dd4_simhash", d)(stats.getLong(1))
-    val fanoutMax = s.conf.getOption(Controls.SimhashEscalateKey)
-      .map(_.toDouble).getOrElse(Controls.SimhashEscalateDefault)
+    val fanoutMax = Conf.double(s, Controls.SimhashEscalateKey, Controls.SimhashEscalateDefault)
     // same trigger shape as dd7's escalation: average candidate fan-out per
     // band row. Healthy corpora measure ~10 at sf0.1; the saturated sf1
     // rung ~87 — SimHash bits are signs of word-vector sums, so a tiny
@@ -883,11 +882,6 @@ object DedupQueries {
     * index scan is already being paid). */
   private[operators] val PrefixStatsTable = ("sh_stats", 1)
 
-  /** Corpus growth fraction past the df snapshot that triggers a full
-    * re-rank on the next batch append ([[rerankPrefix]]). */
-  val PrefixRerankGrowthKey = "spark.graft.prefix.rerankGrowth"
-  private val PrefixRerankGrowthDefault = 0.5
-
   /** Shingle document frequency (sg, df) for a shingle frame — the global
     * rarity ranking the prefix index orders by. */
   private[graft] def dfRowsOf(shingleRows: DataFrame): DataFrame = {
@@ -1012,14 +1006,14 @@ object DedupQueries {
     * unconditionally (see [[prefixRowsOf]]); what drifts is fan-out — a
     * prefix shingle's true df exceeds its snapshot rank by at most the
     * number of documents appended since the snapshot, so once the corpus
-    * grows past [[PrefixRerankGrowthKey]] (default 50%) the next append
+    * drifts past the snapshot's size ([[Drift]]: by half) the next append
     * triggers [[rerankPrefix]] to restore rarity-minimal prefixes. No-op
     * when the prefix family was never built: a later lazy build snapshots
     * base ∪ batch wholesale, so query results are batch-inclusive either
     * way (the pre-round-7 lazy build made them timing-dependent). Runs
     * after the batch's shingle and size appends. */
   private[operators] def appendPrefix(s: SparkSession, d: String, batchShingles: DataFrame): Unit =
-    maintainPrefix(s, d, shrink = false) {
+    maintainPrefix(s, d) {
       DerivedCache.append(s, d, PrefixTable)(
         prefixRowsOf(batchShingles, DerivedCache.existing(s, d, PrefixDfTable)))
     }
@@ -1027,28 +1021,23 @@ object DedupQueries {
   /** The delete mirror of [[appendPrefix]]: purge the deleted documents'
     * prefix rows under the FROZEN ranks — correctness is rank-independent
     * ([[prefixRowsOf]]): stale ranks cost join width, never a missed pair
-    * — and re-rank once the corpus SHRINKS past the same configured
-    * fraction growth re-ranks at. Runs after the shingle and size purges. */
+    * — and re-rank once the corpus SHRINKS past the same [[Drift]] rule
+    * growth re-ranks at. Runs after the shingle and size purges. */
   private[operators] def deletePrefix(s: SparkSession, d: String, ids: DataFrame): Unit =
-    maintainPrefix(s, d, shrink = true) {
+    maintainPrefix(s, d) {
       DerivedCache.purge(s, d, PrefixTable, ids, "d1")
     }
 
   /** `update` the prefix rows when the family is built, then re-rank if
-    * the size table has drifted past the configured fraction of the
-    * snapshot's corpus size, else refresh the stats row. */
-  private def maintainPrefix(s: SparkSession, d: String, shrink: Boolean)
-      (update: => Unit): Unit = if (DerivedCache.isBuilt(s, d, PrefixTable)) {
-    update
-    val atRank = DerivedCache.existing(s, d, PrefixMetaTable).head.getLong(0)
-    val now = docSizes(s, d).count()
-    val growth = s.conf.getOption(PrefixRerankGrowthKey).map(_.toDouble)
-      .getOrElse(PrefixRerankGrowthDefault)
-    val drifted =
-      if (shrink) now < atRank * (1.0 - growth) else now > atRank * (1.0 + growth)
-    if (drifted) rerankPrefix(s, d)
-    else refreshStats(s, d) // rerankPrefix refreshed already
-  }
+    * the size table has drifted ([[Drift]]) from the snapshot's corpus
+    * size, else refresh the stats row. */
+  private def maintainPrefix(s: SparkSession, d: String)(update: => Unit): Unit =
+    if (DerivedCache.isBuilt(s, d, PrefixTable)) {
+      update
+      val atRank = DerivedCache.existing(s, d, PrefixMetaTable).head.getLong(0)
+      if (Drift.past(atRank, docSizes(s, d).count())) rerankPrefix(s, d)
+      else refreshStats(s, d) // rerankPrefix refreshed already
+    }
 
   /** Full re-rank of the prefix family from the CURRENT shingle index —
     * the periodic rebuild that restores fan-out minimality after df drift.
@@ -1143,8 +1132,7 @@ object DedupQueries {
     import s.implicits._
     val (m1, rows) = singlePreflight(s, d, "dd7_prefix_containment",
       lit(true), lit(true), wholeCorpus = true)
-    val fanoutMax = s.conf.getOption(Controls.EscalateFanoutKey)
-      .map(_.toDouble).getOrElse(Controls.EscalateFanoutDefault)
+    val fanoutMax = Conf.double(s, Controls.EscalateFanoutKey, Controls.EscalateFanoutDefault)
     if (m1 > fanoutMax * math.max(rows, 1L)) {
       docPairs(s, d)
       ()
@@ -1158,8 +1146,7 @@ object DedupQueries {
     val sh = shingles(s, d)
     val sizes = docSizes(s, d)
     val (m1, nPrefixRows) = singlePreflight(s, d, what, d1Pred, d2Pred, wholeCorpus)
-    val fanoutMax = s.conf.getOption(Controls.EscalateFanoutKey)
-      .map(_.toDouble).getOrElse(Controls.EscalateFanoutDefault)
+    val fanoutMax = Conf.double(s, Controls.EscalateFanoutKey, Controls.EscalateFanoutDefault)
     val escalate = m1 > fanoutMax * math.max(nPrefixRows, 1L)
     val rawCandidates = if (!escalate) {
       Controls.massCheck(s, what, "dd21_prefix_profile", m1)

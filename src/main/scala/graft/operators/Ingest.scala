@@ -137,8 +137,7 @@ object Ingest {
     * both ingest families compact under the ONE configured ceiling. */
   private[operators] def compactTables(s: SparkSession, d: String,
       tables: Seq[(String, Int)]): Seq[String] = {
-    val max = s.conf.getOption(CompactMaxFilesKey).map(_.toInt)
-      .getOrElse(CompactMaxFilesDefault)
+    val max = Conf.int(s, CompactMaxFilesKey, CompactMaxFilesDefault)
     val due = tables.filter(t => DerivedCache.isBuilt(s, d, t) &&
       DerivedCache.parquetFileCount(s, d, t._1, t._2) > max)
     // §2.6: each compaction is an independent staged replace of its own

@@ -282,7 +282,7 @@ object PipelineQueries {
   private def prefixRowsOf(counts: DataFrame, shift: Long): DataFrame = {
     val s = counts.sparkSession
     import s.implicits._
-    val b = s.conf.getOption(PackBucketKey).map(_.toLong).getOrElse(PackBucketDefault)
+    val b = Conf.long(s, PackBucketKey, PackBucketDefault)
     val n = s.conf.get("spark.sql.shuffle.partitions").toInt
     // only the 24-byte (doc_id, bucket, n_tokens) rows move onto the
     // bucket layout. That ONE narrow exchange is consumed by BOTH

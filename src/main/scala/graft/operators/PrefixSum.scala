@@ -72,7 +72,7 @@ private[operators] object PrefixSum {
       cumName: String,
       totName: String): (DataFrame, DataFrame) = {
     val s = hist.sparkSession
-    val b = s.conf.getOption(BucketKey).map(_.toLong).getOrElse(BucketDefault)
+    val b = Conf.long(s, BucketKey, BucketDefault)
     val n = s.conf.get("spark.sql.shuffle.partitions").toInt
     val pcols = parts.map(col)
     val keyCols = pcols :+ col("_bucket")

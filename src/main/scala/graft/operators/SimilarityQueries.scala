@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 
 import org.apache.spark.sql.expressions.Window
 
-import graft.build.{DerivedCache, DocTables}
 import graft.functions.Exact.{davg, dsum, sqlAvg, sqlSum}
 import graft.functions.VectorOps.{cosineExact, dotExact, hammingDist, hyperSig, normSqExact}
 import graft.sources.Tables
@@ -105,10 +104,10 @@ object SimilarityQueries {
 
   /** Conf-driven Hamming-pool ANN top-k for library callers. */
   def hammingTopK(s: SparkSession, d: String): DataFrame =
-    ss2(s, d, s.conf.get(HamPoolKey, HamPool.toString).toInt)
+    ss2(s, d, Conf.int(s, HamPoolKey, HamPool))
   /** Conf-driven batch kNN join for library callers. */
   def knnJoin(s: SparkSession, d: String): DataFrame =
-    ss9(s, d, s.conf.get(KnnPoolKey, KnnPool.toString).toInt)
+    ss9(s, d, Conf.int(s, KnnPoolKey, KnnPool))
 
   /** Banded hyperplane signature under the module's LSH geometry —
     * exposed for the recall audit's planted-near-dup measurement. */
@@ -124,11 +123,9 @@ object SimilarityQueries {
     * index path ([[ivfIndex]]), so different settings never read each
     * other's layouts. */
   private[operators] val DefaultCells = 16
-  private val DefaultNProbe = 4
-  private def cells(s: SparkSession): Int =
-    s.conf.get("spark.graft.ivf.cells", DefaultCells.toString).toInt
-  private def nProbe(s: SparkSession): Int =
-    s.conf.get("spark.graft.ivf.nprobe", DefaultNProbe.toString).toInt
+  private[operators] val DefaultNProbe = 4
+  private def cells(s: SparkSession): Int = Conf.int(s, "spark.graft.ivf.cells", DefaultCells)
+  private def nProbe(s: SparkSession): Int = Conf.int(s, "spark.graft.ivf.nprobe", DefaultNProbe)
 
   /** Conf-driven IVF ANN top-k for library callers (fixed quantizer). */
   def ivfTopK(s: SparkSession, d: String): DataFrame =
@@ -165,12 +162,7 @@ object SimilarityQueries {
   /** Force at-rest index materialization + the one-row probe lookup
     * (ingest-time cost, untimed in Bench). */
   def warm(s: SparkSession, d: String): Unit = {
-    index(s, d)
-    ivfIndex(s, d, DefaultCells)
-    kmCentroids(s, d, DefaultCells)
-    kmAssign(s, d, DefaultCells)
-    sqIndex(s, d)
-    pqCodes(s, d)
+    VecIndex.warm(s, d, DefaultCells)
     probeRow(s, d)
     // memoize the planning-time count probes here (ingest-time, untimed)
     // so no first timed rep carries a guard's count() job: ss1's control
@@ -198,14 +190,10 @@ object SimilarityQueries {
   }
 
   /** At-rest LSH index (vec_id, embedding, nsq, sig): signatures and norms
-    * are INDEX structures — built once at ingest ([[DerivedCache]]), read by
-    * every ss2/ss3 run, exactly like the materialized graph tables. The
-    * repartition spreads the build across cores (the test corpus is a single
-    * scan partition). */
-  private def index(s: SparkSession, d: String): DataFrame =
-    DerivedCache.table(s, d, DocTables.EmbIndex) {
-      indexRowsOf(Tables.embeddings(s, d))
-    }
+    * are INDEX structures — built once at ingest ([[VecIndex]]), read by
+    * every ss2/ss3 run, exactly like the materialized graph tables; the
+    * root every other vector table derives from. */
+  private def index(s: SparkSession, d: String): DataFrame = VecIndex.Index.read(s, d)
 
   /** Per-vector LSH index rows (vec_id, embedding, nsq, sig) — pure per-row
     * derivation, shared by the full build and [[appendEmbeddings]]. The sig
@@ -410,28 +398,22 @@ object SimilarityQueries {
 
   /** At-rest IVF cell assignment (vec_id, cid): each vector belongs to its
     * highest-cosine coarse centroid (ties → lowest cid). Centroids are the
-    * `cells` lowest-id vectors — a FIXED, deterministic coarse quantizer so
-    * the oracle reproduces the identical partition. This is the inverted-file
-    * layout: at 100 TB the corpus is bucketed by cell and a query scans
-    * nProbe/cells of it.
+    * `cells` lowest-id vectors of the at-rest index
+    * ([[VecIndex.IvfCentroids]]) — a FIXED, deterministic coarse quantizer
+    * so the oracle reproduces the identical partition. This is the
+    * inverted-file layout: at 100 TB the corpus is bucketed by cell and a
+    * query scans nProbe/cells of it.
     *
-    * K-MEANS SWAP-IN POINT: replace `cents` below with trained centroids and
-    * bump `IvfVersion` — the version is part of the at-rest path, so stale
-    * deterministic-quantizer layouts become unreachable and every reader
-    * re-materializes under the new quantizer. Nothing else (probe-cell
-    * ranking, semi-join shape, oracle contract for the default build)
-    * changes. */
+    * K-MEANS SWAP-IN POINT: replace the table's quantizer with trained
+    * centroids and bump `IvfVersion` — the version is part of the at-rest
+    * path, so stale deterministic-quantizer layouts become unreachable and
+    * every reader re-materializes under the new quantizer. Nothing else
+    * (probe-cell ranking, semi-join shape, oracle contract for the default
+    * build) changes. */
   private[operators] val IvfVersion = 1
-  private def ivfTable(nc: Int): (String, Int) = (s"emb_ivf_c$nc", IvfVersion)
-  private def ivfIndex(s: SparkSession, d: String, nc: Int): DataFrame = {
-    DerivedCache.table(s, d, ivfTable(nc)) {
-      import s.implicits._
-      val e = Tables.embeddings(s, d)
-      val cents = e.orderBy($"vec_id").limit(nc)
-        .select($"vec_id".as("cid"), $"embedding".as("cemb"))
-      ivfAssignRowsOf(e, cents)
-    }
-  }
+  private[operators] def ivfTable(nc: Int): (String, Int) = (s"emb_ivf_c$nc", IvfVersion)
+  private def ivfIndex(s: SparkSession, d: String, nc: Int): DataFrame =
+    VecIndex.Ivf(nc).read(s, d)
 
   /** Per-vector hard assignment (vec_id, cid) against a FIXED centroid
     * frame (cid, cemb) — pure per-row given the quantizer, shared by the
@@ -462,10 +444,7 @@ object SimilarityQueries {
     * memory-bandwidth lever for ANN: the scan side shrinks 4× (int8 codes
     * instead of float32) and the exact float pass touches only the rerank
     * pool. */
-  private def sqIndex(s: SparkSession, d: String): DataFrame =
-    DerivedCache.table(s, d, DocTables.EmbSq) {
-      sqRowsOf(Tables.embeddings(s, d))
-    }
+  private def sqIndex(s: SparkSession, d: String): DataFrame = VecIndex.Sq.read(s, d)
 
   /** Per-vector int8 quantization rows (vec_id, scale, q) — pure per-row,
     * shared by the full build and [[appendEmbeddings]]. */
@@ -484,225 +463,74 @@ object SimilarityQueries {
   }
 
   /** Incremental embedding-index maintenance — the vector-side analog of
-    * `DocIndex.append`: derive the per-vector LSH index rows,
-    * int8 SQ codes, and IVF cell assignments for a batch of NEW vectors and
-    * append them to the at-rest tables ([[graft.build.DerivedCache.append]]).
+    * `DocIndex.append`, over the [[VecIndex]] registry: derive every
+    * maintained table's rows for a batch of NEW vectors and append them.
     * LSH/SQ rows are per-vector, so incremental == full rebuild
-    * unconditionally; the IVF assignment is per-vector AGAINST THE FROZEN
-    * coarse quantizer (read back from the at-rest index before the append),
-    * the standard IVF ingest practice — it equals a full rebuild whenever
-    * appended vec_ids stay above the centroid id range (monotone ingest
-    * ids), and the quantizer retrains on its own cadence otherwise
-    * (IncrementalEmbeddingSpec). Caller contract: vec_ids must not already
-    * be indexed. The PQ code table follows the identical frozen-quantizer
-    * pattern — and its lowest-id codebook is append-STABLE under monotone
-    * ids, so appended codes equal a rebuild's unconditionally. The
-    * TRAINED ss5 family is maintained the same way since round 8:
-    * per-batch assignments against the frozen trained centroids, with
-    * [[KmRetrainGrowthKey]] bounding quantizer drift — past that corpus
-    * growth since training, the next append retrains
-    * ([[retrainQuantizer]], the [[DedupQueries.rerankPrefix]] pattern).
-    * Ends with the compaction sweep so vector-index file counts are
-    * bounded by the same policy as the document path. */
+    * unconditionally; the IVF, PQ and k-means rows are per-vector AGAINST
+    * THE FROZEN quantizer (read back before the append), the standard IVF
+    * ingest practice. The IVF quantizer (the `cells` lowest ids) and the
+    * PQ training init are append-stable under monotone ingest ids
+    * (IncrementalEmbeddingSpec); the TRAINED PQ codebook and k-means
+    * centroids are frozen until the corpus drifts past [[Drift]] since
+    * training, when the append retrains them ([[retrainQuantizer]],
+    * [[retrainPqCodebook]] — the [[DedupQueries.rerankPrefix]] pattern).
+    * Caller contract: vec_ids must not already be indexed. The SESSION's
+    * configured cell count picks which IVF and k-means tables are
+    * maintained — the ones a conf-driven [[ivfTopK]] reads. Ends with the
+    * compaction sweep so vector-index file counts are bounded by the same
+    * policy as the document path. */
   def appendEmbeddings(s: SparkSession, d: String, newVecs: DataFrame): Unit = {
-    import s.implicits._
-    // the SESSION's configured cell count picks which at-rest IVF table is
-    // maintained — hardcoding the default here would leave a conf-driven
-    // ivfTopK reading a table that silently misses every appended vector
-    val nc = cells(s)
-    // freeze the quantizers BEFORE touching the index: the coarse IVF
-    // centroids are the base corpus's `cells` lowest-id vectors (not the
-    // appended batch's), the ss5 centroids are the trained table as of
-    // this batch. Materialize both to the driver NOW — a lazy plan would
-    // list the index files only when the assignment below executes, i.e.
-    // AFTER the append, leaving the freeze to the parquet reader's
-    // file-listing capture timing instead of this code
-    val centRows = DerivedCache.existing(s, d, DocTables.EmbIndex)
-      .orderBy($"vec_id").limit(nc)
-      .select($"vec_id".as("cid"), $"embedding".as("cemb"))
-    val cents = s.createDataFrame(
-      java.util.Arrays.asList(centRows.collect(): _*), centRows.schema)
-    val kmBuilt = DerivedCache.isBuilt(s, d, kmCentsTable(nc))
-    val kmCents = if (!kmBuilt) null else {
-      val rows = DerivedCache.existing(s, d, kmCentsTable(nc))
-      s.createDataFrame(java.util.Arrays.asList(rows.collect(): _*), rows.schema)
-    }
-    // the PQ codebook is a stored TRAINED artifact (the kmCents
-    // discipline) — frozen to the driver here so the assignment below
-    // cannot observe the appended index files
-    val pqBuilt = DerivedCache.isBuilt(s, d, pqTable)
-    val pqCb = if (!pqBuilt) null else {
-      val rows = DerivedCache.existing(s, d, pqCbTable)
-      s.createDataFrame(java.util.Arrays.asList(rows.collect(): _*), rows.schema)
-    }
-    // §2.6 (round 15): with every quantizer frozen to the driver above,
-    // the five index appends touch disjoint tables and derive only from
-    // newVecs — overlap them; the drift checks below stay sequential (they
-    // read the post-append EmbIndex count and may REPLACE the tables these
-    // appends write)
-    graft.build.Par.run(Seq(
-      () => DerivedCache.append(s, d, DocTables.EmbIndex)(indexRowsOf(newVecs)),
-      () => DerivedCache.append(s, d, DocTables.EmbSq)(sqRowsOf(newVecs)),
-      () => DerivedCache.append(s, d, ivfTable(nc))(ivfAssignRowsOf(newVecs, cents)),
-      () => if (pqBuilt)
-        DerivedCache.append(s, d, pqTable)(pqCodeRowsOf(newVecs, pqCb)),
-      () => if (kmBuilt) DerivedCache.append(s, d, kmAssignTable(nc))(
-        assignTo(evRowsOf(newVecs), kmCents))))
-    if (kmBuilt) {
-      // drift policy: stale trained centroids cost recall, never
-      // correctness (assignments stay exact vs the frozen quantizer) —
-      // bounded like the dd7 prefix ranks, by a growth-triggered retrain
-      val trainedN = DerivedCache.existing(s, d, kmMetaTable(nc)).head.getLong(0)
-      val now = DerivedCache.existing(s, d, DocTables.EmbIndex).count()
-      val growth = s.conf.getOption(KmRetrainGrowthKey).map(_.toDouble)
-        .getOrElse(KmRetrainGrowthDefault)
-      if (now > trainedN * (1.0 + growth)) retrainQuantizer(s, d, nc)
-    }
-    if (pqBuilt) {
-      // same drift policy for the trained PQ codebook: stale codewords
-      // cost recall, never correctness (codes stay exact vs the frozen
-      // codebook) — growth past the snapshot retrains the whole family
-      val trainedN = DerivedCache.existing(s, d, pqMetaTable).head.getLong(0)
-      val now = DerivedCache.existing(s, d, DocTables.EmbIndex).count()
-      val growth = s.conf.getOption(KmRetrainGrowthKey).map(_.toDouble)
-        .getOrElse(KmRetrainGrowthDefault)
-      if (now > trainedN * (1.0 + growth)) retrainPqCodebook(s, d)
-    }
+    VecIndex.append(s, d, cells(s), newVecs)
     Ingest.compactTables(s, d, maintainedVectorTables(s))
     ()
   }
 
-  /** ONE list of the at-rest vector tables the append path maintains under
-    * the SESSION's configured cell count — the compaction worklist and the
-    * streaming-vs-batch parity spec's comparison set (the vector-side
-    * analog of `Ingest.maintainedDocTables`). */
-  private[graft] def maintainedVectorTables(s: SparkSession): Seq[(String, Int)] = {
-    val nc = cells(s)
-    Seq(DocTables.EmbIndex, DocTables.EmbSq, ivfTable(nc), pqTable,
-      pqCbTable, pqMetaTable,
-      kmAssignTable(nc), kmCentsTable(nc), kmMetaTable(nc))
-  }
+  /** Every at-rest vector table the append and delete paths maintain
+    * under the SESSION's configured cell count — the compaction worklist
+    * and the streaming-vs-batch parity spec's comparison set (the
+    * vector-side analog of `Ingest.maintainedDocTables`). */
+  private[graft] def maintainedVectorTables(s: SparkSession): Seq[(String, Int)] =
+    VecIndex.tables(cells(s))
 
   /** Day-0 (or periodic-rebuild) materialization of every at-rest vector
     * index over an explicit embedding frame under corpus key `d` — the
     * vector-side analog of [[Ingest.buildDocumentIndexes]], idempotent per
     * table: LSH rank signatures + norms, int8 SQ codes, fixed-quantizer
-    * IVF assignments, PQ codes, and the trained-k-means family (centroids,
-    * training-snapshot meta, assignments) for the session's configured
-    * cell count. The declared queries build the same tables lazily from
-    * the corpus parquet; this entry point exists for ingest pipelines
-    * (and the maintenance specs/bench) that index an explicit frame
-    * before any query runs. */
-  def buildEmbeddingIndexes(s: SparkSession, d: String, vecs: DataFrame): Unit = {
-    import s.implicits._
-    val nc = cells(s)
-    val idx = DerivedCache.table(s, d, DocTables.EmbIndex)(indexRowsOf(vecs))
-    DerivedCache.table(s, d, DocTables.EmbSq)(sqRowsOf(vecs))
-    val cents = idx.orderBy($"vec_id").limit(nc)
-      .select($"vec_id".as("cid"), $"embedding".as("cemb"))
-    DerivedCache.table(s, d, ivfTable(nc))(ivfAssignRowsOf(vecs, cents))
-    val pcb = DerivedCache.table(s, d, pqCbTable) {
-      DerivedCache.table(s, d, pqMetaTable)(vecs.agg(count(lit(1)).as("n_vecs")))
-      pqTrainedCodebookOf(vecs)
-    }
-    DerivedCache.table(s, d, pqTable)(pqCodeRowsOf(vecs, pcb))
-    val km = DerivedCache.table(s, d, kmCentsTable(nc)) {
-      DerivedCache.table(s, d, kmMetaTable(nc))(
-        vecs.agg(count(lit(1)).as("n_vecs")))
-      kmCentroidRowsOf(vecs, nc)
-    }
-    DerivedCache.table(s, d, kmAssignTable(nc))(assignTo(evRowsOf(vecs), km))
-    ()
-  }
+    * IVF assignments, the trained PQ family and the trained k-means
+    * family (centroids or codebook, training-snapshot meta, assignments)
+    * for the session's configured cell count. The declared queries build
+    * the same tables lazily; this entry point exists for ingest pipelines
+    * (and the maintenance specs/bench) that index an explicit frame before
+    * any query runs. */
+  def buildEmbeddingIndexes(s: SparkSession, d: String, vecs: DataFrame): Unit =
+    VecIndex.build(s, d, cells(s), vecs)
 
   /** Delete previously-ingested vectors from every at-rest vector index —
     * [[appendEmbeddings]]'s right-to-be-forgotten mirror (the embedding
     * side of [[Ingest.deleteDocumentBatch]]'s contract). Per-vector tables
-    * pay one staged filter-rewrite. The DERIVED quantizers need care: the
-    * fixed IVF centroids are the index's LOWEST-ID vectors and the PQ
-    * training INIT derives from them, so deleting an anchor vector changes
-    * the derived/fresh-trained quantizer — the IVF assignments REBUILD
-    * against the new anchors and the PQ family fully retrains from the
-    * remaining at-rest embeddings (narrow-index passes, never a source
-    * re-read); a non-anchor delete is purge-only.
-    * The TRAINED k-means family is a stored frozen artifact, so its
-    * assignments purge and the quantizer retrains only past the same
-    * configured drift fraction, now from the shrink side — stale trained
-    * cells cost recall, never correctness. */
+    * pay one staged filter-rewrite. The quantizers that derive from the
+    * lowest-id vectors need care: the fixed IVF centroids are the `cells`
+    * lowest ids and the PQ training init the lowest [[PqKs]], so deleting
+    * such an ANCHOR changes what a fresh build derives — the IVF
+    * assignments rebuild against the new anchors and the PQ family fully
+    * retrains from the remaining at-rest index (narrow-index passes, never
+    * a source re-read); a non-anchor delete is purge-only. The TRAINED
+    * families retrain only past the [[Drift]] rule, here from the shrink
+    * side — stale trained cells cost recall, never correctness. */
   def deleteEmbeddings(s: SparkSession, d: String, ids: DataFrame): Unit = {
-    import s.implicits._
-    val nc = cells(s)
-    val idSet = ids.select($"vec_id").distinct()
-    // anchor test runs BEFORE the purge (the anchors are the pre-delete
-    // lowest ids; count() executes it eagerly)
-    val anchorHit = DerivedCache.existing(s, d, DocTables.EmbIndex)
-      .orderBy($"vec_id").limit(math.max(nc, PqKs))
-      .join(idSet, "vec_id").count() > 0
-    def purge(t: (String, Int)): Unit =
-      if (DerivedCache.isBuilt(s, d, t)) DerivedCache.purge(s, d, t, idSet, "vec_id")
-    // §2.6: each purge is a staged replace of its own table's scan —
-    // disjoint tables, overlap them; the anchor branch below reads the
-    // post-purge EmbIndex, so it stays behind the barrier
-    graft.build.Par.run(Seq(
-      () => purge(DocTables.EmbIndex),
-      () => purge(DocTables.EmbSq),
-      () => purge(kmAssignTable(nc))))
-    if (anchorHit) {
-      val remaining = DerivedCache.existing(s, d, DocTables.EmbIndex)
-        .select($"vec_id", $"embedding")
-      if (DerivedCache.isBuilt(s, d, ivfTable(nc))) {
-        val centRows = remaining.orderBy($"vec_id").limit(nc)
-          .select($"vec_id".as("cid"), $"embedding".as("cemb"))
-        val cents = s.createDataFrame(
-          java.util.Arrays.asList(centRows.collect(): _*), centRows.schema)
-        DerivedCache.replace(s, d, ivfTable(nc))(ivfAssignRowsOf(remaining, cents))
-      }
-      // the PQ training INIT derives from the lowest ids, so an anchor
-      // delete changes what a fresh build would train — full retrain from
-      // the remaining index keeps delete == fresh-rebuild
-      if (DerivedCache.isBuilt(s, d, pqTable)) {
-        purge(pqTable)
-        retrainPqCodebook(s, d)
-      }
-    } else {
-      graft.build.Par.run(Seq(
-        () => purge(ivfTable(nc)),
-        () => purge(pqTable)))
-    }
-    if (DerivedCache.isBuilt(s, d, kmMetaTable(nc))) {
-      val trainedN = DerivedCache.existing(s, d, kmMetaTable(nc)).head.getLong(0)
-      val now = DerivedCache.existing(s, d, DocTables.EmbIndex).count()
-      val growth = s.conf.getOption(KmRetrainGrowthKey).map(_.toDouble)
-        .getOrElse(KmRetrainGrowthDefault)
-      if (now < trainedN * (1.0 - growth)) retrainQuantizer(s, d, nc)
-    }
-    if (DerivedCache.isBuilt(s, d, pqMetaTable)) {
-      val trainedN = DerivedCache.existing(s, d, pqMetaTable).head.getLong(0)
-      val now = DerivedCache.existing(s, d, DocTables.EmbIndex).count()
-      val growth = s.conf.getOption(KmRetrainGrowthKey).map(_.toDouble)
-        .getOrElse(KmRetrainGrowthDefault)
-      if (now < trainedN * (1.0 - growth)) retrainPqCodebook(s, d)
-    }
+    VecIndex.delete(s, d, cells(s), ids)
     Ingest.compactTables(s, d, maintainedVectorTables(s))
     ()
   }
 
   /** Full retrain of the ss5 trained-quantizer family from the CURRENT
     * at-rest index — the periodic rebuild that restores cell quality after
-    * corpus drift, normally triggered by [[appendEmbeddings]]'s growth
-    * policy but callable on any external cadence. Staged table swaps
-    * ([[DerivedCache.replace]]); KmeansMaintenanceSpec proves
+    * corpus drift, normally triggered by the [[Drift]] rule on append or
+    * delete but callable on any external cadence. Staged table swaps
+    * ([[graft.build.DerivedCache.replace]]); KmeansMaintenanceSpec proves
     * append-then-retrain == fresh rebuild bit-for-bit. */
-  def retrainQuantizer(s: SparkSession, d: String, nc: Int): Unit = {
-    import s.implicits._
-    val vecs = DerivedCache.existing(s, d, DocTables.EmbIndex)
-      .select($"vec_id", $"embedding")
-    DerivedCache.replace(s, d, kmCentsTable(nc))(kmCentroidRowsOf(vecs, nc))
-    DerivedCache.replace(s, d, kmMetaTable(nc))(
-      vecs.agg(count(lit(1)).as("n_vecs")))
-    DerivedCache.replace(s, d, kmAssignTable(nc))(
-      assignTo(evRowsOf(vecs), DerivedCache.existing(s, d, kmCentsTable(nc))))
-  }
+  def retrainQuantizer(s: SparkSession, d: String, nc: Int): Unit =
+    VecIndex.retrain(s, d, VecIndex.Km(nc))
 
   /** ss18: scalar-quantization fidelity audit — per vector, the cosine
     * between the raw embedding and its int8 reconstruction
@@ -1063,9 +891,7 @@ object SimilarityQueries {
     val pid = p.getLong(0)
     val pemb = p.getSeq[Float](1)
     val psqrtN = math.sqrt(p.getDouble(2))
-    val cents = Tables.embeddings(s, d).orderBy($"vec_id").limit(DefaultCells)
-      .select($"vec_id".as("cid"), $"embedding".as("cemb"))
-    val probeCells = cents
+    val probeCells = VecIndex.IvfCentroids(DefaultCells).read(s, d)
       .select($"cid", cosineExact($"cemb", typedlit(pemb)).as("ccos"))
       .orderBy(desc("ccos"), $"cid").limit(DefaultNProbe)
       .collect().toIndexedSeq.map(_.getLong(0))
@@ -1172,7 +998,7 @@ object SimilarityQueries {
     * per vector. */
   private val PqM = 16
   private val PqSubDim = 4
-  private val PqKs = 32
+  private[operators] val PqKs = 32
   private val PqIters = 3
   /** v2: per-subspace Lloyd-TRAINED codebook (+ at-rest codebook/meta
     * tables) and the 16×32 geometry — v1 was the untrained 4×16 lowest-id
@@ -1201,7 +1027,7 @@ object SimilarityQueries {
     (s"emb_pq_meta_m${PqM}_k${PqKs}_i$PqIters", PqVersion)
 
   private def evSub(s: SparkSession, d: String): DataFrame =
-    pqSubRowsOf(Tables.embeddings(s, d).select(col("vec_id"), col("embedding")))
+    pqSubRowsOf(VecIndex.vectors(s, d))
 
   /** Subspace-tagged exploded rows (vec_id, m, pos, e) of a vector frame. */
   private[operators] def pqSubRowsOf(vecs: DataFrame): DataFrame =
@@ -1220,9 +1046,6 @@ object SimilarityQueries {
     pqSubRowsOf(vecs).join(broadcast(ids), $"vec_id" === $"cid")
       .select($"cid", $"m", $"pos", $"e".as("ce"))
   }
-
-  private def pqCodebook(s: SparkSession, d: String): DataFrame =
-    pqCodebookOf(Tables.embeddings(s, d).select(col("vec_id"), col("embedding")))
 
   /** Min-L2 code assignment of subspace-tagged rows against a codebook:
     * per (vector, subspace) the nearest codebook entry (ties → lowest cid;
@@ -1266,41 +1089,23 @@ object SimilarityQueries {
 
   /** At-rest trained codebook (+ training-size meta, materialized FIRST
     * inside the same build so the retrain trigger's reference point is an
-    * explicit artifact — the kmCentroids discipline). */
+    * explicit artifact — [[VecIndex.PqCodebook]]). */
   private def pqTrainedCodebook(s: SparkSession, d: String): DataFrame =
-    DerivedCache.table(s, d, pqCbTable) {
-      import s.implicits._
-      DerivedCache.table(s, d, pqMetaTable)(
-        Tables.embeddings(s, d).agg(count(lit(1)).as("n_vecs")))
-      pqTrainedCodebookOf(
-        Tables.embeddings(s, d).select($"vec_id", $"embedding"))
-    }
+    VecIndex.PqCodebook.read(s, d)
 
   /** Full retrain of the PQ family from the CURRENT at-rest index — the
     * [[retrainQuantizer]] analog: codebook re-trains (init ids re-derive
-    * from the current corpus), every code re-assigns, the snapshot meta
-    * resets. PqMaintenanceSpec proves append-then-retrain == fresh
+    * from the current corpus), the snapshot meta resets, every code
+    * re-assigns. PqMaintenanceSpec proves append-then-retrain == fresh
     * rebuild. */
-  def retrainPqCodebook(s: SparkSession, d: String): Unit = {
-    import s.implicits._
-    val cur = DerivedCache.existing(s, d, DocTables.EmbIndex)
-      .select($"vec_id", $"embedding")
-    DerivedCache.replace(s, d, pqCbTable)(pqTrainedCodebookOf(cur))
-    DerivedCache.replace(s, d, pqTable)(
-      pqCodeRowsOf(cur, DerivedCache.existing(s, d, pqCbTable)))
-    DerivedCache.replace(s, d, pqMetaTable)(cur.agg(count(lit(1)).as("n_vecs")))
-  }
+  def retrainPqCodebook(s: SparkSession, d: String): Unit =
+    VecIndex.retrain(s, d, VecIndex.Pq)
 
   /** At-rest PQ code assignment vs the TRAINED codebook. At 100 TB this is
     * THE compressed-domain representation: M small ints per vector (codes)
     * replace the float payload on the scan side, and a query touches full
     * vectors only in the rerank pool. */
-  private def pqCodes(s: SparkSession, d: String): DataFrame =
-    DerivedCache.table(s, d, pqTable) {
-      pqCodeRowsOf(
-        Tables.embeddings(s, d).select(col("vec_id"), col("embedding")),
-        pqTrainedCodebook(s, d))
-    }
+  private def pqCodes(s: SparkSession, d: String): DataFrame = VecIndex.Pq.read(s, d)
 
   /** ss7: PQ ANN top-k by asymmetric distance computation — the probe
     * builds a [[PqM]]×[[PqKs]] lookup table of exact codebook·probe
@@ -1386,10 +1191,6 @@ object SimilarityQueries {
     (s"emb_km_assign_c${nc}_i$KmIters", KmVersion)
   private[operators] def kmMetaTable(nc: Int): (String, Int) =
     (s"emb_km_meta_c${nc}_i$KmIters", KmVersion)
-  /** Corpus growth fraction past the training snapshot that triggers a
-    * quantizer retrain on the next batch append ([[appendEmbeddings]]). */
-  val KmRetrainGrowthKey = "spark.graft.kmeans.retrainGrowth"
-  private val KmRetrainGrowthDefault = 0.5
 
   /** Element-exploded (vec_id, pos, e: double) view of a vector frame — the
     * representation the TRAINING loop shares with the DuckDB oracle, so
@@ -1405,7 +1206,7 @@ object SimilarityQueries {
   }
 
   private def evRows(s: SparkSession, d: String): DataFrame =
-    evRowsOf(Tables.embeddings(s, d).select(col("vec_id"), col("embedding")))
+    evRowsOf(VecIndex.vectors(s, d))
 
   /** Exact cosine of every (vector, centroid) pair from exploded rows —
     * identical aggregation shape to the oracle's GROUP BY (vec_id, cid). */
@@ -1433,18 +1234,8 @@ object SimilarityQueries {
     * classic ingest-side training pass: one assignment shuffle keyed on pos
     * (bounded k·d centroid broadcast) per round, written once next to the
     * corpus. */
-  private def kmCentroids(s: SparkSession, d: String, nc: Int): DataFrame = {
-    DerivedCache.table(s, d, kmCentsTable(nc)) {
-      import s.implicits._
-      // the training-time corpus size is materialized FIRST, inside the
-      // same build, so the retrain trigger's reference point is an
-      // explicit at-rest artifact (the dd7 df-snapshot discipline)
-      DerivedCache.table(s, d, kmMetaTable(nc))(
-        Tables.embeddings(s, d).agg(count(lit(1)).as("n_vecs")))
-      kmCentroidRowsOf(
-        Tables.embeddings(s, d).select($"vec_id", $"embedding"), nc)
-    }
-  }
+  private def kmCentroids(s: SparkSession, d: String, nc: Int): DataFrame =
+    VecIndex.KmCentroids(nc).read(s, d)
 
   /** The Lloyd training loop over an explicit vector frame — shared by the
     * day-0 build ([[kmCentroids]]) and the drift-triggered
@@ -1468,9 +1259,7 @@ object SimilarityQueries {
 
   /** At-rest assignment (vec_id, cid) against the final trained centroids. */
   private def kmAssign(s: SparkSession, d: String, nc: Int): DataFrame =
-    DerivedCache.table(s, d, kmAssignTable(nc)) {
-      assignTo(evRows(s, d), kmCentroids(s, d, nc))
-    }
+    VecIndex.Km(nc).read(s, d)
 
   /** ss16: cell-occupancy profile of the TRAINED IVF index — dd15's vector
     * sibling, the balance diagnostic a 100-TB operator reads before
@@ -1696,9 +1485,7 @@ object SimilarityQueries {
     val pid = p.getLong(0)
     val pemb = p.getSeq[Float](1)
     val psqrtN = math.sqrt(p.getDouble(2))
-    val cents = Tables.embeddings(s, d).orderBy($"vec_id").limit(nc)
-      .select($"vec_id".as("cid"), $"embedding".as("cemb"))
-    val probeCells = cents
+    val probeCells = VecIndex.IvfCentroids(nc).read(s, d)
       .select($"cid", cosineExact($"cemb", typedlit(pemb)).as("ccos"))
       .orderBy(desc("ccos"), $"cid").limit(np)
       .collect().toIndexedSeq.map(_.getLong(0))

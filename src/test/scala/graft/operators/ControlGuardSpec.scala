@@ -49,4 +49,21 @@ class ControlGuardSpec extends SparkSpec {
       saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
     }
   }
+
+  test("a malformed numeric option is rejected by name") {
+    def rejected(key: String, bad: String)(read: => Any): Unit = {
+      val saved = spark.conf.getOption(key)
+      spark.conf.set(key, bad)
+      try {
+        val e = intercept[IllegalArgumentException](read)
+        assert(e.getMessage.contains(key) && e.getMessage.contains(bad), e.getMessage)
+      } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
+    rejected(Controls.MaxRowsKey, "ten") {
+      Controls.gate(spark.range(3).toDF("id"), "dd2_ngram_jaccard", "/control-conf")
+    }
+    rejected("spark.graft.ivf.cells", "-16") {
+      SimilarityQueries.ivfTopK(spark, "/control-conf")
+    }
+  }
 }

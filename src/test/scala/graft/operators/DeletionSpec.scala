@@ -94,4 +94,22 @@ class DeletionSpec extends SparkSpec {
     // on an empty survivor set
     deleteMatchesFreshBuild(Set(8L, 30L, 31L))
   }
+
+  test("a delete past the drift rule re-ranks the prefix family by itself") {
+    // 6 of the 11 documents: the corpus shrinks past half its size at the
+    // df snapshot, so the delete must re-rank without a rerankPrefix call
+    val docs = all.toDF("doc_id", "text")
+    val ids = Set(1L, 2L, 3L, 8L, 30L, 31L)
+    val dDel = s"/deletion-shrink/${java.util.UUID.randomUUID()}"
+    val dRef = s"/deletion-shrink-ref/${java.util.UUID.randomUUID()}"
+    Ingest.buildDocumentIndexes(spark, dDel, docs)
+    Ingest.deleteDocumentBatch(spark, dDel, docs.filter($"doc_id".isInCollection(ids)))
+    Ingest.buildDocumentIndexes(spark, dRef, docs.filter(!$"doc_id".isInCollection(ids)))
+    for (t <- Seq(DedupQueries.PrefixTable, DedupQueries.PrefixDfTable,
+        DedupQueries.PrefixMetaTable, DedupQueries.PrefixStatsTable)) {
+      assert(rows(DerivedCache.existing(spark, dDel, t))
+          == rows(DerivedCache.existing(spark, dRef, t)),
+        s"table ${t._1} must equal the fresh build")
+    }
+  }
 }

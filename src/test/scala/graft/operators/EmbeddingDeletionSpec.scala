@@ -1,9 +1,11 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{desc, typedlit}
 
 import graft.SparkSpec
 import graft.build.{DerivedCache, DocTables}
+import graft.functions.VectorOps.cosineExact
 import graft.sources.Tables
 
 /** Vector-side right-to-be-forgotten maintenance: deleting a batch from
@@ -64,6 +66,52 @@ class EmbeddingDeletionSpec extends SparkSpec {
     val after = ss2(dDel)
     assert(after == ss2(dRef), "ss2 after the delete must equal ss2 on the fresh build")
     assert(after != before, "deleting the probe vector must change ss2's answer")
+  }
+
+  test("ss4 and ss12 after an anchor delete == ss4 and ss12 on a fresh build") {
+    // delete the anchors of the probe's best-ranked cells (but not the
+    // probe, the lowest id): the probe must rank against the remaining
+    // index's anchors, the ones the rebuilt assignments name
+    val nc = SimilarityQueries.DefaultCells
+    val pemb = emb.filter($"vec_id" === allIds.head).head.getSeq[Float](1)
+    val topCells = emb.filter($"vec_id".isInCollection(allIds.take(nc)))
+      .select($"vec_id", cosineExact($"embedding", typedlit(pemb)).as("ccos"))
+      .orderBy(desc("ccos"), $"vec_id")
+      .limit(SimilarityQueries.DefaultNProbe).collect().map(_.getLong(0))
+    val deleted = topCells.toSet - allIds.head
+    assert(deleted.nonEmpty)
+    val batch = emb.filter($"vec_id".isInCollection(deleted)).select($"vec_id")
+    val remaining = emb.filter(!$"vec_id".isInCollection(deleted))
+    def answers(d: String): Seq[Seq[String]] =
+      Seq("ss4_ivf_topk", "ss12_ivfpq_topk").map(q => rows(SimilarityQueries.queries(q)(spark, d)))
+
+    val dDel = s"/emb-del-cells/${java.util.UUID.randomUUID()}"
+    val dRef = s"/emb-del-cells-ref/${java.util.UUID.randomUUID()}"
+    SimilarityQueries.buildEmbeddingIndexes(spark, dDel, emb)
+    SimilarityQueries.deleteEmbeddings(spark, dDel, batch)
+    SimilarityQueries.buildEmbeddingIndexes(spark, dRef, remaining)
+    assert(answers(dDel) == answers(dRef),
+      "ss4 and ss12 after the delete must equal their answers on the fresh build")
+  }
+
+  test("a delete past the drift rule leaves every table equal to a fresh build") {
+    // more than half of the corpus, every id above the anchors: the
+    // trained families must retrain on their own, no explicit call
+    val deleted = allIds.drop(allIds.length / 2 - 10).toSet
+    assert(deleted.size * 2 > allIds.length)
+    val batch = emb.filter($"vec_id".isInCollection(deleted)).select($"vec_id")
+    val remaining = emb.filter(!$"vec_id".isInCollection(deleted))
+
+    val dDel = s"/emb-del-shrink/${java.util.UUID.randomUUID()}"
+    val dRef = s"/emb-del-shrink-ref/${java.util.UUID.randomUUID()}"
+    SimilarityQueries.buildEmbeddingIndexes(spark, dDel, emb)
+    SimilarityQueries.deleteEmbeddings(spark, dDel, batch)
+    SimilarityQueries.buildEmbeddingIndexes(spark, dRef, remaining)
+    for (t <- SimilarityQueries.maintainedVectorTables(spark)) {
+      assert(rows(DerivedCache.existing(spark, dDel, t))
+          == rows(DerivedCache.existing(spark, dRef, t)),
+        s"table ${t._1} must equal the fresh build")
+    }
   }
 
   test("non-anchor delete: purge alone reproduces the fresh build") {

@@ -15,7 +15,7 @@ import graft.sources.Tables
   *    against the FROZEN trained centroids (stale centroids cost recall,
   *    never correctness: every stored assignment is exact w.r.t. the
   *    quantizer it names) and the centroid/meta tables stay untouched;
-  *  - past [[SimilarityQueries.KmRetrainGrowthKey]] corpus growth since
+  *  - past 50% corpus growth ([[Drift]]) since
   *    the training snapshot, the next append retrains — and
   *    append-then-retrain equals a fresh full rebuild bit-for-bit
   *    (deterministic Lloyd: lowest-id init unchanged under monotone

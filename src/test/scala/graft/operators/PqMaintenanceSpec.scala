@@ -15,7 +15,7 @@ import graft.sources.Tables
   *    recall, never correctness: every stored code is exact w.r.t. the
   *    codebook it was assigned against) and the codebook/meta stay
   *    untouched;
-  *  - past [[SimilarityQueries.KmRetrainGrowthKey]] corpus growth since
+  *  - past 50% corpus growth ([[Drift]]) since
   *    the training snapshot, the next append retrains the whole family —
   *    and append-then-retrain equals a fresh full rebuild bit-for-bit
   *    (deterministic per-subspace Lloyd: lowest-id init unchanged under
