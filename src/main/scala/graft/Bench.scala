@@ -47,15 +47,7 @@ object Bench {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.adaptive.enabled", "true")
-      // AQE coalescing posture, A/B-measured in round 14: size-targeted
-      // coalescing (parallelismFirst=false, the guide-§2.2 big-cluster
-      // posture) collapses this workload's byte-tiny but row-heavy
-      // shuffles to single tasks — a 24-query probe ran 32.9 s (default)
-      // vs 69.5 s (false) at sf0.1/cpus=32 — so the parallelism-first
-      // DEFAULT is kept deliberately; the env knob preserves the
-      // experiment (driver never sets it)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true"))
+      // AQE parallelismFirst stays at Spark's default: false was 2.1x slower (round 14 A/B)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // the hygiene sweep below unpersists each query's one-shot
@@ -76,12 +68,11 @@ object Bench {
       case e: Throwable =>
         errors("_warm") = e.toString.replaceAll("[\"\\\\\\p{Cntrl}]", " ").take(200)
     }
-    // profiling aid: SPARK_GRAFT_BENCH_ONLY=<substring[,substring...]> runs a
+    // profiling aid: SPARK_GRAFT_BENCH_ONLY=<prefix[,prefix...]> runs a
     // subset under otherwise-identical conditions (warm caches, shared
     // session). The driver never sets it, so the contract is unchanged.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(',').toSeq)
     val named = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.exists(name.contains)) }
+      .filter(kv => SparkEntry.selects(sys.env.get("SPARK_GRAFT_BENCH_ONLY"))(kv._1))
     // INTERLEAVED protocol (round 7): round-robin the whole surface once
     // per pass instead of running each query's reps back-to-back. Ambient
     // box load drifts on the minutes scale, so back-to-back reps hand one

@@ -47,7 +47,6 @@ object Scaling {
       .split(',').toSeq.sortBy(sfOf)
     val reps = sys.env.getOrElse("SPARK_GRAFT_SCALING_REPS", "3").toInt
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val only = sys.env.get("SPARK_GRAFT_SCALING_ONLY").map(_.split(',').toSeq)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -78,7 +77,7 @@ object Scaling {
       // own index copies
       val pinned = spark.sparkContext.getPersistentRDDs.keySet
       SparkEntry.queries.toSeq.sortBy(_._1)
-        .filter { case (name, _) => only.forall(_.exists(name.contains)) }
+        .filter(kv => SparkEntry.selects(sys.env.get("SPARK_GRAFT_SCALING_ONLY"))(kv._1))
         .foreach { case (name, fn) =>
           val times = (1 to reps).flatMap { _ =>
             val t0 = System.nanoTime()

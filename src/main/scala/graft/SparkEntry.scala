@@ -32,6 +32,13 @@ object SparkEntry {
       MultimodalQueries.oracleSql ++ AsOfQueries.oracleSql ++ SessionQueries.oracleSql ++
       ReachabilityQueries.oracleSql ++ GraphMetricsQueries.oracleSql ++ PipelineQueries.oracleSql
 
+  /** Whether `only`, a comma-separated list of query-name prefixes (None:
+    * every query), selects query `name` — the subset selector of the
+    * Bench, Verify and Scaling mains. By prefix, so `ss` is the ss family
+    * and not a02_sessionize. */
+  def selects(only: Option[String])(name: String): Boolean =
+    only.forall(_.split(',').exists(name.startsWith))
+
   /** SAMPLED oracle variants (spark-side filter SQL, sampled oracle SQL)
     * for cells whose full brute-force oracle outgrows a single node at the
     * sf1 rung — see [[graft.operators.SimilarityQueries.oracleSqlSampled]].

@@ -18,10 +18,9 @@ object Verify {
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // iteration aid mirroring Bench's SPARK_GRAFT_BENCH_ONLY: dump (and list
-    // in oracle_sql.json) only queries whose name contains a given substring.
+    // in oracle_sql.json) only queries whose name starts with a given prefix.
     // The driver never sets it, so the contract is unchanged.
-    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY").map(_.split(',').toSeq)
-    def selected(name: String) = only.forall(_.exists(name.contains))
+    val selected = SparkEntry.selects(sys.env.get("SPARK_GRAFT_VERIFY_ONLY")) _
     // Failure contract (round-8 lesson): a query that throws must NEVER
     // vanish from the correctness artifact. The driver compares whatever
     // parquet exists under outDir, so an omitted directory silently shrinks

@@ -5,10 +5,10 @@ package graft.build
   * append/replace path, the batch entry points, the bench, and the specs.
   * The per-document tables among them are declared once more, with their
   * upstream and derivation, in the `graft.operators.DocIndex` registry,
-  * and the vector-side tables, with their quantizers, in the
-  * `graft.operators.VecIndex` registry; each registry derives its tables'
-  * build, read, append, delete and compaction paths. The dup pair/cluster
-  * tables are maintained by hand-written steps.
+  * the dup pair/cluster tables as one of its stateful families
+  * (`graft.operators.DocFamily`), and the vector-side tables, with their
+  * quantizers, in the `graft.operators.VecIndex` registry; each registry
+  * derives its tables' build, read, append, delete and compaction paths.
   * Before this object each site carried its own literal pair, so a version
   * bump in the read path (the documented procedure for layout changes)
   * could leave the write path appending to the retired directory: the

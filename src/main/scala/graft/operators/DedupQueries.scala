@@ -68,30 +68,15 @@ object DedupQueries {
     "dd21_prefix_profile" -> dd21,
     "dd22_pair_profile" -> dd22)
 
-  /** Force at-rest index materialization (ingest-time cost, untimed in Bench). */
+  /** Force at-rest index materialization (ingest-time cost, untimed in
+    * Bench): the day-0 build over the corpus — every document table, the
+    * two stats rows (so route selection in the timed reps is a constant
+    * read) and, on a saturation-profile corpus, the pair index. */
   def warm(s: SparkSession, d: String): Unit = {
-    shingles(s, d)
-    docMinhash(s, d)
-    minhashBands(s, d)
-    docFp(s, d)
-    docSizes(s, d)
-    dupPairs(s, d)
-    dupClusters(s, d)
-    containPrefix(s, d)
+    DocIndex.build(s, d, Tables.documents(s, d))
     // memoize the control-gate count here (ingest-time, untimed) so dd2's
     // first timed rep doesn't carry the guard's count() job
     Controls.gate(shingles(s, d), "dd2_ngram_jaccard", d)
-    windows(s, d)
-    // the SimHash index + the two one-row stats meta tables (built-if-
-    // absent; refreshed only by mutations), so route selection in the
-    // timed reps is a constant read
-    simHashes(s, d)
-    DerivedCache.table(s, d, SimStatsTable)(simStatsRowsOf(s, d))
-    DerivedCache.table(s, d, PrefixStatsTable)(statsRowsOf(s, d))
-    // saturation-profile corpora additionally provision the pair index and
-    // memoize the route pre-flights, so the first timed containment rep
-    // reads at-rest state instead of paying the escalation build
-    providePairIndexIfSaturated(s, d)
     ()
   }
 
@@ -711,19 +696,7 @@ object DedupQueries {
         coalesce(sum($"occ"), lit(0L)).as("n_band_rows"))
   }
 
-  private[operators] def refreshSimStats(s: SparkSession, d: String): Unit = {
-    if (DerivedCache.isBuilt(s, d, SimStatsTable))
-      DerivedCache.replace(s, d, SimStatsTable)(simStatsRowsOf(s, d))
-    else buildSimStats(s, d)
-  }
-
-  /** Build-if-absent materialization of the SimHash stats meta — the
-    * [[Ingest.buildDocumentIndexes]] / warm hook (refreshes are mutations'
-    * job; a build must not bump the mutation epoch on a warm corpus). */
-  private[operators] def buildSimStats(s: SparkSession, d: String): Unit = {
-    DerivedCache.table(s, d, SimStatsTable)(simStatsRowsOf(s, d))
-    ()
-  }
+  private[operators] val simStats = StatsRow(SimStatsTable, simStatsRowsOf)
 
   private def dd4(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
@@ -734,7 +707,7 @@ object DedupQueries {
     // costs a one-row read instead of a corpus aggregation; memoized per
     // mutation epoch like every planning probe
     val single = simhashSingleBands(hashed)
-    def stats = DerivedCache.table(s, d, SimStatsTable)(simStatsRowsOf(s, d)).head
+    def stats = simStats.read(s, d).head
     val mSingle = EpochMemo.scalar(s, "mass1:dd4_simhash", d)(stats.getLong(0))
     val nBandRows = EpochMemo.scalar(s, "bandrows:dd4_simhash", d)(stats.getLong(1))
     val fanoutMax = Conf.double(s, Controls.SimhashEscalateKey, Controls.SimhashEscalateDefault)
@@ -939,7 +912,7 @@ object DedupQueries {
 
   /** At-rest shingle-pair posting index — built lazily on the FIRST
     * escalated containment query (or eagerly by
-    * [[providePairIndexIfSaturated]] at ingest when the corpus profile
+    * [[buildPrefix]] at ingest when the corpus profile
     * already shows saturation), then maintained like every other
     * per-document index. */
   private[graft] def docPairs(s: SparkSession, d: String): DataFrame = DocIndex.Pairs.read(s, d)
@@ -979,26 +952,9 @@ object DedupQueries {
         count(lit(1)).as("n_core_rows"))
   }
 
-  /** Refresh the stats meta row from the current indexes — called at the
-    * END of every shingle/prefix-family mutation, inside the same epoch. */
-  private def refreshStats(s: SparkSession, d: String): Unit = {
-    if (DerivedCache.isBuilt(s, d, PrefixStatsTable))
-      DerivedCache.replace(s, d, PrefixStatsTable)(statsRowsOf(s, d))
-    else {
-      DerivedCache.table(s, d, PrefixStatsTable)(statsRowsOf(s, d))
-      ()
-    }
-  }
-
-  /** Eager prefix-family build — the [[Ingest.buildDocumentIndexes]] hook
-    * that makes the snapshot point ingest-time, not first-query-time.
-    * Build-if-absent for the stats meta (mutations refresh it; a repeat
-    * build on a warm corpus must stay a no-op and not bump the epoch). */
-  private[operators] def buildPrefixIndex(s: SparkSession, d: String): Unit = {
-    containPrefix(s, d)
-    DerivedCache.table(s, d, PrefixStatsTable)(statsRowsOf(s, d))
-    ()
-  }
+  /** The stats row, refreshed at the END of every shingle/prefix-family
+    * mutation, inside the same epoch. */
+  private[operators] val containStats = StatsRow(PrefixStatsTable, statsRowsOf)
 
   /** Maintain the prefix index under a batch append: rank the BATCH's
     * shingles against the FROZEN df snapshot and append — per-batch cost
@@ -1006,12 +962,12 @@ object DedupQueries {
     * unconditionally (see [[prefixRowsOf]]); what drifts is fan-out — a
     * prefix shingle's true df exceeds its snapshot rank by at most the
     * number of documents appended since the snapshot, so once the corpus
-    * drifts past the snapshot's size ([[Drift]]: by half) the next append
-    * triggers [[rerankPrefix]] to restore rarity-minimal prefixes. No-op
-    * when the prefix family was never built: a later lazy build snapshots
-    * base ∪ batch wholesale, so query results are batch-inclusive either
-    * way (the pre-round-7 lazy build made them timing-dependent). Runs
-    * after the batch's shingle and size appends. */
+    * drifts past the snapshot's size ([[Drift]]: by half) the append that
+    * crosses it runs [[rerankPrefix]] instead, restoring rarity-minimal
+    * prefixes. No-op when the prefix family was never built: a later lazy
+    * build snapshots base ∪ batch wholesale, so query results are
+    * batch-inclusive either way (the pre-round-7 lazy build made them
+    * timing-dependent). Runs after the batch's shingle and size appends. */
   private[operators] def appendPrefix(s: SparkSession, d: String, batchShingles: DataFrame): Unit =
     maintainPrefix(s, d) {
       DerivedCache.append(s, d, PrefixTable)(
@@ -1021,22 +977,26 @@ object DedupQueries {
   /** The delete mirror of [[appendPrefix]]: purge the deleted documents'
     * prefix rows under the FROZEN ranks — correctness is rank-independent
     * ([[prefixRowsOf]]): stale ranks cost join width, never a missed pair
-    * — and re-rank once the corpus SHRINKS past the same [[Drift]] rule
-    * growth re-ranks at. Runs after the shingle and size purges. */
+    * — or re-rank instead once the corpus SHRINKS past the same [[Drift]]
+    * rule growth re-ranks at. Runs after the shingle and size purges. */
   private[operators] def deletePrefix(s: SparkSession, d: String, ids: DataFrame): Unit =
     maintainPrefix(s, d) {
       DerivedCache.purge(s, d, PrefixTable, ids, "d1")
     }
 
-  /** `update` the prefix rows when the family is built, then re-rank if
-    * the size table has drifted ([[Drift]]) from the snapshot's corpus
-    * size, else refresh the stats row. */
+  /** When the family is built: re-rank if the size table (already
+    * mutated) has drifted ([[Drift]]) from the snapshot's corpus size —
+    * the re-rank replaces the prefix rows wholesale, so they are never
+    * updated first — else `update` the prefix rows and refresh the stats
+    * row. */
   private def maintainPrefix(s: SparkSession, d: String)(update: => Unit): Unit =
     if (DerivedCache.isBuilt(s, d, PrefixTable)) {
-      update
       val atRank = DerivedCache.existing(s, d, PrefixMetaTable).head.getLong(0)
       if (Drift.past(atRank, docSizes(s, d).count())) rerankPrefix(s, d)
-      else refreshStats(s, d) // rerankPrefix refreshed already
+      else {
+        update
+        containStats.refresh(s, d)
+      }
     }
 
   /** Full re-rank of the prefix family from the CURRENT shingle index —
@@ -1051,7 +1011,7 @@ object DedupQueries {
       docSizes(s, d).agg(count(lit(1)).as("n_docs")))
     DerivedCache.replace(s, d, PrefixTable)(
       prefixRowsOf(sh, DerivedCache.existing(s, d, PrefixDfTable)))
-    refreshStats(s, d)
+    containStats.refresh(s, d)
   }
 
   /** The shared containment pipeline behind dd7 (whole corpus) and dd10
@@ -1098,7 +1058,7 @@ object DedupQueries {
       d1Pred: Column, d2Pred: Column, wholeCorpus: Boolean = false): (Long, Long) = {
     import s.implicits._
     if (wholeCorpus) {
-      def stats = DerivedCache.table(s, d, PrefixStatsTable)(statsRowsOf(s, d)).head
+      def stats = containStats.read(s, d).head
       val m1 = EpochMemo.scalar(s, s"mass1:$what", d)(stats.getLong(0))
       val nPrefixRows = EpochMemo.scalar(s, s"prefrows:$what", d)(stats.getLong(1))
       return (m1, nPrefixRows)
@@ -1122,21 +1082,21 @@ object DedupQueries {
     (m1, nPrefixRows)
   }
 
-  /** Ingest-time escalation provisioning: if the corpus profile already
-    * shows single-witness saturation for the whole-corpus containment
-    * query (dd7's fan-out past [[Controls.EscalateFanoutKey]]), build the
-    * pair index NOW — at the same pinned snapshot point as the prefix
-    * family — so the first escalated query reads an at-rest index instead
-    * of paying the build. Shares dd7's memoized pre-flight scalars. */
-  private[operators] def providePairIndexIfSaturated(s: SparkSession, d: String): Unit = {
-    import s.implicits._
+  /** Eager prefix-family build — the [[DocFamily.Prefix]] build step that
+    * makes the snapshot point ingest-time, not first-query-time — then
+    * the escalation provisioning: if the corpus profile already shows
+    * single-witness saturation for the whole-corpus containment query
+    * (dd7's fan-out past [[Controls.EscalateFanoutKey]]), build the pair
+    * index NOW, at the same pinned snapshot point, so the first escalated
+    * query reads an at-rest index instead of paying the build. Shares
+    * dd7's memoized pre-flight scalars. */
+  private[operators] def buildPrefix(s: SparkSession, d: String): Unit = {
+    containPrefix(s, d)
+    containStats.read(s, d)
     val (m1, rows) = singlePreflight(s, d, "dd7_prefix_containment",
       lit(true), lit(true), wholeCorpus = true)
     val fanoutMax = Conf.double(s, Controls.EscalateFanoutKey, Controls.EscalateFanoutDefault)
-    if (m1 > fanoutMax * math.max(rows, 1L)) {
-      docPairs(s, d)
-      ()
-    }
+    if (m1 > fanoutMax * math.max(rows, 1L)) { docPairs(s, d); () }
   }
 
   private[operators] def containmentPairs(s: SparkSession, d: String,
@@ -1336,17 +1296,23 @@ object DedupQueries {
     * INCREMENTALLY ([[appendDupClusters]]). cluster_id = the component's
     * smallest doc id, exactly dd6's labeling. */
   def dupClusters(s: SparkSession, d: String): DataFrame =
+    clusterTable(s, d, Tables.documents(s, d))
+
+  /** The at-rest cluster table, built when absent by labeling the
+    * documents `docs` over the at-rest pair graph — the lazy read above
+    * and the day-0 build ([[DocFamily.Dups]]) share it. */
+  private[operators] def clusterTable(s: SparkSession, d: String, docs: DataFrame): DataFrame =
     DerivedCache.table(s, d, DocTables.DupClusters) {
-      import s.implicits._
-      clusterRowsOf(Tables.documents(s, d).select($"doc_id"), dupPairs(s, d))
+      clusterRowsOf(docs.select(col("doc_id")), dupPairs(s, d))
         .withColumnRenamed("label", "cluster_id")
     }
 
   /** Incremental CLUSTER maintenance — the cross-document index the
     * round-6 append path deliberately left on periodic rebuild, now
     * maintained exactly under appends via graph CONTRACTION. On a batch
-    * ingest (call AFTER [[DocIndex.append]], so the per-document indexes
-    * include the batch; the cluster table must not yet):
+    * ingest (run AFTER the batch's shingle, band, fingerprint and size
+    * appends — [[DocFamily.Dups]] — so those indexes include the batch;
+    * the cluster table must not yet):
     *
     *  1. verified pairs touching the batch only: batch bands probe the full
     *     band index (batch×corpus ∪ batch×batch candidates — corpus×corpus

@@ -2,75 +2,38 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.build.{DerivedCache, DocTables, Par}
+import graft.build.{DerivedCache, Par}
 
-/** The document-ingest entry points. The per-document indexes come from
-  * ONE declared list ([[DocIndex]]); this object adds the stateful
-  * families around them, so the bench, the specs, and a library user
-  * can't drift on which tables a batch ingest maintains.
+/** The document-ingest entry points. Every at-rest document table — the
+  * per-document indexes and the stateful families (prefix ranks and
+  * stats, SimHash stats, dup pairs and clusters, packing offsets) — comes
+  * from ONE declared schedule ([[DocIndex]]), so the bench, the specs, and
+  * a library user can't drift on which tables a batch ingest maintains.
   *
   *  - [[buildDocumentIndexes]]: day-0 (or periodic-rebuild) materialization
-  *    of every per-document index plus the pair graph and cluster table,
   *    over an explicit documents frame under an explicit corpus key.
-  *  - [[appendDocumentBatch]]: the daily path — the registry's
-  *    per-document appends followed by the incremental pair-graph/cluster
-  *    fold (`DedupQueries.appendDupClusters`).
+  *  - [[appendDocumentBatch]]: the daily path.
+  *  - [[deleteDocumentBatch]]: its mirror.
   */
 object Ingest {
 
-  /** Build every at-rest document index over `docs` under corpus key `d`.
-    * Idempotent per table ([[DerivedCache.table]] markers). The pair graph,
-    * the prefix family and the packing offsets follow the per-document
-    * build: they read the band, fingerprint, shingle and size tables. */
-  def buildDocumentIndexes(s: SparkSession, d: String, docs: DataFrame): Unit = {
-    import s.implicits._
+  /** Build every at-rest document table over `docs` under corpus key `d`.
+    * Idempotent per table ([[DerivedCache.table]] markers). */
+  def buildDocumentIndexes(s: SparkSession, d: String, docs: DataFrame): Unit =
     DocIndex.build(s, d, docs)
-    Par.run(Seq(
-      () => {
-        DerivedCache.table(s, d, DocTables.DupClusters)(
-          DedupQueries.clusterRowsOf(docs.select($"doc_id"), DedupQueries.dupPairs(s, d))
-            .withColumnRenamed("label", "cluster_id"))
-        ()
-      },
-      () => {
-        // the containment-prefix family (it reads the shingle + size
-        // tables): building it HERE pins its df snapshot to ingest time, so
-        // an appended corpus can never see a timing-dependent prefix state —
-        // buildPrefixIndex also materializes the containment stats meta
-        DedupQueries.buildPrefixIndex(s, d)
-        DedupQueries.buildSimStats(s, d)
-        // escalation provisioning: on a saturation-profile corpus, build
-        // the shingle-pair index at the same snapshot point (no-op
-        // otherwise)
-        DedupQueries.providePairIndexIfSaturated(s, d)
-      },
-      () => PipelineQueries.buildOffsets(s, d, docs)))
-    ()
-  }
 
-  /** Fold a NEW document batch into every at-rest index — the daily ingest.
-    * Caller contract: batch doc_ids must not already be indexed. The
-    * prefix family follows the shingle and size appends (its re-rank
-    * trigger counts the size table), the SimHash stats follow the SimHash
-    * append, and the pair-graph/cluster fold follows every per-document
-    * append: it reads the batch rows back OUT of the band / shingle /
-    * fingerprint indexes. Ends with the compaction sweep
-    * ([[compactIfNeeded]]) so file counts are bounded by policy, not by
-    * how long the append cadence has been running. */
+  /** Fold a NEW document batch into every at-rest table — the daily ingest.
+    * Caller contract: batch doc_ids must not already be indexed. Ends with
+    * the compaction sweep ([[compactIfNeeded]]) so file counts are bounded
+    * by policy, not by how long the append cadence has been running. */
   def appendDocumentBatch(s: SparkSession, d: String, batch: DataFrame): Unit = {
-    DocIndex.append(s, d, batch,
-      alongside = Seq(() => PipelineQueries.appendOffsets(s, d, batch)),
-      after = {
-        case DocIndex.Sizes => batchShingles => DedupQueries.appendPrefix(s, d, batchShingles)
-        case DocIndex.Sim => _ => DedupQueries.refreshSimStats(s, d)
-      })
-    DedupQueries.appendDupClusters(s, d, batch)
+    DocIndex.append(s, d, batch)
     compactIfNeeded(s, d)
     ()
   }
 
   /** Delete a batch of previously-ingested documents from every at-rest
-    * document index — the right-to-be-forgotten path every large training
+    * document table — the right-to-be-forgotten path every large training
     * pipeline eventually runs (user opt-outs, licensing takedowns),
     * mirroring [[appendDocumentBatch]] step for step. Caller contract: the
     * batch rows are the ORIGINAL ingested rows (doc_id + text) — the text
@@ -88,30 +51,17 @@ object Ingest {
     * frozen-until-drift discipline every trained artifact here follows
     * (prefix ranks, k-means centroids, BPE merges). */
   def deleteDocumentBatch(s: SparkSession, d: String, batch: DataFrame): Unit = {
-    val ids = batch.select("doc_id")
-    DocIndex.delete(s, d, batch,
-      alongside = Seq(() => PipelineQueries.deleteOffsets(s, d, ids)),
-      after = {
-        case DocIndex.Sizes => deleted => DedupQueries.deletePrefix(s, d, deleted)
-        case DocIndex.Sim => _ => DedupQueries.refreshSimStats(s, d)
-      })
-    DedupQueries.deleteDupClusters(s, d, ids)
+    DocIndex.delete(s, d, batch)
     compactIfNeeded(s, d)
     ()
   }
 
   /** Every at-rest table the document-batch path maintains — the
-    * compaction sweep's worklist: the registry's tables plus the stateful
-    * ones (replace-maintained tables are listed too: replace rewrites
+    * compaction sweep's worklist, derived from the schedule
+    * (replace-maintained tables are listed too: replace rewrites
     * wholesale so they rarely trip the threshold, and listing them keeps
     * the policy exhaustive by construction). */
-  private[graft] def maintainedDocTables: Seq[(String, Int)] =
-    DocIndex.all.map(_.id) ++ Seq(
-      DocTables.DupPairs, DocTables.DupClusters,
-      DedupQueries.PrefixTable, DedupQueries.PrefixDfTable,
-      DedupQueries.PrefixMetaTable, DedupQueries.SimStatsTable,
-      DedupQueries.PrefixStatsTable,
-      PipelineQueries.OffsetsTable, PipelineQueries.OffsetsMetaTable)
+  private[graft] def maintainedDocTables: Seq[(String, Int)] = DocIndex.tables
 
   /** Data-file ceiling per maintained table before the ingest path compacts
     * it. Each daily append adds one parquet file group per index, so a year
@@ -128,9 +78,8 @@ object Ingest {
     * count exceeds the configured ceiling. Content-neutral (compact is a
     * staged replace of the table's own scan). Returns the names compacted
     * — empty when nothing tripped the threshold. */
-  def compactIfNeeded(s: SparkSession, d: String): Seq[String] = {
+  def compactIfNeeded(s: SparkSession, d: String): Seq[String] =
     compactTables(s, d, maintainedDocTables)
-  }
 
   /** The sweep itself, over an explicit worklist — shared with the
     * vector-side append path ([[SimilarityQueries.appendEmbeddings]]), so

@@ -344,13 +344,21 @@ object PipelineQueries {
     * themselves (last doc's end == corpus token total), so the two tables
     * cannot disagree. */
   def buildOffsets(s: SparkSession, d: String, docs: DataFrame): DataFrame = {
-    import s.implicits._
     val rows = DerivedCache.table(s, d, OffsetsTable)(offsetRowsOf(docs))
-    DerivedCache.table(s, d, OffsetsMetaTable)(
-      rows.agg(
-        coalesce(max($"start_off" + $"n_tokens"), lit(0L)).as("total_tokens"),
-        coalesce(max($"doc_id"), lit(-1L)).as("max_doc_id")))
+    DerivedCache.table(s, d, OffsetsMetaTable)(offsetsMetaOf(rows))
     rows
+  }
+
+  /** The meta row (total_tokens, max_doc_id) of a set of offset rows. */
+  private def offsetsMetaOf(rows: DataFrame): DataFrame = rows.agg(
+    coalesce(max(col("start_off") + col("n_tokens")), lit(0L)).as("total_tokens"),
+    coalesce(max(col("doc_id")), lit(-1L)).as("max_doc_id"))
+
+  /** Staged-replace the offsets with `rows`, then the meta from them. */
+  private def replaceOffsets(s: SparkSession, d: String, rows: DataFrame): Unit = {
+    DerivedCache.replace(s, d, OffsetsTable)(rows)
+    DerivedCache.replace(s, d, OffsetsMetaTable)(
+      offsetsMetaOf(DerivedCache.existing(s, d, OffsetsTable)))
   }
 
   /** Fold a NEW document batch into the at-rest offsets — the daily path.
@@ -372,26 +380,18 @@ object PipelineQueries {
     import s.implicits._
     val meta = DerivedCache.existing(s, d, OffsetsMetaTable).collect()(0)
     val (total, maxId) = (meta.getLong(0), meta.getLong(1))
-    val bounds = batch.agg(
-      min($"doc_id").as("lo"), max($"doc_id").as("hi"),
-      count(lit(1)).as("n")).collect()(0)
-    if (bounds.getLong(2) == 0L) return
+    val bounds = batch.agg(min($"doc_id").as("lo"), count(lit(1)).as("n")).collect()(0)
+    if (bounds.getLong(1) == 0L) return
     if (bounds.getLong(0) > maxId) {
+      // the batch's rows start at the stored total: their meta is the new one
       val rows = offsetRowsOf(batch, total)
       DerivedCache.append(s, d, OffsetsTable)(rows)
-      val batchTokens = rows.agg(coalesce(sum($"n_tokens"), lit(0L))).collect()(0).getLong(0)
-      DerivedCache.replace(s, d, OffsetsMetaTable)(
-        Seq((total + batchTokens, bounds.getLong(1))).toDF("total_tokens", "max_doc_id"))
+      DerivedCache.replace(s, d, OffsetsMetaTable)(offsetsMetaOf(rows))
     } else {
       val merged = DerivedCache.existing(s, d, OffsetsTable)
         .select($"doc_id", $"n_tokens")
         .unionAll(tokenCountsOf(batch))
-      val rows = prefixRowsOf(merged, 0L)
-      DerivedCache.replace(s, d, OffsetsTable)(rows)
-      DerivedCache.replace(s, d, OffsetsMetaTable)(
-        DerivedCache.existing(s, d, OffsetsTable).agg(
-          coalesce(max($"start_off" + $"n_tokens"), lit(0L)).as("total_tokens"),
-          coalesce(max($"doc_id"), lit(-1L)).as("max_doc_id")))
+      replaceOffsets(s, d, prefixRowsOf(merged, 0L))
     }
   }
 
@@ -407,11 +407,7 @@ object PipelineQueries {
     val remaining = DerivedCache.existing(s, d, OffsetsTable)
       .join(idSet, Seq("doc_id"), "left_anti")
       .select($"doc_id", $"n_tokens")
-    DerivedCache.replace(s, d, OffsetsTable)(prefixRowsOf(remaining, 0L))
-    DerivedCache.replace(s, d, OffsetsMetaTable)(
-      DerivedCache.existing(s, d, OffsetsTable).agg(
-        coalesce(max($"start_off" + $"n_tokens"), lit(0L)).as("total_tokens"),
-        coalesce(max($"doc_id"), lit(-1L)).as("max_doc_id")))
+    replaceOffsets(s, d, prefixRowsOf(remaining, 0L))
   }
 
   /** The at-rest offsets for the driver corpus (lazy day-0 build). */

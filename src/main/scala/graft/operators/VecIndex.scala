@@ -127,16 +127,12 @@ private[operators] object VecIndex {
   /** File-append a batch of NEW vectors to every maintained table. Every
     * quantizer is frozen to the driver BEFORE any append — a lazy plan
     * would list the index files only when the assignment executes, i.e.
-    * after the index append — so the appends touch disjoint tables,
-    * derive only from the batch, and overlap. The index append throws
-    * when the index was never built. */
+    * after the index append — so every append derives only from the
+    * batch. The index append throws when the index was never built. */
   def append(s: SparkSession, d: String, nc: Int, batch: DataFrame): Unit = {
     val kept = all(nc).filter(t => (t eq Index) || DerivedCache.isBuilt(s, d, t.id))
-    val frozen = kept.map(_.quantizer.map(q => local(s, q.read(s, d))).orNull)
-    Par.run(kept.zip(frozen).map { case (t, q) =>
-      () => DerivedCache.append(s, d, t.id)(t.rowsOf(batch, q))
-    })
-    settle(s, d, kept, Nil)
+    val frozen = kept.map(t => t -> t.quantizer.map(q => local(s, q.read(s, d))).orNull).toMap
+    maintain(s, d, kept, Nil)(t => DerivedCache.append(s, d, t.id)(t.rowsOf(batch, frozen(t))))
   }
 
   /** Remove previously-ingested vectors from every maintained table. The
@@ -154,18 +150,23 @@ private[operators] object VecIndex {
         .join(idSet.withColumn("gone", lit(true)), Seq("vec_id"), "left")
         .orderBy(col("vec_id")).select(col("gone").isNotNull).collect().map(_.getBoolean(0))
     val anchored = kept.filter(_.quantizer.exists(q => gone.take(q.anchors).contains(true)))
-    Par.run(kept.filterNot(anchored.contains).map(t =>
-      () => DerivedCache.purge(s, d, t.id, idSet, "vec_id")))
-    settle(s, d, kept, anchored)
+    maintain(s, d, kept, anchored)(t => DerivedCache.purge(s, d, t.id, idSet, "vec_id"))
   }
 
-  /** Retrain `due`, plus every kept table whose trained quantizer has
-    * drifted — the shared last step of append and delete. */
-  private def settle(s: SparkSession, d: String, kept: Seq[VecIndex],
-      due: Seq[VecIndex]): Unit = {
+  /** The shared body of append and delete: `write` every kept table but
+    * `due`, the index and the tables without a trained quantizer first;
+    * then retrain `due` plus every trained table whose quantizer has
+    * drifted from the index's new size, and `write` the rest — a table
+    * the retrain replaces wholesale is never written first. */
+  private def maintain(s: SparkSession, d: String, kept: Seq[VecIndex],
+      due: Seq[VecIndex])(write: VecIndex => Unit): Unit = {
+    val (trained, rest) = kept.filterNot(due.contains)
+      .partition(_.quantizer.exists(_.stored.nonEmpty))
+    Par.run(rest.map(t => () => write(t)))
     lazy val now = DerivedCache.existing(s, d, Index.id).count()
-    val drifted = kept.filter(t => !due.contains(t) && t.quantizer.exists(_.drifted(s, d, now)))
-    Par.run((due ++ drifted).map(t => () => retrain(s, d, t)))
+    val drifted = trained.filter(_.quantizer.exists(_.drifted(s, d, now)))
+    Par.run(trained.filterNot(drifted.contains).map(t => () => write(t)) ++
+      (due ++ drifted).map(t => () => retrain(s, d, t)))
   }
 
   /** Full retrain of one quantized table from the CURRENT at-rest index:

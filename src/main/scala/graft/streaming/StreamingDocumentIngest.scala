@@ -8,13 +8,9 @@ import graft.operators.Ingest
 /** Streaming document-index ingest — the document-side sibling of
   * [[StreamingVectorIngest]], completing the symmetry: each micro-batch of
   * NEW document rows folds through `Ingest.appendDocumentBatch`, the ONE
-  * batch entry point, so every maintained at-rest document table —
-  * shingles, minhash, bands, fingerprints, sizes, windows, postings, the
-  * dup pair graph and cluster labels, the df-ranked containment prefix,
-  * and the ORDER-dependent packing offsets (monotone stream batches take
-  * the cost-∝-batch extend path; an out-of-order backfill batch triggers
-  * the narrow-row re-prefix, exactly as in batch) — stays current under
-  * live arrival, including the compaction sweep at each fold. Day-0
+  * batch entry point, so every table of the declared document schedule
+  * (`graft.operators.DocIndex`) stays current under live arrival,
+  * exactly as in batch, including the compaction sweep at each fold. Day-0
   * contract: the base indexes must exist (`Ingest.buildDocumentIndexes`)
   * before the stream starts. Replay safety is the shared ledger recipe —
   * see [[IdempotentFold]]. */

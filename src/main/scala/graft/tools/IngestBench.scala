@@ -8,7 +8,7 @@ import graft.sources.Tables
 
 /** Measures the incremental-ingest claim instead of asserting it: fold a
   * FIXED-SIZE daily batch into the at-rest document indexes
-  * (`Ingest.appendDocumentBatch`: the registry append + `appendDupClusters`)
+  * (`Ingest.appendDocumentBatch`: every table of the one schedule)
   * at each scale factor, next to the cost of rebuilding every index from
   * scratch over the same final corpus. The correctness side is proven
   * (IncrementalIndexSpec / IncrementalClusterSpec — append == full
@@ -56,11 +56,6 @@ object IngestBench {
     import s.implicits._
     docs.filter($"doc_id" % 10 === 0 && $"doc_id" < 500)
   }
-
-  /** Every at-rest document index the batch ingest maintains, over `docs` —
-    * the one table list, shared with the specs ([[graft.operators.Ingest]]). */
-  private def build(s: SparkSession, key: String, docs: DataFrame): Unit =
-    Ingest.buildDocumentIndexes(s, key, docs)
 
   def main(args: Array[String]): Unit = {
     val sfDirs = if (args.nonEmpty) args.toSeq
@@ -110,10 +105,10 @@ object IngestBench {
       val docs = Tables.documents(spark, dir).select($"doc_id", $"text")
       val batch = batchOf(docs)
       val base = docs.exceptAll(batch)
-      val fullS = median(Seq.fill(reps)(time(build(spark, key(), docs))))
+      val fullS = median(Seq.fill(reps)(time(Ingest.buildDocumentIndexes(spark, key(), docs))))
       val appendS = median(Seq.fill(reps) {
         val k = key()
-        build(spark, k, base) // day-0 base, untimed
+        Ingest.buildDocumentIndexes(spark, k, base) // day-0 base, untimed
         time(Ingest.appendDocumentBatch(spark, k, batch))
       })
       val sf = dir.split('/').last
@@ -123,7 +118,8 @@ object IngestBench {
     val (ladder, pairLadder, embLadder) =
       try {
         // JIT/stage warm-up, discarded
-        build(spark, key(), Tables.documents(spark, sfDirs.head).select($"doc_id", $"text"))
+        Ingest.buildDocumentIndexes(spark, key(),
+          Tables.documents(spark, sfDirs.head).select($"doc_id", $"text"))
         val docLadder = docLadderOf()
         // pair-index-inclusive ladder (round-13 verdict: the new sh_pairs
         // posting index adds append work IngestBench never measured, and

@@ -34,4 +34,14 @@ class SparkEntrySpec extends AnyFunSuite {
     }
     assert(bad.isEmpty, s"sampled oracles with environment paths: ${bad.keys.toSeq.sorted}")
   }
+
+  test("a subset selector matches query names by prefix") {
+    val names = SparkEntry.queries.keySet
+    def selected(only: String) = names.filter(SparkEntry.selects(Some(only)))
+    val ss = names.filter(_.matches("ss[0-9]+[a-z]?_.*"))
+    assert(ss.nonEmpty && selected("ss") == ss, s"ss selected ${selected("ss")}")
+    assert(selected("dd7") == Set("dd7_prefix_containment"))
+    assert(selected("dd7,ss1_") == Set("dd7_prefix_containment", "ss1_cosine_topk"))
+    assert(names.filter(SparkEntry.selects(None)) == names)
+  }
 }

@@ -65,4 +65,23 @@ class CompactionPolicySpec extends SparkSpec {
     assert(tight < loose,
       s"the in-append sweep must bound fragmentation: policy=$tight, none=$loose")
   }
+
+  test("the worklist is every document table, and the day-0 build writes all but sh_pairs") {
+    // written out, not derived: a table the schedule silently lost would
+    // drop out of every spec that iterates the worklist
+    val expected = Set(
+      "doc_shingles" -> 1, "doc_minhash" -> 1, "doc_mh_bands" -> 1, "doc_sizes" -> 1,
+      "sh_pairs" -> 1, "sh_sim" -> 1, "doc_fp" -> 1, "doc_windows" -> 1,
+      "doc_postings" -> 1, "doc_cms" -> 1, "media_fp" -> 4,
+      "sh_prefix_c9_10" -> 3, "sh_df" -> 1, "sh_df_meta" -> 1, "sh_stats" -> 1,
+      "sim_stats" -> 1, "dup_pairs" -> 1, "dup_clusters" -> 1,
+      "doc_offsets" -> 1, "doc_offsets_meta" -> 1)
+    assert(Ingest.maintainedDocTables.toSet == expected)
+    assert(Ingest.maintainedDocTables.size == expected.size, "no table may be listed twice")
+    val d = s"/compact-worklist/${java.util.UUID.randomUUID()}"
+    Ingest.buildDocumentIndexes(spark, d, docs)
+    val unbuilt = Ingest.maintainedDocTables.filterNot(DerivedCache.isBuilt(spark, d, _))
+    // the pair index is built on demand (saturated corpora only)
+    assert(unbuilt == Seq("sh_pairs" -> 1))
+  }
 }
