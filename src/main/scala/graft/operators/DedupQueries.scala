@@ -1252,11 +1252,10 @@ object DedupQueries {
     * [[appendDupClusters]] ([[Fixpoint.propagateMin]]).
     *
     * PRECONDITION: `nodes` must cover every pair endpoint (every call site
-    * passes the full corpus or the contracted component set). The folded
-    * init derives each node's round-1 label directly, so an endpoint
-    * MISSING from `nodes` would join the state only when a frontier
-    * neighbor reaches it — same labels when it does, but an endpoint whose
-    * every neighbor is already settled would never enter at all. */
+    * passes the full corpus or the contracted component set), so the
+    * output has exactly one row per node. The folded init labels every
+    * pair endpoint as well, so an endpoint MISSING from `nodes` would come
+    * out as an extra row. */
   private[graft] def clusterRowsOf(nodes: DataFrame, pairs: DataFrame,
       what: String = "dup-cluster labeling"): DataFrame = {
     val s = nodes.sparkSession
@@ -1265,18 +1264,15 @@ object DedupQueries {
       .unionAll(pairs.select($"d2".as("src"), $"d1".as("dst")))
       .localCheckpoint(eager = false)
     // round 1 folded into init: from self-labels it is min(self, min over
-    // pair neighbors) — one broadcast left-join of the corpus-sized node set
-    // against the tiny per-endpoint neighbor-min aggregate. Most nodes have
-    // NO pairs, so the loop starts with the frontier collapsed to the
-    // paired tail.
-    val bmin = und.groupBy($"dst").agg(min($"src").as("nmin"))
-    val init = nodes.select($"doc_id")
-      .join(broadcast(bmin), $"doc_id" === $"dst", "left")
-      .select($"doc_id",
-        least($"doc_id", coalesce($"nmin", $"doc_id")).as("label"),
-        ($"nmin".isNotNull && $"nmin" < $"doc_id").as("imp"))
+    // pair neighbors) — one aggregate over the self-labels and the
+    // neighbor rows. Most nodes have NO pairs, so the loop starts with the
+    // frontier collapsed to the paired tail.
+    val init = nodes.select($"doc_id", $"doc_id".as("label"))
+      .unionAll(und.select($"dst".as("doc_id"), $"src".as("label")))
+      .groupBy($"doc_id").agg(min($"label").as("label"))
+      .select($"doc_id", $"label", ($"label" < $"doc_id").as("imp"))
     Fixpoint.propagateMin(init, und, Seq("doc_id"), "label", $"label",
-      MaxClusterRounds, what, oneAction = false, hops = 1)
+      MaxClusterRounds, what)
       .select($"doc_id", $"label")
   }
 

@@ -21,26 +21,13 @@ import org.apache.spark.sql.functions._
   *  - a round cap that FAILS LOUDLY, naming the loop — a silently truncated
   *    fixpoint is a plausible-looking wrong answer.
   *
-  * `oneAction`: under AQE, every lazy `localCheckpoint`'s `toRdd` runs the
-  * round plan's shuffle stages as separate driver-synchronous jobs BEFORE
-  * the signature aggregate runs the final stage. A loop whose step joins
-  * all carry explicit modes (`broadcast`/`shuffle_hash` hints, as
-  * [[propagateMin]]'s do) can set `oneAction = true`: AQE is off for the
-  * loop region only, `toRdd` becomes lazy, and the signature collect is
-  * the round's single job. Loop shuffles then lose AQE's coalescing, so
-  * their width follows the state row count (the signature's FIRST entry):
-  * one partition per [[RowsPerPartition]] rows, clamped to the session
-  * width. Results are unaffected (AQE is a physical-planning feature); the
-  * session conf is restored in a finally. Measured per loop (round-15 A/B):
-  * it wins for g01/g03/g10 and loses for g02/g13/dd6, whose merge wants
-  * AQE's coalescing more than it wants fewer jobs. Safe because queries
-  * are driven single-threaded; a concurrent caller would at worst plan one
-  * query without AQE. */
+  * Every round runs one hop under the caller's own session settings; no
+  * loop writes session conf. Under AQE each lazy `localCheckpoint`'s
+  * `toRdd` runs the round plan's shuffle stages as their own jobs before
+  * the signature aggregate runs the final stage, so a round costs its
+  * stage jobs plus the signature job — the price of AQE's coalescing and
+  * runtime join choices, which the merge aggregates want. */
 private[operators] object Fixpoint {
-
-  /** Loop-shuffle partition size under `oneAction`, in state rows (sized
-    * for the narrow ≤32-byte state rows of these loops). */
-  private val RowsPerPartition = 100000L
 
   /** Frontiers at or below this size (and the [[Guard]] ceiling) skip the
     * join: the (key → value) pairs fold into LITERALS — an `isin` pushed
@@ -52,52 +39,22 @@ private[operators] object Fixpoint {
   def iterate(init: DataFrame, cap: Int, what: String)(
       signature: DataFrame => Seq[Long])(
       step: (DataFrame, Seq[Long]) => DataFrame,
-      fixedAt: Seq[Long] => Boolean = _ => false,
-      oneAction: Boolean = false): DataFrame = {
-    val t0 = System.nanoTime()
-    val s = init.sparkSession
-    val stats = sys.env.contains("SPARK_GRAFT_LOOP_STATS")
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val partsKey = "spark.sql.shuffle.partitions"
-    val prevAqe = s.conf.get(aqeKey, "true")
-    val prevParts = s.conf.get(partsKey)
-    val flipAqe = oneAction && prevAqe == "true"
-    def loopWidth(n: Long): Int = math.max(1L,
-      math.min(prevParts.toLong, (n + RowsPerPartition - 1) / RowsPerPartition)).toInt
-    if (flipAqe) s.conf.set(aqeKey, "false")
-    try {
-      var state = init.localCheckpoint(eager = false)
-      var sig = signature(state)
-      var round = 0
-      var changed = !fixedAt(sig)
-      while (changed && round < cap) {
-        val tr = System.nanoTime()
-        if (flipAqe) s.conf.set(partsKey, loopWidth(sig.head).toString)
-        val next = step(state, sig).localCheckpoint(eager = false)
-        val tc = System.nanoTime()
-        val nextSig = signature(next)
-        changed = nextSig != sig && !fixedAt(nextSig)
-        sig = nextSig
-        state = next
-        round += 1
-        if (stats) System.err.println(
-          f"[fixpoint]   $what%s round $round: ckpt ${(tc - tr) / 1e9}%.3f s + " +
-            f"sig ${(System.nanoTime() - tc) / 1e9}%.3f s, sig=$sig")
-      }
-      if (changed) throw new IllegalStateException(
-        s"$what did not converge within $cap rounds; raise the cap")
-      // one stderr line per loop execution, never on stdout (the Bench
-      // JSON contract owns stdout)
-      if (stats) System.err.println(
-        f"[fixpoint] $what%s: $round rounds, ${(System.nanoTime() - t0) / 1e9}%.3f s" +
-          (if (flipAqe) " (oneAction)" else ""))
-      state
-    } finally {
-      if (flipAqe) {
-        s.conf.set(aqeKey, prevAqe)
-        s.conf.set(partsKey, prevParts)
-      }
+      fixedAt: Seq[Long] => Boolean = _ => false): DataFrame = {
+    var state = init.localCheckpoint(eager = false)
+    var sig = signature(state)
+    var round = 0
+    var changed = !fixedAt(sig)
+    while (changed && round < cap) {
+      val next = step(state, sig).localCheckpoint(eager = false)
+      val nextSig = signature(next)
+      changed = nextSig != sig && !fixedAt(nextSig)
+      sig = nextSig
+      state = next
+      round += 1
     }
+    if (changed) throw new IllegalStateException(
+      s"$what did not converge within $cap rounds; raise the cap")
+    state
   }
 
   /** Frontier min-propagation to the fixpoint: every vertex ends with the
@@ -124,42 +81,12 @@ private[operators] object Fixpoint {
     * empty frontier IS the fixpoint. The frontier join's plan is chosen per
     * round from the signature's counts (Pregelix's sparse-vs-dense message
     * join): literals up to min([[FrontierLiteralMax]], ceiling) frontier
-    * rows when the key is a single column, else [[Guard.sized]].
-    *
-    * `hops` > 1 relaxes that many hops per round, halving (for 2) the fixed
-    * per-round cost on long-diameter graphs while the candidate mass stays
-    * the same: hop k+1 relaxes only hop-k per-key minima that improve the
-    * state (their join operands sized by the state count), and those
-    * minima are marked propagated so they do not re-enter the frontier. */
+    * rows when the key is a single column, else [[Guard.sized]]. */
   def propagateMin(init: DataFrame, edges: DataFrame, keys: Seq[String],
-      value: String, transfer: Column, cap: Int, what: String,
-      oneAction: Boolean, hops: Int): DataFrame = {
+      value: String, transfer: Column, cap: Int, what: String): DataFrame = {
     val parts = keys.init
     val fk = keys.map("_f_" + _)
     val kv = (keys :+ value).map(col)
-    // the frontier side's keys are renamed: state may descend from `edges`
-    // (folded inits), and by-name resolution must stay unambiguous
-    def renamed(df: DataFrame, v: String): DataFrame =
-      df.select(keys.zip(fk).map { case (k, f) => col(k).as(f) } :+ col(value).as(v): _*)
-    def on(pairs: Seq[(String, String)]): Column =
-      pairs.map { case (a, b) => col(a) === col(b) }.reduce(_ && _)
-
-    // one hop from `fr` (keys :+ value) to candidate rows (keys :+ value);
-    // `rows` sizes the frontier operand
-    def relax(fr: DataFrame, rows: Long, literal: Boolean): DataFrame = {
-      val joined =
-        if (literal) {
-          val lits = fr.collect().toSeq
-          edges.filter(col("src").isin(lits.map(_.get(0)): _*))
-            .withColumn(value, element_at(
-              map(lits.flatMap(r => Seq(lit(r.get(0)), lit(r.get(1)))): _*), col("src")))
-        } else {
-          edges.join(Guard.sized(renamed(fr, value), rows),
-            on(parts.zip(fk) :+ ("src" -> fk.last)))
-        }
-      joined.select(parts.map(col) :+ col("dst").as(keys.last) :+ transfer.as(value): _*)
-        .filter(col(value).isNotNull)
-    }
 
     def signature(df: DataFrame): Seq[Long] = {
       val r = df.agg(count(lit(1)), coalesce(sum(col(value)), lit(0L)),
@@ -168,34 +95,32 @@ private[operators] object Fixpoint {
     }
 
     iterate(init, cap, what)(signature)({ (state, sig) =>
-      var fr = state.filter(col("imp")).select(kv: _*)
-      var rows = sig(2)
-      var literal = parts.isEmpty &&
-        rows <= FrontierLiteralMax && Guard.fits(state.sparkSession, rows)
-      // per-key minima of the first hops - 1 hops, snapshotted: each feeds
-      // both the next hop and the merge, computed once
-      val propagated = (1 until hops).map { _ =>
-        val m = relax(fr, rows, literal).groupBy(keys.map(col): _*).agg(min(col(value)).as(value))
-          .localCheckpoint(eager = false)
-        fr = m.join(Guard.sized(renamed(state, "_old"), sig(0)), on(keys.zip(fk)), "left")
-          .filter(col("_old").isNull || col(value) < col("_old"))
-          .select(kv: _*)
-        rows = sig(0)
-        literal = false
-        m
-      }
-      // merge tags: 1 = old state, 2 = last-hop candidate, 3 = already
-      // propagated minimum (non-improving ones are harmless: their merged
-      // value comes from the old state anyway)
-      val tagged = (state.select(kv :+ lit(1).as("_k"): _*) +:
-        propagated.map(_.select(kv :+ lit(3).as("_k"): _*)) :+
-        relax(fr, rows, literal).select(kv :+ lit(2).as("_k"): _*)).reduce(_ unionAll _)
+      val fr = state.filter(col("imp")).select(kv: _*)
+      val rows = sig(2)
+      val joined =
+        if (parts.isEmpty && rows <= FrontierLiteralMax && Guard.fits(state.sparkSession, rows)) {
+          val lits = fr.collect().toSeq
+          edges.filter(col("src").isin(lits.map(_.get(0)): _*))
+            .withColumn(value, element_at(
+              map(lits.flatMap(r => Seq(lit(r.get(0)), lit(r.get(1)))): _*), col("src")))
+        } else {
+          // the frontier side's keys are renamed: state may descend from
+          // `edges` (folded inits), and by-name resolution must stay
+          // unambiguous
+          val on = (parts.zip(fk) :+ ("src" -> fk.last))
+            .map { case (a, b) => col(a) === col(b) }.reduce(_ && _)
+          edges.join(Guard.sized(
+            fr.select(keys.zip(fk).map { case (k, f) => col(k).as(f) } :+ col(value): _*), rows), on)
+        }
+      val cand = joined
+        .select(parts.map(col) :+ col("dst").as(keys.last) :+ transfer.as(value): _*)
+        .filter(col(value).isNotNull)
       val v = col(value)
-      tagged.groupBy(keys.map(col): _*)
-        .agg(min(v).as(value), min(when(col("_k") === 1, v)).as("_old"),
-          min(when(col("_k") === 3, v)).as("_prop"))
-        .select(kv :+ ((col("_old").isNull || v < col("_old")) &&
-          (col("_prop").isNull || v < col("_prop"))).as("imp"): _*)
-    }, fixedAt = _(2) == 0L, oneAction = oneAction)
+      state.select(kv :+ lit(true).as("_old_row"): _*)
+        .unionAll(cand.select(kv :+ lit(false).as("_old_row"): _*))
+        .groupBy(keys.map(col): _*)
+        .agg(min(v).as(value), min(when(col("_old_row"), v)).as("_old"))
+        .select(kv :+ (col("_old").isNull || v < col("_old")).as("imp"): _*)
+    }, fixedAt = _(2) == 0L)
   }
 }

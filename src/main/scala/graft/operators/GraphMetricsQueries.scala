@@ -233,8 +233,6 @@ object GraphMetricsQueries {
       coreDegrees(members)
         .filter($"core_degree" >= CoreK)
         .select($"actor_id")
-    // (oneAction A/B'd round 15: consistently worse — the peel's edge-sized
-    // degree recount wants AQE's coalescing more than it wants fewer jobs)
     })
     coreDegrees(members)
       .select($"actor_id", $"core_degree")
@@ -360,7 +358,7 @@ object GraphMetricsQueries {
         least($"actor_id", $"nmin").as("label"),
         ($"nmin" < $"actor_id").as("imp"))
     val state = Fixpoint.propagateMin(init, und, Seq("actor_id"), "label", $"label",
-      MaxRounds, "component labeling", oneAction = true, hops = 1)
+      MaxRounds, "component labeling")
     state.select($"actor_id", $"label".as("component"))
       .orderBy($"actor_id")
   }
@@ -644,8 +642,7 @@ object GraphMetricsQueries {
         ($"nmin" < $"actor_id").as("imp"))
     val state = Fixpoint.propagateMin(init, und, Seq("dkey", "actor_id"), "label",
       $"label", G10Rounds,
-      "per-day component labeling (deeper than the oracle unroll — raise G10Rounds in code AND oracle)",
-      oneAction = true, hops = 1)
+      "per-day component labeling (deeper than the oracle unroll — raise G10Rounds in code AND oracle)")
     val sizes = state.groupBy($"dkey", $"label").agg(count(lit(1)).as("sz"))
     val comps = sizes.groupBy($"dkey").agg(
       sum($"sz").as("n_actors"),
@@ -743,8 +740,7 @@ object GraphMetricsQueries {
       .localCheckpoint(eager = false)
     val init = Seq((pa1, 0L, true)).toDF("actor_id", "dist", "imp")
     val state = Fixpoint.propagateMin(init, und, Seq("actor_id"), "dist", $"dist" + 1L,
-      BfsCap, "BFS hop propagation (deeper than the oracle bound — raise BfsCap in code AND oracle)",
-      oneAction = false, hops = 1)
+      BfsCap, "BFS hop propagation (deeper than the oracle bound — raise BfsCap in code AND oracle)")
     state.select($"actor_id", $"dist".as("hops")).orderBy($"actor_id")
   }
 

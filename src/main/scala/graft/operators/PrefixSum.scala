@@ -23,10 +23,10 @@ import org.apache.spark.sql.functions._
   *  2. per-bucket sums aggregate map-side onto the bucket layout;
   *  3. ONLY the n/B bucket rows pay an ordered prefix pass (bounded by
   *     construction: even a 10^9-wide value domain is ~250k 24-byte rows
-  *     at the default B — one small task, and B scales it down further);
+  *     at B = 4096 — one small task);
   *  4. each row adds its bucket's exclusive offset (an n/B-row equi-join
-  *     the planner broadcasts at any sane B) to a within-bucket running
-  *     sum windowed BY (parts, bucket).
+  *     the planner broadcasts) to a within-bucket running sum windowed BY
+  *     (parts, bucket).
   *
   * Two keyed shuffles + one bounded pass — no histogram-sized
   * single-partition stage at any scale, and the small passes carry a
@@ -34,11 +34,9 @@ import org.apache.spark.sql.functions._
   * Partition Defined`. */
 private[operators] object PrefixSum {
 
-  /** Histogram buckets per ordered-pass row (session-tunable like
-    * [[PipelineQueries.PackBucketKey]] — B scales the bounded pass and the
-    * join's broadcast side together). */
-  val BucketKey = "spark.graft.ccdf.bucket"
-  private val BucketDefault = 4096L
+  /** B, histogram values per bucket row of the ordered pass (it scales the
+    * bounded pass and the join's broadcast side together). */
+  private val Bucket = 4096L
 
   /** Declared constant partition key for a PROVABLY-BOUNDED
     * single-partition window (a ≤ n/B bucket pass, a post-`limit(K)` rank).
@@ -72,7 +70,6 @@ private[operators] object PrefixSum {
       cumName: String,
       totName: String): (DataFrame, DataFrame) = {
     val s = hist.sparkSession
-    val b = Conf.long(s, BucketKey, BucketDefault)
     val n = s.conf.get("spark.sql.shuffle.partitions").toInt
     val pcols = parts.map(col)
     val keyCols = pcols :+ col("_bucket")
@@ -82,7 +79,7 @@ private[operators] object PrefixSum {
     val notNull = (keyCols :+ col(value) :+ col(weight))
       .map(_.isNotNull).reduce(_ && _)
     val keyed = hist
-      .withColumn("_bucket", expr(s"$value div $b"))
+      .withColumn("_bucket", expr(s"$value div $Bucket"))
       .filter(notNull)
       .repartition(n, keyCols: _*)
     // max(value) is not decorative: without a live reference to the value

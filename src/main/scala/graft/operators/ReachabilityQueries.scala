@@ -125,13 +125,10 @@ object ReachabilityQueries {
     // arrival(start) = -1: the first hop may use any frame; the earliest
     // usable hop per neighbor pair is the first active frame >= the
     // arrival, an alloc-free binary search over the sorted frame array.
-    // Two hops per round: the per-round fixed cost is most of what the
-    // long-diameter tail rounds cost (sf1: 18 one-hop rounds, 9 two-hop).
     val init = Seq((pa1, -1L, true)).toDF("actor_id", "f", "imp")
     val state = Fixpoint.propagateMin(init, adjacency(s, d), Seq("actor_id"), "f",
       graft.functions.ArraySearch.sortedFirstGeq($"fs", $"f"), MaxRounds,
-      "temporal reachability (corpus temporal diameter exceeds the cap)",
-      oneAction = true, hops = 2)
+      "temporal reachability (corpus temporal diameter exceeds the cap)")
     state.filter($"actor_id" =!= pa1)
       .select($"actor_id", $"f".as("first_frame"))
       .orderBy($"actor_id")

@@ -122,7 +122,7 @@ object SimilarityQueries {
     * poisoned by a stray setting. The cell count is part of the at-rest
     * index path ([[ivfIndex]]), so different settings never read each
     * other's layouts. */
-  private[operators] val DefaultCells = 16
+  private[graft] val DefaultCells = 16
   private[operators] val DefaultNProbe = 4
   private def cells(s: SparkSession): Int = Conf.int(s, "spark.graft.ivf.cells", DefaultCells)
   private def nProbe(s: SparkSession): Int = Conf.int(s, "spark.graft.ivf.nprobe", DefaultNProbe)
@@ -1451,7 +1451,7 @@ object SimilarityQueries {
     * from [[kmCentroids]] instead of the fixed lowest-id quantizer. The
     * declared pair (ss4, ss5) demonstrates the documented swap-in: only the
     * index build changed. */
-  private def kmeansTopK(s: SparkSession, d: String, nc: Int, np: Int): DataFrame = {
+  private[graft] def kmeansTopK(s: SparkSession, d: String, nc: Int, np: Int): DataFrame = {
     import s.implicits._
     val idx = index(s, d)
     val p = probeRow(s, d)
@@ -1477,7 +1477,7 @@ object SimilarityQueries {
     * cosine only over vectors assigned to those cells. The multi-cell OR is
     * the IVF analog of ss2's multi-band OR; both restrict BEFORE any
     * full-width cosine. */
-  private def ivfTopK(s: SparkSession, d: String, nc: Int, np: Int): DataFrame = {
+  private[graft] def ivfTopK(s: SparkSession, d: String, nc: Int, np: Int): DataFrame = {
     import s.implicits._
     val idx = index(s, d)
     val ivf = ivfIndex(s, d, nc)

@@ -180,29 +180,25 @@ object RecallAudit {
       ("ss15_range_join" -> r15)).toMap
   }
 
-  /** Recall@[[K]] of the two IVF families as a function of the
-    * `spark.graft.ivf.nprobe` session knob at the default cell count —
-    * the dial a 100-TB operator actually turns (recall/latency trade:
-    * each probed cell costs one more n/cells exact-cosine scan). Probing
-    * more cells only ever ADDS exactly-scored candidates, so recall@k is
-    * monotone non-decreasing in nProbe (a displaced true-top-k member
-    * would need k better-than-it candidates — which would evict it from
-    * the EXACT top-k too), and at nProbe == cells the scan is exhaustive,
-    * recall exactly 1. The ladder turns that argument into measured
+  /** Recall@[[K]] of the two IVF families as a function of nProbe at the
+    * default cell count — the dial a 100-TB operator actually turns
+    * (`spark.graft.ivf.nprobe` for the conf-driven entry points; passed as
+    * an argument here, so the session's conf is never written). Recall
+    * trades against latency: each probed cell costs one more n/cells
+    * exact-cosine scan. Probing more cells only ever ADDS exactly-scored
+    * candidates, so recall@k is monotone non-decreasing in nProbe (a
+    * displaced true-top-k member would need k better-than-it candidates —
+    * which would evict it from the EXACT top-k too), and at nProbe ==
+    * cells the scan is exhaustive, recall exactly 1. The ladder turns that argument into measured
     * numbers per corpus: (nProbe, ss4 recall, ss5 recall) rows. */
   def ivfNprobeLadder(s: SparkSession, d: String,
       probes: Seq[Int] = Seq(1, 2, 4, 8, 16)): Seq[(Int, Double, Double)] = {
     val exactCos = topIds(SimilarityQueries.queries("ss1_cosine_topk")(s, d), K)
-    val key = "spark.graft.ivf.nprobe"
-    val prev = s.conf.getOption(key)
-    try probes.map { np =>
-      s.conf.set(key, np.toString)
+    val nc = SimilarityQueries.DefaultCells
+    probes.map { np =>
       (np,
-        overlap(topIds(SimilarityQueries.ivfTopK(s, d), K), exactCos),
-        overlap(topIds(SimilarityQueries.kmeansTopK(s, d), K), exactCos))
-    } finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
+        overlap(topIds(SimilarityQueries.ivfTopK(s, d, nc, np), K), exactCos),
+        overlap(topIds(SimilarityQueries.kmeansTopK(s, d, nc, np), K), exactCos))
     }
   }
 

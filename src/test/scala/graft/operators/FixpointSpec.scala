@@ -23,13 +23,11 @@ class FixpointSpec extends SparkSpec {
 
   private def bfs(init: Long, edges: Seq[(Long, Long)], cap: Int = 50): DataFrame =
     Fixpoint.propagateMin(Seq((init, 0L, true)).toDF("v", "dist", "imp"),
-      undirected(edges), Seq("v"), "dist", $"dist" + 1L, cap, "spec BFS",
-      oneAction = false, hops = 1)
+      undirected(edges), Seq("v"), "dist", $"dist" + 1L, cap, "spec BFS")
 
   private def components(vs: Seq[Long], edges: Seq[(Long, Long)]): DataFrame =
     Fixpoint.propagateMin(vs.map(v => (v, v, true)).toDF("v", "label", "imp"),
-      undirected(edges), Seq("v"), "label", $"label", 50, "spec components",
-      oneAction = true, hops = 1)
+      undirected(edges), Seq("v"), "label", $"label", 50, "spec components")
 
   private def refBfs(init: Long, edges: Seq[(Long, Long)]): Map[Long, Long] = {
     val adj = (edges ++ edges.map(_.swap)).groupMap(_._1)(_._2)
@@ -57,9 +55,9 @@ class FixpointSpec extends SparkSpec {
   private def asMap(df: DataFrame, value: String): Map[Long, Long] =
     df.select($"v", col(value)).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
-  /** Runs `body` and returns the frontier plan of every round it ran, from
-    * the executed plans of the round checkpoints. */
-  private def tiers(body: => Unit): Seq[String] = {
+  /** Runs `body` and returns the executed plan of every round checkpoint
+    * it ran. */
+  private def roundPlans(body: => Unit): Seq[String] = {
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new QueryExecutionListener {
       override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
@@ -74,13 +72,17 @@ class FixpointSpec extends SparkSpec {
     import scala.jdk.CollectionConverters._
     // the init snapshot is a checkpoint too; rounds are the ones with an
     // aggregate merge
-    plans.asScala.toSeq.filter(_.contains("HashAggregate")).map { p =>
+    plans.asScala.toSeq.filter(_.contains("HashAggregate"))
+  }
+
+  /** The frontier plan of every round `body` ran. */
+  private def tiers(body: => Unit): Seq[String] =
+    roundPlans(body).map { p =>
       if (p.contains("BroadcastHashJoin")) "broadcast"
       else if (p.contains("ShuffledHashJoin")) "shuffle"
       else if (!p.contains("Join")) "literal"
       else "other"
     }
-  }
 
   private def withCeiling[T](n: Long)(body: => T): T = {
     spark.conf.set(Guard.BroadcastMaxKey, n.toString)
@@ -122,15 +124,15 @@ class FixpointSpec extends SparkSpec {
     }
   }
 
-  test("two hops per round reach the same fixpoint as one, in every frontier plan") {
-    val edges = chain ++ Seq((3L, 20L), (20L, 21L), (0L, 30L))
-    val init = Seq((0L, 0L, true)).toDF("v", "dist", "imp")
-    def run(hops: Int) = Fixpoint.propagateMin(init, undirected(edges), Seq("v"), "dist",
-      $"dist" + 1L, 50, "spec BFS", oneAction = true, hops = hops)
-    assert(asMap(run(2), "dist") == refBfs(0L, edges))
-    for (ceiling <- Seq(5000000L, 0L)) withCeiling(ceiling) {
-      assert(asMap(run(2), "dist") == asMap(run(1), "dist"), s"ceiling $ceiling")
-    }
+  test("rounds plan under the session's AQE and leave its conf unchanged") {
+    val keys = Seq("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    val before = keys.map(spark.conf.get)
+    assert(before.head == "true", "this case needs the session's default AQE")
+    var got = Map.empty[Long, Long]
+    val ps = roundPlans { got = asMap(components(starVs, star), "label") }
+    assert(got == refComponents(starVs, star))
+    assert(ps.nonEmpty && ps.forall(_.startsWith("AdaptiveSparkPlan")), ps)
+    assert(keys.map(spark.conf.get) == before)
   }
 
   test("partition keys: per-day components equal per-day union-find") {
@@ -141,7 +143,7 @@ class FixpointSpec extends SparkSpec {
       .toDF("dkey", "v", "label", "imp")
     for (ceiling <- Seq(5000000L, 0L)) withCeiling(ceiling) {
       val got = Fixpoint.propagateMin(init, e, Seq("dkey", "v"), "label", $"label", 50,
-        "spec per-day components", oneAction = true, hops = 1)
+        "spec per-day components")
         .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
       val want = days.flatMap { case (dk, es) =>
         val vs = es.flatMap(p => Seq(p._1, p._2)).distinct
@@ -154,7 +156,7 @@ class FixpointSpec extends SparkSpec {
   test("an empty init returns empty without throwing") {
     val init = Seq.empty[(Long, Long, Boolean)].toDF("v", "label", "imp")
     val out = Fixpoint.propagateMin(init, undirected(Nil), Seq("v"), "label", $"label",
-      50, "spec empty", oneAction = false, hops = 1)
+      50, "spec empty")
     assert(out.collect().isEmpty)
   }
 

@@ -5,12 +5,12 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.build.GraphCache
 
-/** Differential + planted tests for g01 temporal reachability — added with
-  * the round-15 two-hop batched relaxation (two hops per fixpoint round):
-  * the batching changes the loop internals (hop-2 frontier derivation, the
-  * propagated-marker `imp` flag) without changing the declared fixpoint, so
-  * these pin the fixpoint itself against recomputes that know nothing about
-  * rounds or frontiers. */
+/** Differential + planted tests for g01 temporal reachability. Loop
+  * internals (hops per round, frontier derivation, the `imp` flag) may
+  * change without changing the declared fixpoint, so these pin the fixpoint
+  * itself against recomputes that know nothing about rounds or frontiers.
+  * (They were added with a two-hops-per-round variant of the loop, since
+  * deleted; the names keep that history.) */
 class ReachabilitySpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
@@ -51,17 +51,17 @@ class ReachabilitySpec extends SparkSpec {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("g01-planted").toString
     // Frames are Δ = 3600 s slots; an edge (a, b) @ frame k = two events of
-    // the same type in slot k. The fixture forces the batched loop through its
+    // the same type in slot k. The fixture forces the loop through its
     // hardest paths:
     //  - route A (few hops, LATE frames): 1-2@10, 2-3@11, 3-4@12 reaches
     //    actor 4 at frame 12 by hop 2;
     //  - route B (more hops, EARLY frames): 1-8@1, 8-9@2, 9-4@3 IMPROVES
     //    actor 4's arrival to 3 at hop 3 — an improvement AFTER first
-    //    reach, which the propagated marker must re-flag for relaxation;
+    //    reach, which must put actor 4 back on the frontier;
     //  - the tail 4-5@5, 5-6@6, 6-7@7 is unusable from arrival 12 (5 < 12)
     //    and only opens once the improvement lands: actors 5/6/7 are
     //    reachable EXCLUSIVELY through the improved arrival, 6 hops deep
-    //    (several two-hop rounds), so a frontier bug = missing rows.
+    //    (several rounds), so a frontier bug = missing rows.
     // Actor 1 gets solo filler events (unique type, no co-occurrence) to
     // pin pa1 = 1 (most active actor).
     val edges = Seq(
