@@ -5,8 +5,6 @@ import java.nio.file.{Files, Paths}
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: the reference's percentile STATISTICS
   * (`cypher_query_timing.py:217-233` — N repetitions per query, default 5
   * via `SPARK_GRAFT_BENCH_REPS`; nearest-rank median / 5th / 95th
@@ -38,27 +36,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "5").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // AQE parallelismFirst stays at Spark's default: false was 2.1x slower (round 14 A/B)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // the hygiene sweep below unpersists each query's one-shot
-    // localCheckpoint snapshots after its timed window; Spark logs one WARN
-    // per unpersisted checkpoint ("lineage has been truncated and cannot be
-    // recomputed") which is definitionally noise here — the snapshots are
-    // superseded and never recomputed. Silence exactly that logger so REAL
-    // warnings stay visible in the driver-captured bench tail.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd.MapPartitionsRDD",
-      org.apache.logging.log4j.Level.ERROR)
+    val spark = SparkEntry.localSession()
 
     val errors = mutable.LinkedHashMap.empty[String, String]
     // warm failures must not break the output contract: queries then pay

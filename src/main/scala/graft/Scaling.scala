@@ -5,8 +5,6 @@ import java.nio.file.{Files, Paths}
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
-
 /** Scaling-exponent harness: times every declared query at a LADDER of
   * scale factors (default sf0.001 / sf0.01 / sf0.1) in one run and emits a
   * per-query growth exponent — the cheapest honest local proxy for "does
@@ -46,21 +44,7 @@ object Scaling {
       "/root/testdata/sf0.001,/root/testdata/sf0.01,/root/testdata/sf0.1")
       .split(',').toSeq.sortBy(sfOf)
     val reps = sys.env.getOrElse("SPARK_GRAFT_SCALING_REPS", "3").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // same noise class as Bench: the per-rep hygiene sweep unpersists
-    // superseded localCheckpoint snapshots, and Spark WARNs once per RDD
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd.MapPartitionsRDD",
-      org.apache.logging.log4j.Level.ERROR)
+    val spark = SparkEntry.localSession()
 
     val errors = mutable.LinkedHashMap.empty[String, String]
     // medians(q)(sf) — insertion-ordered for a stable artifact

@@ -39,6 +39,30 @@ object SparkEntry {
   def selects(only: Option[String])(name: String): Boolean =
     only.forall(_.split(',').exists(name.startsWith))
 
+  /** The local session of the Bench, Verify, Scaling, IngestBench,
+    * RecallAudit and Explain mains: `local[$SPARK_GRAFT_CPUS]` (default 4)
+    * with as many shuffle partitions, AQE on, UTC. The mains unpersist
+    * superseded localCheckpoint snapshots, and Spark WARNs once per such
+    * RDD ("lineage has been truncated"), so that one logger is quieted
+    * and real warnings stay visible in the captured output tails. */
+  def localSession(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.adaptive.enabled", "true")
+      // AQE parallelismFirst stays at Spark's default: false was 2.1x slower (round 14 A/B)
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.rdd.MapPartitionsRDD",
+      org.apache.logging.log4j.Level.ERROR)
+    spark
+  }
+
   /** SAMPLED oracle variants (spark-side filter SQL, sampled oracle SQL)
     * for cells whose full brute-force oracle outgrows a single node at the
     * sf1 rung — see [[graft.operators.SimilarityQueries.oracleSqlSampled]].

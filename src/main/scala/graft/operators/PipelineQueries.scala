@@ -238,13 +238,6 @@ object PipelineQueries {
     * the fixed token budget each packed sequence holds. */
   private val SeqLen = 2048L
 
-  /** doc_ids per prefix-sum bucket (p05). Session conf so specs (and a
-    * 100-TB operator) can tune the two-level trade: the single-task pass
-    * over bucket sums touches n_docs/B rows, the bucket-offset side of the
-    * join holds the same n_docs/B rows — B scales both together. */
-  val PackBucketKey = "spark.graft.pack.bucket"
-  private val PackBucketDefault = 4096L
-
   /** Tokenize an explicit documents frame to the narrow (doc_id, n_tokens)
     * rows the prefix machinery runs on — the ONLY step that touches text. */
   private def tokenCountsOf(docs: DataFrame): DataFrame = {
@@ -265,70 +258,22 @@ object PipelineQueries {
     *
     * The scale problem is the GLOBAL running total: the naive shape is one
     * unpartitioned window over the corpus — a single task holding every
-    * row, the exact thing WindowExec's "no partition defined" warning is
-    * about. The two-level formulation keeps every corpus-sized pass
-    * parallel: doc_ids bucket by `doc_id div B` (data-independent, so the
-    * layout is deterministic), per-bucket token sums aggregate map-side,
-    * ONLY the n/B bucket sums pay an ordered prefix pass (bounded by
-    * construction — at 10^10 docs and B=4096 that is ~2.4 M 16-byte rows,
-    * one small task), and each doc adds its bucket's exclusive offset
-    * (n/B-row equi-join Spark is free to broadcast) to a within-bucket
-    * prefix windowed BY bucket. Two keyed shuffles + one bounded pass —
-    * no corpus-sized single-partition stage at any scale. */
+    * row. [[PrefixSum.cumulative]] keeps every corpus-sized pass parallel:
+    * doc_ids bucket by `doc_id div 4096` (data-independent, so the layout
+    * is deterministic) and ONLY the bucket sums pay an ordered pass (at
+    * 10^10 docs that is ~2.4 M 16-byte rows, one small task). */
   private[operators] def offsetRowsOf(docs: DataFrame, shift: Long = 0L): DataFrame =
     prefixRowsOf(tokenCountsOf(docs), shift)
 
-  /** The two-level prefix sum over narrow (doc_id, n_tokens) rows. */
+  /** The two-level prefix sum over narrow (doc_id, n_tokens) rows: only
+    * these 24-byte rows move onto the bucket layout, and that one narrow
+    * exchange feeds both prefix levels, so the scan+tokenize upstream runs
+    * once and the corpus text itself is never shuffled. */
   private def prefixRowsOf(counts: DataFrame, shift: Long): DataFrame = {
-    val s = counts.sparkSession
-    import s.implicits._
-    val b = Conf.long(s, PackBucketKey, PackBucketDefault)
-    val n = s.conf.get("spark.sql.shuffle.partitions").toInt
-    // only the 24-byte (doc_id, bucket, n_tokens) rows move onto the
-    // bucket layout. That ONE narrow exchange is consumed by BOTH
-    // downstream passes — the bucket-sum agg and the within-bucket window
-    // each need ClusteredDistribution(bucket), which the explicit
-    // repartition already satisfies, so neither adds a shuffle and
-    // ReuseExchange runs the upstream scan+tokenize exactly once. The
-    // corpus text itself is never shuffled here.
-    // the explicit isNotNull mirrors the constraint the join below infers
-    // on its own branch — WITHOUT it the two consumers of this exchange
-    // canonicalize differently (one picks up the inferred filter) and
-    // AQE's stage reuse can't dedup them; WITH it both subtrees are
-    // identical and the scan+tokenize+shuffle runs once
-    val t = counts
-      .withColumn("bucket", expr(s"doc_id div $b"))
-      .filter($"doc_id".isNotNull && $"bucket".isNotNull)
-      .repartition(n, $"bucket")
-    // max(doc_id) is trivially non-null (every bucket has members), but it
-    // is NOT decorative: without a live reference to doc_id this branch's
-    // projection prunes the column, the two consumers of the bucket
-    // exchange stop canonicalizing identically, AQE cannot reuse the
-    // shuffle stage — and the corpus tokenizes TWICE. The isNotNull filter
-    // below is the "use" that keeps it alive (verified against the final
-    // adaptive plan: one ShuffleQueryStage feeds both branches).
-    val bucketSums = t.groupBy($"bucket")
-      .agg(sum($"n_tokens").as("bsum"), max($"doc_id").as("_maxdoc"))
-    // the ONE ordered pass: n/B bucket rows, bounded by construction
-    // (declared via the PrefixSum.onePart constant key)
-    val bucketOffsets = bucketSums.withColumn("boff",
-      coalesce(sum($"bsum").over(
-        Window.partitionBy(PrefixSum.onePart($"bucket"))
-          .orderBy($"bucket").rowsBetween(Window.unboundedPreceding, -1)),
-        lit(0L)))
-      .filter($"_maxdoc".isNotNull)
-      .select($"bucket", $"boff")
-    val within = Window.partitionBy($"bucket").orderBy($"doc_id")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    // no broadcast hint: the offsets side is n/B rows — small enough that
-    // the planner broadcasts it on its own at any sane B, and when an
-    // operator shrinks B far enough to make it big, the join degrades to a
-    // shuffle of ONLY the offsets side (t already satisfies the bucket
-    // distribution) instead of a forced oversized broadcast
-    t.join(bucketOffsets, "bucket")
-      .withColumn("start_off",
-        lit(shift) + $"boff" + coalesce(sum($"n_tokens").over(within), lit(0L)))
-      .select($"doc_id", $"n_tokens", $"start_off")
+    val (cum, _) = PrefixSum.cumulative(counts, Seq.empty, "doc_id", "n_tokens",
+      asc = true, "cum", "total")
+    cum.select(col("doc_id"), col("n_tokens"),
+      (lit(shift) + col("cum") - col("n_tokens")).as("start_off"))
   }
 
   /** (name, version) identities of the at-rest packing family: the offsets
@@ -513,18 +458,17 @@ object PipelineQueries {
     * cluster, or a resumed run reproduces the identical epoch order — and a
     * different epoch salt reshuffles everything.
     *
-    * Scale shape: the global rank is the p05 TWO-LEVEL formulation over
-    * hash-space buckets — per-bucket counts, ONE ≤ 4096-row ordered pass
-    * for bucket offsets (bounded by the fixed hash space, NOT the corpus),
-    * then a within-bucket `row_number` whose partitions are balanced by
-    * hash uniformity (never the skew of a data column). Chunk ids come
+    * Scale shape: the global rank is a weight-1 [[PrefixSum.cumulative]]
+    * over hash-space buckets — ONE ≤ 4096-row ordered pass for bucket
+    * offsets (bounded by the fixed hash space, NOT the corpus), then a
+    * within-bucket running count whose partitions are balanced by hash
+    * uniformity (never the skew of a data column). Chunk ids come
     * from the maintained offsets table via the p06 span explode — the
     * corpus text is never read. The oracle states the semantics as the
     * naive single-window rank; the bucketed formulation must be
     * value-identical (the p05 discipline). */
   private def p08(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val n = s.conf.get("spark.sql.shuffle.partitions").toInt
     val chunks = tokenOffsets(s, d).filter($"n_tokens" > 0)
       .select(explode(sequence(expr(s"start_off div $SeqLen"),
         expr(s"(start_off + n_tokens - 1) div $SeqLen"))).as("chunk_id"))
@@ -533,19 +477,10 @@ object PipelineQueries {
       .withColumn("h",
         conv(substring(md5(concat(lit("p08epoch0:"), $"chunk_id".cast("string"))
           .cast("binary")), 1, 8), 16, 10).cast("long"))
-      .withColumn("bucket", expr(s"h div $RankBucketWidth"))
-      .repartition(n, $"bucket")
-    val bucketOffsets = hashed.groupBy($"bucket")
-      .agg(count(lit(1)).as("bn"))
-      .withColumn("boff",
-        coalesce(sum($"bn").over(
-          Window.partitionBy(PrefixSum.onePart($"bucket"))
-            .orderBy($"bucket").rowsBetween(Window.unboundedPreceding, -1)),
-          lit(0L)))
-      .select($"bucket", $"boff")
-    val within = Window.partitionBy($"bucket").orderBy($"h", $"chunk_id")
-    hashed.join(bucketOffsets, "bucket")
-      .withColumn("pos", $"boff" + row_number().over(within).cast("long") - 1L)
+      .withColumn("one", lit(1L))
+    val (ranked, _) = PrefixSum.cumulative(hashed, Seq.empty, "h", "one",
+      asc = true, "cum", "n_chunks", RankBucketWidth, ties = Seq("chunk_id"))
+    ranked.withColumn("pos", $"cum" - 1L)
       .select($"chunk_id", $"pos", expr(s"pos div $BatchChunks").as("batch"))
       .orderBy($"chunk_id")
   }
@@ -634,53 +569,36 @@ object PipelineQueries {
     * training order where EVERY PREFIX carries the corpus's language mix
     * (a mixture defined per-epoch is useless if the first million steps
     * are all one language). No RNG: each doc gets a salted-hash
-    * within-language rank (p08's machinery per stratum — two-level, the
+    * within-language rank (p08's [[PrefixSum.cumulative]] per stratum, the
     * per-language bucket pass bounded by the 32-bit hash space), its
     * stream key is the rank's language-quantile on the [[MixGrid]] grid,
-    * and the global position is the two-level rank over that FIXED key
-    * space (gb = pk div (grid/4096) — the p08 construction again, so no
-    * corpus-sized window partition exists anywhere). Retried tasks,
+    * and the global position is the same rank over that FIXED key space
+    * (bucket width grid/4096, so no corpus-sized window partition exists
+    * anywhere). Retried tasks,
     * resumes, and different clusters reproduce the identical stream; the
     * oracle states both ranks as naive single windows. Integer-only math
     * (one `div` per key), hash-exact. */
   private def p12(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val n = s.conf.get("spark.sql.shuffle.partitions").toInt
     val hashed = Tables.documents(s, d).select($"doc_id", $"lang")
       .withColumn("h",
         conv(substring(md5(concat(lit("p12mix:"), $"doc_id".cast("string"))
           .cast("binary")), 1, 8), 16, 10).cast("long"))
-      .withColumn("bucket", expr(s"h div $RankBucketWidth"))
-      .repartition(n, $"lang", $"bucket")
-      // snapshotted: the bucket sums AND the ranked join both read this
-      // narrow frame (column pruning would otherwise split the exchange)
+      .withColumn("one", lit(1L))
+      // snapshotted: the rank's three consumers (bucket sums, totals,
+      // ranked rows) read it instead of re-scanning the corpus
       .localCheckpoint(eager = false)
-    val bsums = hashed.groupBy($"lang", $"bucket").agg(count(lit(1)).as("bn"))
-    val boffs = bsums
-      .withColumn("boff", coalesce(sum($"bn").over(
-        Window.partitionBy($"lang").orderBy($"bucket")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select($"lang", $"bucket", $"boff")
-    val nl = bsums.groupBy($"lang").agg(sum($"bn").as("nl"))
-    val within = Window.partitionBy($"lang", $"bucket").orderBy($"h", $"doc_id")
-    val ranked = hashed.join(boffs, Seq("lang", "bucket"))
-      .withColumn("lang_rank", $"boff" + row_number().over(within).cast("long"))
-      .join(broadcast(nl), "lang")
-      .withColumn("pk", expr(s"((2 * lang_rank - 1) * $MixGrid) div (2 * nl)"))
-    val g = ranked.withColumn("gb", expr(s"pk div ${MixGrid / 4096}"))
-      .repartition(n, $"gb")
-      // snapshotted for the same two-consumer reason — and it cuts the
-      // whole first-level rank out of the second level's lineage
+    val (langRanked, nl) = PrefixSum.cumulative(hashed, Seq("lang"), "h", "one",
+      asc = true, "lang_rank", "nl", RankBucketWidth, ties = Seq("doc_id"))
+    val ranked = langRanked.join(broadcast(nl), "lang")
+      .select($"doc_id", $"lang", $"lang_rank", $"one",
+        expr(s"((2 * lang_rank - 1) * $MixGrid) div (2 * nl)").as("pk"))
+      // snapshotted: cuts the whole first-level rank out of the second
+      // level's lineage
       .localCheckpoint(eager = false)
-    val gsums = g.groupBy($"gb").agg(count(lit(1)).as("gn"))
-    val goffs = gsums.withColumn("goff", coalesce(sum($"gn").over(
-        Window.partitionBy(PrefixSum.onePart($"gb")).orderBy($"gb")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select($"gb", $"goff")
-    val gwithin = Window.partitionBy($"gb").orderBy($"pk", $"lang", $"doc_id")
-    g.join(goffs, "gb")
-      .withColumn("pos", $"goff" + row_number().over(gwithin).cast("long") - 1L)
-      .select($"doc_id", $"lang", $"lang_rank", $"pos")
+    val (pos, _) = PrefixSum.cumulative(ranked, Seq.empty, "pk", "one",
+      asc = true, "cum", "n_docs", MixGrid / 4096, ties = Seq("lang", "doc_id"))
+    pos.select($"doc_id", $"lang", $"lang_rank", ($"cum" - 1L).as("pos"))
       .orderBy($"doc_id")
   }
 

@@ -384,45 +384,20 @@ object SessionQueries {
         ($"gnum".cast("double") / (dec($"n") * dec($"mass")).cast("double")).as("gini"))
   }
 
-  /** a14's nearest-rank percentiles (tx15's grid). */
-  private val A14Qs = Seq(25, 50, 75, 95, 99)
-
   /** a14: session-length profile — EXACT nearest-rank percentiles
     * (p25..p99, min/max/mean) of session duration (seconds) and events
     * per session, read off the MAINTAINED sessions table: the
     * engagement-depth summary (dwell time, actions per visit) next to
     * a02's per-session rows — tx15's value-keyed-histogram discipline
-    * applied to the behavioral axis. No `percentile` call and no
-    * corpus-sized sort: the cumulative windows run over the DISTINCT
-    * (metric, value) histogram (value-domain bounded), the mean is one
-    * exact division of integer aggregates, and the nearest-rank selection
-    * is a MIN over the cum ≥ ⌈q·tot⌉ threshold — hash-exact on both
+    * applied to the behavioral axis: the DISTINCT (metric, value)
+    * histogram profiled by [[PrefixSum.profile]] — hash-exact on both
     * engines. */
   private def a14(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val m = sessions(s, d).select(
       expr("stack(2, 'dur_sec', dur_sec, 'n_events', n_events) AS (metric, v)"))
     val hist = m.groupBy($"metric", $"v").agg(count(lit(1)).as("cnt"))
-    // two-level bucketed cumulative ranks (PrefixSum): dur_sec's domain is
-    // bounded only by max session length — corpus-dependent — so the
-    // per-metric window partition is retired for the bucketed construction
-    val (cumDf, totDf) = PrefixSum.cumulative(hist, Seq("metric"), "v",
-      "cnt", asc = true, "cum", "tot")
-    val cum = cumDf.join(broadcast(totDf), "metric")
-    val qCols = A14Qs.map { q =>
-      min(when($"cum" >= ceil($"tot" * lit(q / 100.0)), $"v")).as(s"p$q")
-    }
-    // the mass sum runs in decimal(38,0) (HUGEINT in the oracle — the a13
-    // discipline): a Long sum would wrap silently past 2^63 while DuckDB
-    // promotes, silently diverging the mean at extreme scale
-    val aggs = Seq(
-      min($"v").as("v_min"),
-      max($"v").as("v_max"),
-      (sum($"v".cast("decimal(38,0)") * $"cnt").cast("double") /
-        max($"tot").cast("double")).as("mean")) ++ qCols
-    cum.groupBy($"metric")
-      .agg(max($"tot").as("n_sessions"), aggs: _*)
-      .orderBy($"metric")
+    PrefixSum.profile(hist, "n_sessions")
   }
 
   /** a17: session RETURN-TIME profile — the "how long until they come
@@ -444,20 +419,7 @@ object SessionQueries {
       .select((unix_timestamp($"next_start") - unix_timestamp($"ts_end")).as("v"))
       .withColumn("metric", lit("return_gap_sec"))
     val hist = gaps.groupBy($"metric", $"v").agg(count(lit(1)).as("cnt"))
-    val (cumDf, totDf) = PrefixSum.cumulative(hist, Seq("metric"), "v",
-      "cnt", asc = true, "cum", "tot")
-    val cum = cumDf.join(broadcast(totDf), "metric")
-    val qCols = A14Qs.map { q =>
-      min(when($"cum" >= ceil($"tot" * lit(q / 100.0)), $"v")).as(s"p$q")
-    }
-    val aggs = Seq(
-      min($"v").as("v_min"),
-      max($"v").as("v_max"),
-      (sum($"v".cast("decimal(38,0)") * $"cnt").cast("double") /
-        max($"tot").cast("double")).as("mean")) ++ qCols
-    cum.groupBy($"metric")
-      .agg(max($"tot").as("n_gaps"), aggs: _*)
-      .orderBy($"metric")
+    PrefixSum.profile(hist, "n_gaps")
   }
 
   private def a18(s: SparkSession, d: String): DataFrame =
@@ -703,7 +665,7 @@ object SessionQueries {
          |  MAX(v) AS v_max,
          |  CAST(CAST(SUM(CAST(v AS HUGEINT) * cnt) AS VARCHAR) AS DOUBLE)
          |    / CAST(MAX(tot) AS DOUBLE) AS mean,
-         |${A14Qs.map(q =>
+         |${PrefixSum.ProfileQs.map(q =>
             s"  MIN(CASE WHEN cum >= ceil(tot * ${q / 100.0}e0) THEN v END) AS p$q")
             .mkString(",\n")}
          |FROM cum GROUP BY metric ORDER BY metric""".stripMargin,
@@ -737,7 +699,7 @@ object SessionQueries {
          |  MAX(v) AS v_max,
          |  CAST(CAST(SUM(CAST(v AS HUGEINT) * cnt) AS VARCHAR) AS DOUBLE)
          |    / CAST(MAX(tot) AS DOUBLE) AS mean,
-         |${A14Qs.map(q =>
+         |${PrefixSum.ProfileQs.map(q =>
             s"  MIN(CASE WHEN cum >= ceil(tot * ${q / 100.0}e0) THEN v END) AS p$q")
             .mkString(",\n")}
          |FROM cum GROUP BY metric ORDER BY metric""".stripMargin,

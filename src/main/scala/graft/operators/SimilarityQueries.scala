@@ -69,18 +69,13 @@ object SimilarityQueries {
     * ss2 recall@10 0.8 at sf0.1, 256 planes → 0.9, at the same pool. */
   private[graft] val RankPlanes = 256
   /** Hamming-pool width for ss2's single-probe top-k (pool → exact
-    * rerank). Like the IVF cells/nProbe knobs, the pool is
-    * session-configurable for library callers ([[hammingTopK]],
-    * `spark.graft.ann.hamPool`) — it is THE recall/latency dial of the
-    * compressed-domain scan — while the DECLARED query and its static
-    * oracle stay pinned to the default. */
+    * rerank). The pool is THE recall/latency dial of the compressed-domain
+    * scan: library callers pass their own to [[hammingTopK]], while the
+    * DECLARED query and its static oracle stay pinned to this default. */
   private val HamPool = 200
-  val HamPoolKey = "spark.graft.ann.hamPool"
   /** Per-query Hamming-pool width for ss9's batch kNN join; same
-    * conf-for-callers / pinned-for-declared split ([[knnJoin]],
-    * `spark.graft.knn.pool`). */
+    * argument-for-callers / pinned-for-declared split ([[knnJoin]]). */
   private val KnnPool = 100
-  val KnnPoolKey = "spark.graft.knn.pool"
   /** Cosine radius of the declared range query (ss11) — chosen so the
     * driver corpora return a non-trivial result set (14 vectors at
     * sf0.01, 43 at sf0.1) on a landscape whose best non-self cosine is
@@ -102,37 +97,24 @@ object SimilarityQueries {
     math.ceil(RankPlanes * p + 3.5 * math.sqrt(RankPlanes * p * (1 - p))).toInt
   }
 
-  /** Conf-driven Hamming-pool ANN top-k for library callers. */
-  def hammingTopK(s: SparkSession, d: String): DataFrame =
-    ss2(s, d, Conf.int(s, HamPoolKey, HamPool))
-  /** Conf-driven batch kNN join for library callers. */
-  def knnJoin(s: SparkSession, d: String): DataFrame =
-    ss9(s, d, Conf.int(s, KnnPoolKey, KnnPool))
+  /** Hamming-pool ANN top-k for library callers at their own `pool`. */
+  def hammingTopK(s: SparkSession, d: String, pool: Int): DataFrame = ss2(s, d, pool)
+  /** Batch kNN join for library callers at their own per-query `pool`. */
+  def knnJoin(s: SparkSession, d: String, pool: Int): DataFrame = ss9(s, d, pool)
 
   /** Banded hyperplane signature under the module's LSH geometry —
     * exposed for the recall audit's planted-near-dup measurement. */
   private[graft] def hyperSigOf(v: Column): Column = hyperSig(v, Planes)
 
-  /** IVF coarse cells / probed cells per query — session-configurable
-    * (`spark.graft.ivf.cells` / `spark.graft.ivf.nprobe`) via the PUBLIC
+  /** IVF coarse cells / probed cells per query — arguments of the PUBLIC
     * [[ivfTopK]]/[[kmeansTopK]] entry points: real corpora want cells ≈ √n
     * with nProbe tuned for the recall/latency target. The DECLARED queries
-    * (ss4/ss5) and their static oracles are PINNED to the defaults —
-    * independent of session conf — so the correctness harness can never be
-    * poisoned by a stray setting. The cell count is part of the at-rest
-    * index path ([[ivfIndex]]), so different settings never read each
-    * other's layouts. */
+    * (ss4/ss5) and their static oracles are PINNED to the defaults, and
+    * ingest maintains the default-cell tables. The cell count is part of
+    * the at-rest index path ([[ivfIndex]]), so different cell counts never
+    * read each other's layouts. */
   private[graft] val DefaultCells = 16
   private[operators] val DefaultNProbe = 4
-  private def cells(s: SparkSession): Int = Conf.int(s, "spark.graft.ivf.cells", DefaultCells)
-  private def nProbe(s: SparkSession): Int = Conf.int(s, "spark.graft.ivf.nprobe", DefaultNProbe)
-
-  /** Conf-driven IVF ANN top-k for library callers (fixed quantizer). */
-  def ivfTopK(s: SparkSession, d: String): DataFrame =
-    ivfTopK(s, d, cells(s), nProbe(s))
-  /** Conf-driven IVF ANN top-k for library callers (k-means quantizer). */
-  def kmeansTopK(s: SparkSession, d: String): DataFrame =
-    kmeansTopK(s, d, cells(s), nProbe(s))
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "ss1_cosine_topk" -> ss1,
@@ -474,23 +456,23 @@ object SimilarityQueries {
     * centroids are frozen until the corpus drifts past [[Drift]] since
     * training, when the append retrains them ([[retrainQuantizer]],
     * [[retrainPqCodebook]] — the [[DedupQueries.rerankPrefix]] pattern).
-    * Caller contract: vec_ids must not already be indexed. The SESSION's
-    * configured cell count picks which IVF and k-means tables are
-    * maintained — the ones a conf-driven [[ivfTopK]] reads. Ends with the
+    * Caller contract: vec_ids must not already be indexed. The IVF and
+    * k-means tables of [[DefaultCells]] cells are maintained — the ones the
+    * declared ss4/ss5 read. Ends with the
     * compaction sweep so vector-index file counts are bounded by the same
     * policy as the document path. */
   def appendEmbeddings(s: SparkSession, d: String, newVecs: DataFrame): Unit = {
-    VecIndex.append(s, d, cells(s), newVecs)
-    Ingest.compactTables(s, d, maintainedVectorTables(s))
+    VecIndex.append(s, d, DefaultCells, newVecs)
+    Ingest.compactTables(s, d, maintainedVectorTables)
     ()
   }
 
-  /** Every at-rest vector table the append and delete paths maintain
-    * under the SESSION's configured cell count — the compaction worklist
-    * and the streaming-vs-batch parity spec's comparison set (the
-    * vector-side analog of `Ingest.maintainedDocTables`). */
-  private[graft] def maintainedVectorTables(s: SparkSession): Seq[(String, Int)] =
-    VecIndex.tables(cells(s))
+  /** Every at-rest vector table the append and delete paths maintain —
+    * the compaction worklist and the streaming-vs-batch parity spec's
+    * comparison set (the vector-side analog of
+    * `Ingest.maintainedDocTables`). */
+  private[graft] def maintainedVectorTables: Seq[(String, Int)] =
+    VecIndex.tables(DefaultCells)
 
   /** Day-0 (or periodic-rebuild) materialization of every at-rest vector
     * index over an explicit embedding frame under corpus key `d` — the
@@ -498,12 +480,12 @@ object SimilarityQueries {
     * table: LSH rank signatures + norms, int8 SQ codes, fixed-quantizer
     * IVF assignments, the trained PQ family and the trained k-means
     * family (centroids or codebook, training-snapshot meta, assignments)
-    * for the session's configured cell count. The declared queries build
+    * for [[DefaultCells]] cells. The declared queries build
     * the same tables lazily; this entry point exists for ingest pipelines
     * (and the maintenance specs/bench) that index an explicit frame before
     * any query runs. */
   def buildEmbeddingIndexes(s: SparkSession, d: String, vecs: DataFrame): Unit =
-    VecIndex.build(s, d, cells(s), vecs)
+    VecIndex.build(s, d, DefaultCells, vecs)
 
   /** Delete previously-ingested vectors from every at-rest vector index —
     * [[appendEmbeddings]]'s right-to-be-forgotten mirror (the embedding
@@ -518,8 +500,8 @@ object SimilarityQueries {
     * families retrain only past the [[Drift]] rule, here from the shrink
     * side — stale trained cells cost recall, never correctness. */
   def deleteEmbeddings(s: SparkSession, d: String, ids: DataFrame): Unit = {
-    VecIndex.delete(s, d, cells(s), ids)
-    Ingest.compactTables(s, d, maintainedVectorTables(s))
+    VecIndex.delete(s, d, DefaultCells, ids)
+    Ingest.compactTables(s, d, maintainedVectorTables)
     ()
   }
 
@@ -882,7 +864,7 @@ object SimilarityQueries {
     * vectors than the rerank pool, so recall collapses to ss4's — the
     * ADC ordering becomes the binding constraint only at real corpus
     * sizes (n/c·nProbe ≫ pool), which is exactly the regime the knobs
-    * ([[ivfTopK]]'s cells/nProbe confs) exist for. */
+    * ([[ivfTopK]]'s cells/nProbe arguments) exist for. */
   private def ss12(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val idx = index(s, d)
@@ -1451,7 +1433,7 @@ object SimilarityQueries {
     * from [[kmCentroids]] instead of the fixed lowest-id quantizer. The
     * declared pair (ss4, ss5) demonstrates the documented swap-in: only the
     * index build changed. */
-  private[graft] def kmeansTopK(s: SparkSession, d: String, nc: Int, np: Int): DataFrame = {
+  def kmeansTopK(s: SparkSession, d: String, nc: Int, np: Int): DataFrame = {
     import s.implicits._
     val idx = index(s, d)
     val p = probeRow(s, d)
@@ -1477,7 +1459,7 @@ object SimilarityQueries {
     * cosine only over vectors assigned to those cells. The multi-cell OR is
     * the IVF analog of ss2's multi-band OR; both restrict BEFORE any
     * full-width cosine. */
-  private[graft] def ivfTopK(s: SparkSession, d: String, nc: Int, np: Int): DataFrame = {
+  def ivfTopK(s: SparkSession, d: String, nc: Int, np: Int): DataFrame = {
     import s.implicits._
     val idx = index(s, d)
     val ivf = ivfIndex(s, d, nc)
@@ -1515,7 +1497,7 @@ object SimilarityQueries {
     *
     * Scale shape — the paper's point: clustering bounds the quadratic.
     * Pair cost is Σ|cell|² ≈ n²/k instead of n², and the cell count is a
-    * knob that grows with the corpus (`spark.graft.ivf.cells`), holding
+    * knob that grows with the corpus ([[ivfTopK]]'s `nc`), holding
     * per-cell work flat. The pair generation is a self-equi-join on cid —
     * AQE-skew-splittable like the dd3 band join — followed by one keyed
     * max-agg on vec_id; no pair set is ever materialized at rest. */

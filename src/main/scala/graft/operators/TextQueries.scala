@@ -507,12 +507,6 @@ object TextQueries {
       .orderBy(desc("exact_cnt"), $"term")
   }
 
-  /** tx15's quantile positions (nearest-rank / percentile_disc). 0.25/0.5/
-    * 0.75 are exact binary fractions; 0.95/0.99 are not, but both engines
-    * compute rank = ceil(n · q) with the same IEEE double product, so the
-    * cut rows agree bit-for-bit. */
-  private val ProfileQs = Seq(25, 50, 75, 95, 99)
-
   /** tx15: corpus length profile — EXACT nearest-rank quantiles (min, max,
     * p25/p50/p75/p95/p99, mean) of document char and whitespace-token
     * counts, the length-distribution audit every curation run reports
@@ -520,14 +514,12 @@ object TextQueries {
     *
     * The scale-honest formulation: quantiles are read off a VALUE-KEYED
     * HISTOGRAM (one hash agg over the corpus, shuffle = |distinct
-    * lengths|), then a cumulative window over histogram rows. The window
-    * partitions are bounded by the metric's value domain (≤ max document
-    * length, a corpus constant independent of row count), so no
-    * corpus-sized window partition exists — same boundedness argument as
-    * p05's bucket pass, and the reason this never uses Spark's
-    * `percentile` (whose sort-based exact path moves per-ROW data, and
-    * whose approx path is un-oracle-able). Mean is exact integer sums with
-    * ONE final division (the tx9/tx10 discipline). */
+    * lengths|), then [[PrefixSum.profile]]'s two-level cumulative ranks
+    * over histogram rows — no corpus-sized window partition, and the
+    * reason this never uses Spark's `percentile` (whose sort-based exact
+    * path moves per-ROW data, and whose approx path is un-oracle-able).
+    * Mean is exact integer sums with ONE final division (the tx9/tx10
+    * discipline). */
   private def tx15(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val m = Tables.documentsWide(s, d).select(
@@ -535,26 +527,7 @@ object TextQueries {
       size(wsTokens($"text")).cast("long").as("tokens"))
     val hist = m.select(expr("stack(2, 'chars', chars, 'tokens', tokens) AS (metric, v)"))
       .groupBy($"metric", $"v").agg(count(lit(1)).as("cnt"))
-    // two-level bucketed cumulative ranks (PrefixSum): the per-metric
-    // window partition was bounded only by the value domain — corpus-
-    // dependent for long documents — so it now pays two keyed shuffles
-    // plus one n/B bucket pass instead; totals join off the bucket sums
-    val (cumDf, totDf) = PrefixSum.cumulative(hist, Seq("metric"), "v",
-      "cnt", asc = true, "cum", "tot")
-    val cum = cumDf.join(broadcast(totDf), "metric")
-    val qCols = ProfileQs.map { q =>
-      min(when($"cum" >= ceil($"tot" * lit(q / 100.0)), $"v")).as(s"p$q")
-    }
-    // decimal(38,0) mass sum (HUGEINT in the oracle): a Long sum would
-    // wrap past 2^63 while DuckDB promotes — the a13/a14 discipline
-    val aggs = Seq(
-      min($"v").as("v_min"),
-      max($"v").as("v_max"),
-      (sum($"v".cast("decimal(38,0)") * $"cnt").cast("double") /
-        max($"tot").cast("double")).as("mean")) ++ qCols
-    cum.groupBy($"metric")
-      .agg(max($"tot").as("n_docs"), aggs: _*)
-      .orderBy($"metric")
+    PrefixSum.profile(hist, "n_docs")
   }
 
   /** tx16's inclusion floor (rare pairs have unstable lift) and result
@@ -932,7 +905,7 @@ object TextQueries {
            |  MAX(v) AS v_max,
            |  CAST(CAST(SUM(CAST(v AS HUGEINT) * cnt) AS VARCHAR) AS DOUBLE)
            |    / CAST(MAX(tot) AS DOUBLE) AS mean,
-           |${ProfileQs.map(q =>
+           |${PrefixSum.ProfileQs.map(q =>
               s"  MIN(CASE WHEN cum >= ceil(tot * ${q / 100.0}e0) THEN v END) AS p$q")
               .mkString(",\n")}
            |FROM cum GROUP BY metric ORDER BY metric""".stripMargin,

@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.SparkEntry
 import graft.build.DerivedCache
 import graft.operators.{Ingest, SimilarityQueries}
 import graft.sources.Tables
@@ -60,16 +61,8 @@ object IngestBench {
   def main(args: Array[String]): Unit = {
     val sfDirs = if (args.nonEmpty) args.toSeq
       else Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = sys.env.getOrElse("SPARK_GRAFT_INGEST_REPS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession()
     import spark.implicits._
 
     val runId = java.util.UUID.randomUUID().toString
@@ -101,15 +94,15 @@ object IngestBench {
       }
     }
 
-    def docLadderOf(): Seq[(String, Double, Double)] = sfDirs.map { dir =>
-      val docs = Tables.documents(spark, dir).select($"doc_id", $"text")
+    def docLadderOf(s: SparkSession): Seq[(String, Double, Double)] = sfDirs.map { dir =>
+      val docs = Tables.documents(s, dir).select($"doc_id", $"text")
       val batch = batchOf(docs)
       val base = docs.exceptAll(batch)
-      val fullS = median(Seq.fill(reps)(time(Ingest.buildDocumentIndexes(spark, key(), docs))))
+      val fullS = median(Seq.fill(reps)(time(Ingest.buildDocumentIndexes(s, key(), docs))))
       val appendS = median(Seq.fill(reps) {
         val k = key()
-        Ingest.buildDocumentIndexes(spark, k, base) // day-0 base, untimed
-        time(Ingest.appendDocumentBatch(spark, k, batch))
+        Ingest.buildDocumentIndexes(s, k, base) // day-0 base, untimed
+        time(Ingest.appendDocumentBatch(s, k, batch))
       })
       val sf = dir.split('/').last
       (sf, fullS, appendS)
@@ -120,15 +113,16 @@ object IngestBench {
         // JIT/stage warm-up, discarded
         Ingest.buildDocumentIndexes(spark, key(),
           Tables.documents(spark, sfDirs.head).select($"doc_id", $"text"))
-        val docLadder = docLadderOf()
+        val docLadder = docLadderOf(spark)
         // pair-index-inclusive ladder (round-13 verdict: the new sh_pairs
         // posting index adds append work IngestBench never measured, and
         // the driver corpora are below the saturation trigger so the
         // normal ladder cannot exercise it): force the escalation profile
         // so day-0 provisions the pair index and every append maintains it
-        spark.conf.set("spark.graft.containment.escalateFanout", "0")
-        val pairL = try docLadderOf()
-        finally spark.conf.unset("spark.graft.containment.escalateFanout")
+        // — on a child session, so the root session's conf never changes
+        val pairSession = spark.newSession()
+        pairSession.conf.set("spark.graft.containment.escalateFanout", "0")
+        val pairL = docLadderOf(pairSession)
         // embedding-family ladder: same fixed batch discipline (the 50
         // vectors with vec_id % 10 = 0 below 500 exist at every sf)
         SimilarityQueries.buildEmbeddingIndexes(spark, key(),

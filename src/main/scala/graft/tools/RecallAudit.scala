@@ -6,6 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.SparkEntry
 import graft.functions.VectorOps.{cosineExact, dotExact, normSqExact}
 import graft.operators.SimilarityQueries
 import graft.sources.Tables
@@ -181,9 +182,8 @@ object RecallAudit {
   }
 
   /** Recall@[[K]] of the two IVF families as a function of nProbe at the
-    * default cell count — the dial a 100-TB operator actually turns
-    * (`spark.graft.ivf.nprobe` for the conf-driven entry points; passed as
-    * an argument here, so the session's conf is never written). Recall
+    * default cell count — the dial a 100-TB operator actually turns (the
+    * `np` argument of the IVF entry points). Recall
     * trades against latency: each probed cell costs one more n/cells
     * exact-cosine scan. Probing more cells only ever ADDS exactly-scored
     * candidates, so recall@k is monotone non-decreasing in nProbe (a
@@ -245,16 +245,7 @@ object RecallAudit {
   def main(args: Array[String]): Unit = {
     val dirs = if (args.nonEmpty) args.toSeq
       else Seq("/root/testdata/sf0.01", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession()
     val body = dirs.map { d =>
       val sf = d.split('/').last
       val per = recalls(spark, d).toSeq.sortBy(_._1)

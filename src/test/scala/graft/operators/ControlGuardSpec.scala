@@ -62,8 +62,8 @@ class ControlGuardSpec extends SparkSpec {
     rejected(Controls.MaxRowsKey, "ten") {
       Controls.gate(spark.range(3).toDF("id"), "dd2_ngram_jaccard", "/control-conf")
     }
-    rejected("spark.graft.ivf.cells", "-16") {
-      SimilarityQueries.ivfTopK(spark, "/control-conf")
+    rejected(Ingest.CompactMaxFilesKey, "-16") {
+      Ingest.compactIfNeeded(spark, "/control-conf")
     }
   }
 }

@@ -41,7 +41,7 @@ class EmbeddingDeletionSpec extends SparkSpec {
     // KmeansMaintenanceSpec)
     SimilarityQueries.retrainQuantizer(spark, dDel, SimilarityQueries.DefaultCells)
 
-    for (t <- SimilarityQueries.maintainedVectorTables(spark)) {
+    for (t <- SimilarityQueries.maintainedVectorTables) {
       assert(rows(DerivedCache.existing(spark, dDel, t))
           == rows(DerivedCache.existing(spark, dRef, t)),
         s"table ${t._1} must equal the fresh build")
@@ -107,7 +107,7 @@ class EmbeddingDeletionSpec extends SparkSpec {
     SimilarityQueries.buildEmbeddingIndexes(spark, dDel, emb)
     SimilarityQueries.deleteEmbeddings(spark, dDel, batch)
     SimilarityQueries.buildEmbeddingIndexes(spark, dRef, remaining)
-    for (t <- SimilarityQueries.maintainedVectorTables(spark)) {
+    for (t <- SimilarityQueries.maintainedVectorTables) {
       assert(rows(DerivedCache.existing(spark, dDel, t))
           == rows(DerivedCache.existing(spark, dRef, t)),
         s"table ${t._1} must equal the fresh build")

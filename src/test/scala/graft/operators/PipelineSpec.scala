@@ -143,23 +143,17 @@ class PipelineSpec extends SparkSpec {
       assert(r.getLong(1) == n && r.getLong(2) == off, s"doc ${r.getLong(0)}")
     }
 
-    // bucketing is an implementation knob, not a semantic: a pathological
-    // bucket width (many tiny buckets) must yield identical offsets. Drive
-    // the row derivation directly — the declared query reads the at-rest
-    // table, which a conf change must NOT rebuild.
-    val before = spark.conf.getOption(PipelineQueries.PackBucketKey)
-    spark.conf.set(PipelineQueries.PackBucketKey, "7")
-    try {
-      val rebucketed = PipelineQueries.offsetRowsOf(Tables.documents(spark, dir))
-        .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-      assert(p05.map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap == rebucketed,
-        "offsets must not depend on the bucket width")
-    } finally {
-      before match {
-        case Some(v) => spark.conf.set(PipelineQueries.PackBucketKey, v)
-        case None => spark.conf.unset(PipelineQueries.PackBucketKey)
-      }
-    }
+    // bucketing is an implementation choice, not a semantic: a pathological
+    // bucket width (many tiny buckets) over the same token counts must
+    // yield identical offsets (start = inclusive running total − own count)
+    val counts = Tables.documents(spark, dir)
+      .select($"doc_id", size(TextQueries.wsTokens($"text")).cast("long").as("n_tokens"))
+    val (cum, _) = PrefixSum.cumulative(counts, Seq.empty, "doc_id", "n_tokens",
+      asc = true, "cum", "total", width = 7)
+    val rebucketed = cum.select($"doc_id", $"n_tokens", $"cum" - $"n_tokens")
+      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+    assert(p05.map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap == rebucketed,
+      "offsets must not depend on the bucket width")
   }
 
   test("p05 offsets are append-stable: a doc_id-prefix corpus reproduces its slice") {

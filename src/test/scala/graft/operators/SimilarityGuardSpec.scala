@@ -19,22 +19,16 @@ class SimilarityGuardSpec extends SparkSpec {
     // compressed-domain scan admits everything and the exact rerank IS
     // ss1's brute-force ranking — same scores (stored nsq, identical
     // operation order), same ties, so the rows must match exactly
-    spark.conf.set(SimilarityQueries.HamPoolKey, "1000000")
-    try {
-      val approx = SimilarityQueries.hammingTopK(spark, dir).collect().toSeq
-      val exact = SimilarityQueries.queries("ss1_cosine_topk")(spark, dir).collect().toSeq
-      assert(approx == exact, "full-pool hammingTopK must equal the exact control")
-    } finally spark.conf.unset(SimilarityQueries.HamPoolKey)
+    val approx = SimilarityQueries.hammingTopK(spark, dir, 1000000).collect().toSeq
+    val exact = SimilarityQueries.queries("ss1_cosine_topk")(spark, dir).collect().toSeq
+    assert(approx == exact, "full-pool hammingTopK must equal the exact control")
   }
 
   test("knnJoin pool conf narrows the per-query candidate pool") {
-    spark.conf.set(SimilarityQueries.KnnPoolKey, "1")
-    try {
-      val perQuery = SimilarityQueries.knnJoin(spark, dir)
-        .groupBy("qid").count().collect()
-      assert(perQuery.nonEmpty && perQuery.forall(_.getLong(1) == 1L),
-        "pool=1 must yield exactly one neighbor per query")
-    } finally spark.conf.unset(SimilarityQueries.KnnPoolKey)
+    val perQuery = SimilarityQueries.knnJoin(spark, dir, 1)
+      .groupBy("qid").count().collect()
+    assert(perQuery.nonEmpty && perQuery.forall(_.getLong(1) == 1L),
+      "pool=1 must yield exactly one neighbor per query")
   }
 
   for (name <- Seq("ss9_knn_join", "ss15_range_join")) {

@@ -63,7 +63,7 @@ class StreamingVectorIngestSpec extends SparkSpec {
       feed(delta2)
     } finally q.stop()
 
-    for (t <- SimilarityQueries.maintainedVectorTables(spark)) {
+    for (t <- SimilarityQueries.maintainedVectorTables) {
       assert(rows(DerivedCache.existing(spark, dStream, t))
           == rows(DerivedCache.existing(spark, dBatch, t)),
         s"streamed ${t._1} must equal the batch-appended table")
