@@ -61,19 +61,21 @@ private[operators] object PrefixSum {
     * `cumName`; also returns the per-group totals as `(parts...,
     * totName)`. The exclusive sum is `cumName − weight`. Preconditions:
     * (parts, value, ties) is unique, so the order is total — with a
-    * weight-1 column the running sum is `row_number` over it; no column
-    * is null (rows with a null key, value, tie or payload are dropped);
-    * `value` is integral, and `width` values share a bucket. Every other
-    * column of `hist` is carried to the output, so pass only the columns
-    * the caller reads afterwards (one it drops would be pruned from one
-    * consumer of the shared exchange only, and stop its reuse).
+    * weight-1 column the running sum is `row_number` over it; `weight`
+    * is non-null (rows with a null key, value, tie or payload are
+    * dropped, but a null-weight row is kept, counts 0 in every sum, and
+    * its exclusive sum is null); `value` is integral, and `width` values
+    * share a bucket. Every other column of `hist` is carried to the
+    * output, so pass only the columns the caller reads afterwards (one it
+    * drops would be pruned from one consumer of the shared exchange only,
+    * and stop its reuse).
     *
     * The totals derive from the bucket sums (never a second input pass),
-    * and both consumers of the input see ONE exchange: the bucket
-    * repartition is taken before the fan-out and both subtrees reference
-    * the same live columns (an inferred-only filter or pruned-only column
-    * on one branch would stop AQE stage reuse and recompute the upstream
-    * aggregation). */
+    * and all three consumers of the input (offsets, rows, totals) see ONE
+    * exchange: the bucket repartition is taken before the fan-out and
+    * every subtree references the same live columns (an inferred-only
+    * filter or pruned-only column on one branch would stop AQE stage
+    * reuse and shuffle or recompute the input again). */
   def cumulative(
       hist: DataFrame,
       parts: Seq[String],
@@ -118,9 +120,12 @@ private[operators] object PrefixSum {
       .partitionBy(bwParts: _*)
       .orderBy(bucketOrder)
       .rowsBetween(Window.unboundedPreceding, -1)
+    // a no-op filter (no carried column is null) that keeps the max
+    // columns live on both bucket-sum consumers, the offsets and the totals
+    val liveNotNull = live.map(col(_).isNotNull).reduce(_ && _)
     val boffs = bsums
       .withColumn("_boff", coalesce(sum(col("_bsum")).over(bw), lit(0L)))
-      .filter(live.map(col(_).isNotNull).reduce(_ && _))
+      .filter(liveNotNull)
       .select(keyCols :+ col("_boff"): _*)
     val valueOrder = if (asc) col(value).asc else col(value).desc
     val ww = Window.partitionBy(keyCols: _*)
@@ -130,9 +135,10 @@ private[operators] object PrefixSum {
       .join(boffs, parts :+ "_bucket")
       .withColumn(cumName, col("_boff") + sum(col(weight)).over(ww))
       .drop("_bucket", "_boff")
+    val liveSums = bsums.filter(liveNotNull)
     val totals =
-      if (parts.isEmpty) bsums.agg(sum(col("_bsum")).as(totName))
-      else bsums.groupBy(pcols: _*).agg(sum(col("_bsum")).as(totName))
+      if (parts.isEmpty) liveSums.agg(sum(col("_bsum")).as(totName))
+      else liveSums.groupBy(pcols: _*).agg(sum(col("_bsum")).as(totName))
     (cum, totals)
   }
 

@@ -106,13 +106,14 @@ object SimilarityQueries {
     * exposed for the recall audit's planted-near-dup measurement. */
   private[graft] def hyperSigOf(v: Column): Column = hyperSig(v, Planes)
 
-  /** IVF coarse cells / probed cells per query — arguments of the PUBLIC
-    * [[ivfTopK]]/[[kmeansTopK]] entry points: real corpora want cells ≈ √n
-    * with nProbe tuned for the recall/latency target. The DECLARED queries
-    * (ss4/ss5) and their static oracles are PINNED to the defaults, and
-    * ingest maintains the default-cell tables. The cell count is part of
-    * the at-rest index path ([[ivfIndex]]), so different cell counts never
-    * read each other's layouts. */
+  /** IVF coarse cells / probed cells per query. The probed-cell count is
+    * the argument of the PUBLIC [[ivfTopK]]/[[kmeansTopK]] entry points,
+    * tuned for the recall/latency target; the DECLARED queries (ss4/ss5)
+    * and their static oracles are PINNED to [[DefaultNProbe]]. The cell
+    * count is fixed: build, append and delete maintain exactly the
+    * [[DefaultCells]] tables, so every read runs at that count (a read at
+    * another count would lazily build tables ingest never maintains). The
+    * cell count is part of the at-rest index path ([[ivfIndex]]). */
   private[graft] val DefaultCells = 16
   private[operators] val DefaultNProbe = 4
 
@@ -120,8 +121,8 @@ object SimilarityQueries {
     "ss1_cosine_topk" -> ss1,
     "ss2_lsh_topk" -> ((s, d) => ss2(s, d, HamPool)),
     "ss3_embed_neardup" -> ss3,
-    "ss4_ivf_topk" -> ((s, d) => ivfTopK(s, d, DefaultCells, DefaultNProbe)),
-    "ss5_ivf_kmeans" -> ((s, d) => kmeansTopK(s, d, DefaultCells, DefaultNProbe)),
+    "ss4_ivf_topk" -> ((s, d) => ivfTopK(s, d, DefaultNProbe)),
+    "ss5_ivf_kmeans" -> ((s, d) => kmeansTopK(s, d, DefaultNProbe)),
     "ss6_sq_rerank" -> ss6,
     "ss7_pq_topk" -> ss7,
     "ss8_mips" -> ss8,
@@ -790,7 +791,7 @@ object SimilarityQueries {
     def ranked(df: DataFrame, as: String) = df.select($"vec_id",
       row_number().over(Window.partitionBy(PrefixSum.onePart($"vec_id"))
         .orderBy(desc("cosine"), $"vec_id")).as(as))
-    ranked(ivfTopK(s, d, DefaultCells, DefaultNProbe), "r4")
+    ranked(ivfTopK(s, d, DefaultNProbe), "r4")
       .join(ranked(ss6(s, d), "r6"), Seq("vec_id"), "full_outer")
       .select($"vec_id",
         (coalesce(lit(1.0) / (lit(60) + $"r4"), lit(0.0)) +
@@ -863,8 +864,8 @@ object SimilarityQueries {
     * no new state. At the gated test scales the probed cells hold fewer
     * vectors than the rerank pool, so recall collapses to ss4's — the
     * ADC ordering becomes the binding constraint only at real corpus
-    * sizes (n/c·nProbe ≫ pool), which is exactly the regime the knobs
-    * ([[ivfTopK]]'s cells/nProbe arguments) exist for. */
+    * sizes (n/c·nProbe ≫ pool), which is exactly the regime the cell
+    * count and [[ivfTopK]]'s nProbe argument exist for. */
   private def ss12(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val idx = index(s, d)
@@ -1432,8 +1433,9 @@ object SimilarityQueries {
     * ss4 (rank nProbe cells, exact cosine only inside them), but cells come
     * from [[kmCentroids]] instead of the fixed lowest-id quantizer. The
     * declared pair (ss4, ss5) demonstrates the documented swap-in: only the
-    * index build changed. */
-  def kmeansTopK(s: SparkSession, d: String, nc: Int, np: Int): DataFrame = {
+    * index build changed. Probes `np` of the [[DefaultCells]] cells. */
+  def kmeansTopK(s: SparkSession, d: String, np: Int): DataFrame = {
+    val nc = DefaultCells
     import s.implicits._
     val idx = index(s, d)
     val p = probeRow(s, d)
@@ -1458,8 +1460,9 @@ object SimilarityQueries {
   /** ss4: IVF ANN top-k — rank the probe's nProbe closest cells, exact
     * cosine only over vectors assigned to those cells. The multi-cell OR is
     * the IVF analog of ss2's multi-band OR; both restrict BEFORE any
-    * full-width cosine. */
-  def ivfTopK(s: SparkSession, d: String, nc: Int, np: Int): DataFrame = {
+    * full-width cosine. Probes `np` of the [[DefaultCells]] cells. */
+  def ivfTopK(s: SparkSession, d: String, np: Int): DataFrame = {
+    val nc = DefaultCells
     import s.implicits._
     val idx = index(s, d)
     val ivf = ivfIndex(s, d, nc)
@@ -1496,9 +1499,9 @@ object SimilarityQueries {
     * decision at [[SemTau]].
     *
     * Scale shape — the paper's point: clustering bounds the quadratic.
-    * Pair cost is Σ|cell|² ≈ n²/k instead of n², and the cell count is a
-    * knob that grows with the corpus ([[ivfTopK]]'s `nc`), holding
-    * per-cell work flat. The pair generation is a self-equi-join on cid —
+    * Pair cost is Σ|cell|² ≈ n²/k instead of n², and the cell count
+    * ([[DefaultCells]], a constant today) is meant to grow with the
+    * corpus, holding per-cell work flat. The pair generation is a self-equi-join on cid —
     * AQE-skew-splittable like the dd3 band join — followed by one keyed
     * max-agg on vec_id; no pair set is ever materialized at rest. */
   private[operators] def semDedup(s: SparkSession, d: String): DataFrame = {

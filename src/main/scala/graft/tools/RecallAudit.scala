@@ -194,11 +194,10 @@ object RecallAudit {
   def ivfNprobeLadder(s: SparkSession, d: String,
       probes: Seq[Int] = Seq(1, 2, 4, 8, 16)): Seq[(Int, Double, Double)] = {
     val exactCos = topIds(SimilarityQueries.queries("ss1_cosine_topk")(s, d), K)
-    val nc = SimilarityQueries.DefaultCells
     probes.map { np =>
       (np,
-        overlap(topIds(SimilarityQueries.ivfTopK(s, d, nc, np), K), exactCos),
-        overlap(topIds(SimilarityQueries.kmeansTopK(s, d, nc, np), K), exactCos))
+        overlap(topIds(SimilarityQueries.ivfTopK(s, d, np), K), exactCos),
+        overlap(topIds(SimilarityQueries.kmeansTopK(s, d, np), K), exactCos))
     }
   }
 

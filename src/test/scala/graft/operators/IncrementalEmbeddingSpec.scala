@@ -1,9 +1,11 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{desc, typedlit}
 
 import graft.SparkSpec
 import graft.build.{DerivedCache, DocTables}
+import graft.functions.VectorOps.cosineExact
 import graft.sources.Tables
 
 /** Vector-side incremental maintenance: appending the per-vector
@@ -77,5 +79,33 @@ class IncrementalEmbeddingSpec extends SparkSpec {
     assert(rows(readBack(SimilarityQueries.pqTable)) ==
       rows(SimilarityQueries.pqCodeRowsOf(emb, cb0)),
       "appended PQ codes must equal a full assignment under the frozen codebook")
+  }
+
+  test("ivfTopK and kmeansTopK read the vectors appendEmbeddings added") {
+    // the public entry points read the cell count ingest maintains: probing
+    // every cell after an append is the exact top-k over base + delta
+    val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
+      .select($"vec_id", $"embedding")
+    val ids = emb.select($"vec_id").orderBy($"vec_id").collect().map(_.getLong(0))
+    val pemb = emb.filter($"vec_id" === ids.head).head.getSeq[Float](1)
+    val exact = emb.filter($"vec_id" =!= ids.head)
+      .select($"vec_id", cosineExact($"embedding", typedlit(pemb)).as("cosine"))
+      .orderBy(desc("cosine"), $"vec_id").limit(20)
+      .collect().map(_.getLong(0)).toSeq
+    // the delta is the probe's exact neighbours, none of them an IVF
+    // anchor (the nc lowest ids stay in the base, the monotone contract)
+    val deltaIds = exact.filterNot(ids.take(nc).contains)
+    assert(deltaIds.nonEmpty)
+    val dApp = s"/incremental-emb-read/${java.util.UUID.randomUUID()}"
+    SimilarityQueries.buildEmbeddingIndexes(spark, dApp,
+      emb.filter(!$"vec_id".isInCollection(deltaIds)))
+    SimilarityQueries.appendEmbeddings(spark, dApp,
+      emb.filter($"vec_id".isInCollection(deltaIds)))
+    for ((name, topK) <- Seq(
+        "ivfTopK" -> SimilarityQueries.ivfTopK(spark, dApp, nc),
+        "kmeansTopK" -> SimilarityQueries.kmeansTopK(spark, dApp, nc))) {
+      assert(topK.collect().map(_.getLong(0)).toSeq == exact,
+        s"$name probing all $nc cells must return the exact top-k, appended vectors included")
+    }
   }
 }

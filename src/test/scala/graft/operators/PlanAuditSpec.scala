@@ -419,6 +419,30 @@ abstract class PlanAuditBase extends SparkSpec {
       s"every window must be bucket-scoped:\n${unpartitioned.mkString("\n")}")
   }
 
+  test("p12 shuffles its corpus-sized rows once per rank level") {
+    // each PrefixSum level's offsets, rows and totals share ONE bucket
+    // exchange; with the final doc_id sort that is three corpus-sized
+    // shuffle writes. A consumer that missed the shared exchange would
+    // show as a fourth (the stages run in the checkpoint jobs too, so
+    // this counts stages, not plan nodes)
+    val n = graft.sources.Tables.documents(spark, dir).count()
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageCompleted(e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+        writes.add(e.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try PipelineQueries.queries("p12_mixture_order")(spark, dir)
+      .write.format("noop").mode("overwrite").save()
+    finally {
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    import scala.jdk.CollectionConverters._
+    val corpusSized = writes.asScala.toSeq.filter(_ >= n)
+    assert(corpusSized.size == 3, s"corpus-sized shuffle writes: $corpusSized (n = $n)")
+  }
+
   test("mm7/mm8 scan the at-rest fingerprint table; no decode in the query plan") {
     for (q <- Seq("mm7_image_phash", "mm8_audio_fingerprint")) {
       val p = plan(MultimodalQueries.queries(q)(spark, dir))
