@@ -31,8 +31,35 @@ import scala.collection.mutable
   */
 object Bench {
 
-  private def pct(sorted: Seq[Double], q: Double): Double =
+  /** Nearest-rank percentile of an ascending sample — the one statistic of
+    * Bench and [[Scaling]]. */
+  private[graft] def pct(sorted: Seq[Double], q: Double): Double =
     sorted(math.round((sorted.size - 1) * q).toInt)
+
+  /** Exception text safe inside a JSON string: quotes, backslashes and ALL
+    * control chars stripped — the JSON contract must survive any message. */
+  private[graft] def errText(e: Throwable): String =
+    e.toString.replaceAll("[\"\\\\\\p{Cntrl}]", " ").take(200)
+
+  /** Longest stdout line of the per-query medians: a bounded reader keeps
+    * only a 2000-char tail, and the compact contract line follows these. */
+  private[graft] val PartChars = 1500
+
+  /** The per-query medians as keyed stdout lines of at most [[PartChars]]
+    * chars each, `{"bench_queries":{…},"part":i,"of":n,<tail>}`, packed in
+    * order; together the parts hold every median. */
+  private[graft] def medianParts(medians: Seq[(String, Double)], tail: String): Seq[String] = {
+    val room = PartChars - s"""{"bench_queries":{},"part":9999,"of":9999,$tail}""".length
+    val groups = medians.map { case (k, v) => s"\"$k\":$v" }
+      .foldLeft(Vector(Vector.empty[String])) {
+        case (gs :+ g, e) if (g :+ e).map(_.length + 1).sum - 1 <= room => gs :+ (g :+ e)
+        case (gs, e) => gs :+ Vector(e)
+      }
+    groups.zipWithIndex.map { case (g, i) =>
+      val part = s""""part":${i + 1},"of":${groups.size}"""
+      s"""{"bench_queries":${g.mkString("{", ",", "}")},$part,$tail}"""
+    }
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -44,8 +71,7 @@ object Bench {
     // (and individually record) any remaining build cost themselves
     try SparkEntry.warm(spark, sfDir)
     catch {
-      case e: Throwable =>
-        errors("_warm") = e.toString.replaceAll("[\"\\\\\\p{Cntrl}]", " ").take(200)
+      case e: Throwable => errors("_warm") = errText(e)
     }
     // profiling aid: SPARK_GRAFT_BENCH_ONLY=<prefix[,prefix...]> runs a
     // subset under otherwise-identical conditions (warm caches, shared
@@ -72,10 +98,7 @@ object Bench {
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         samples(name) += (System.nanoTime() - t0) / 1e9
       } catch {
-        case e: Throwable =>
-          // strip quote/backslash and ALL control chars — the JSON
-          // contract must survive any exception text
-          errors(name) = e.toString.replaceAll("[\"\\\\\\p{Cntrl}]", " ").take(200)
+        case e: Throwable => errors(name) = errText(e)
       }
       // measurement hygiene (round 11, narrowed round 12): drop the query's
       // one-shot storage (localCheckpoint snapshots) OUTSIDE its timed
@@ -97,7 +120,8 @@ object Bench {
     def jmap(f: (String, Seq[Double]) => Double): String = stats
       .collect { case (k, ts) if ts.nonEmpty => s"\"$k\":${f(k, ts)}" }
       .mkString("{", ",", "}")
-    val medians = jmap((_, ts) => pct(ts, 0.5))
+    val medians = stats.collect { case (k, ts) if ts.nonEmpty => k -> pct(ts, 0.5) }
+    val medianJson = jmap((_, ts) => pct(ts, 0.5))
     val p05 = jmap((_, ts) => pct(ts, 0.05))
     val p95 = jmap((_, ts) => pct(ts, 0.95))
     // interquartile range per query — the spread statistic the interleaved
@@ -105,7 +129,7 @@ object Bench {
     // at small rep counts)
     val iqr = jmap((_, ts) => pct(ts, 0.75) - pct(ts, 0.25))
     val errJson = errors.map { case (k, v) => s"\"$k\":\"$v\"" }.mkString("{", ",", "}")
-    val total = stats.collect { case (_, ts) if ts.nonEmpty => pct(ts, 0.5) }.sum
+    val total = medians.map(_._2).sum
     // embed the latest scaling-exponent run ([[Scaling]], target/scaling.json)
     // so the per-round bench artifact carries the growth story without the
     // driver's bench run itself paying the 3-scale ladder. The file is
@@ -127,7 +151,7 @@ object Bench {
           "stale scaling.json: ladder query set differs from the current surface")
         raw
       }.toOption else None).getOrElse("null")
-    val detail = s"""{"metric":"total","value":$total,"unit":"sec","queries":$medians,""" +
+    val detail = s"""{"metric":"total","value":$total,"unit":"sec","queries":$medianJson,""" +
       s""""p05":$p05,"p95":$p95,"iqr":$iqr,"reps":$reps,"errors":$errJson,"sf":"$sfDir",""" +
       s""""scaling":$scaling}"""
     val detailPath = Paths.get("target/bench_detail.json")
@@ -135,13 +159,13 @@ object Bench {
     Files.write(detailPath, detail.getBytes(StandardCharsets.UTF_8))
 
     spark.stop()
-    // per-query medians as their OWN stdout line (round 15, additions-only):
-    // the driver's tail capture is 2000 chars, so the contract line below
-    // must stay compact and LAST — but a full-stdout reader can pick this
-    // line up and compute per-query speedups without filesystem access.
-    // Keyed "bench_queries" (not "metric") so a tail-truncated fragment of
-    // it can never be mistaken for, or shadow, the contract line.
-    println(s"""{"bench_queries":$medians,"unit":"sec","sf":"$sfDir","reps":$reps}""")
+    // per-query medians as their OWN stdout lines: a bounded reader's tail
+    // capture is 2000 chars, so each part stays under it and the contract
+    // line below stays compact and LAST — a stdout reader can compute
+    // per-query speedups without filesystem access. Keyed "bench_queries"
+    // (not "metric") so a part can never be mistaken for, or shadow, the
+    // contract line.
+    medianParts(medians, s""""unit":"sec","sf":"$sfDir","reps":$reps""").foreach(println)
     // compact, driver-parseable summary — MUST be the last stdout line and
     // small enough to survive a bounded tail capture
     println(s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir",""" +

@@ -31,9 +31,6 @@ import scala.collection.mutable
   */
 object Scaling {
 
-  private def pct(sorted: Seq[Double], q: Double): Double =
-    sorted(math.round((sorted.size - 1) * q).toInt)
-
   /** Numeric scale factor parsed from the dir name (`.../sf0.01` → 0.01). */
   private def sfOf(dir: String): Double =
     "sf([0-9.]+)".r.findFirstMatchIn(dir).map(_.group(1).toDouble)
@@ -53,8 +50,7 @@ object Scaling {
       val sf = sfOf(dir)
       // index/material-cache build is untimed, same contract as Bench
       try SparkEntry.warm(spark, dir)
-      catch { case e: Throwable =>
-        errors(s"_warm@$sf") = e.toString.replaceAll("[\"\\\\\\p{Cntrl}]", " ").take(200) }
+      catch { case e: Throwable => errors(s"_warm@$sf") = Bench.errText(e) }
       // session-lifetime pins from THIS sf's warm() — the per-rep hygiene
       // sweep below must not evict them (Bench's round-12 narrowing); the
       // snapshot is re-taken per rung because each warm() pins that rung's
@@ -69,8 +65,7 @@ object Scaling {
               fn(spark, dir).write.format("noop").mode("overwrite").save()
               Some((System.nanoTime() - t0) / 1e9)
             } catch { case e: Throwable =>
-              errors(s"$name@$sf") =
-                e.toString.replaceAll("[\"\\\\\\p{Cntrl}]", " ").take(200)
+              errors(s"$name@$sf") = Bench.errText(e)
               None
             }
             // Bench's hygiene, INSIDE the rep loop (round-12 advice): each
@@ -84,7 +79,7 @@ object Scaling {
           }.sorted
           if (times.nonEmpty)
             medians.getOrElseUpdate(name, mutable.LinkedHashMap.empty)(sf) =
-              pct(times, 0.5)
+              Bench.pct(times, 0.5)
         }
     }
 

@@ -1,9 +1,5 @@
 package graft.build
 
-import java.nio.file.{Files, Paths}
-
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -60,45 +56,32 @@ final class MaterializedGraph(
   * from raw `events` in memory, paying graph-construction cost per query and
   * never exercising the partitioned at-rest layout. This cache derives the
   * tables once ([[EventGraph]]), persists them via [[GraphBuilder.write]]
-  * under `target/graft-cache/`, collects the probe scalars, and hands every
-  * query a partition-prunable scan. The layout survives the JVM: a later run
-  * (e.g. the bench after verify) finds the `_GRAFT_DONE` marker and skips
-  * straight to reading. Bump [[GraphCache.Version]] whenever the derivation
-  * semantics change — the version is part of the cache path, so stale
-  * layouts from earlier code can never leak into results. */
+  * under the corpus's [[DerivedCache.root]], collects the probe scalars, and
+  * hands every query a partition-prunable scan. The loaded graph is an
+  * entry of [[DerivedCache]]'s one memo, keyed by the resolved path and
+  * built under that path's lock, so a cache-root switch mid-session
+  * re-materializes instead of serving the previous root's graph. The layout
+  * survives the JVM: a later run (e.g. the bench after verify) finds the
+  * `_GRAFT_DONE` marker and skips straight to reading. Bump
+  * [[GraphCache.Version]] whenever the derivation semantics change — the
+  * version is part of the cache path, so stale layouts from earlier code
+  * can never leak into results. */
 object GraphCache {
 
   /** Cache-layout version; bump on any derivation/layout change.
     * v3: probes table gained the (py, pm, pdd) busiest-date anchor. */
   val Version = 3
 
-  // keyed on the RESOLVED cache path (not just dir+delta) so changing the
-  // configurable cache root mid-session re-materializes instead of serving
-  // the graph from the previous root
-  private val memo = TrieMap.empty[(SparkSession, String), MaterializedGraph]
-
   def apply(spark: SparkSession, dir: String,
-      delta: Long = EventGraph.DeltaSeconds): MaterializedGraph = synchronized {
-    memo.keys.filter(_._1.sparkContext.isStopped).foreach(memo.remove)
-    memo.getOrElseUpdate((spark, cachePath(spark, dir, delta)), load(spark, dir, delta))
-  }
-
-  private def cachePath(spark: SparkSession, dir: String, delta: Long): String =
-    s"${DerivedCache.baseDir(spark)}/${DerivedCache.dirKey(dir)}_d${delta}_v$Version"
-
-  private def load(spark: SparkSession, dir: String, delta: Long): MaterializedGraph = {
-    val path = cachePath(spark, dir, delta)
-    val marker = Paths.get(s"$path/_GRAFT_DONE")
-    if (!Files.exists(marker)) {
-      build(spark, dir, delta, path)
-      Files.createDirectories(marker.getParent)
-      Files.createFile(marker)
+      delta: Long = EventGraph.DeltaSeconds): MaterializedGraph = {
+    val path = DerivedCache.path(spark, dir, (s"graph_d$delta", Version))
+    DerivedCache.atRest(spark, path)(build(spark, dir, delta, path)) {
+      val p = spark.read.parquet(s"$path/probes").collect()(0)
+      val probes = GraphProbes(p.getLong(0), p.getLong(1), p.getLong(2),
+        p.getLong(3), p.getLong(4), p.getLong(5), p.getLong(6), p.getLong(7),
+        p.getLong(8), p.getLong(9), p.getLong(10))
+      new MaterializedGraph(spark, path, delta, probes)
     }
-    val p = spark.read.parquet(s"$path/probes").collect()(0)
-    val probes = GraphProbes(p.getLong(0), p.getLong(1), p.getLong(2),
-      p.getLong(3), p.getLong(4), p.getLong(5), p.getLong(6), p.getLong(7),
-      p.getLong(8), p.getLong(9), p.getLong(10))
-    new MaterializedGraph(spark, path, delta, probes)
   }
 
   /** One-time derivation + write; all heavy lineage is persisted so the five

@@ -1,7 +1,5 @@
 package graft.operators
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.broadcast
 
@@ -12,12 +10,13 @@ import graft.build.DerivedCache
   * Both exist as correctness/recall baselines for the indexed variants
   * (dd3, ss2–ss8) and must never be pointed at a production corpus: dd2 is
   * quadratic in shingle document frequency, ss1 reads every vector. The
-  * gate is one count over the at-rest input, MEMOIZED per (session, query,
-  * corpus, mutation epoch) — the count is a data property that must not
-  * inflate every timed rep of the very control queries the scaling harness
-  * measures, but the at-rest inputs are NOT immutable (the incremental
-  * append paths grow them), so the corpus's [[DerivedCache.mutationEpoch]]
-  * keys the memo and any append/replace forces a recount. Running a bigger
+  * gate is one count over the at-rest input, an entry of the one memo
+  * ([[DerivedCache.scalar]]) per (session, corpus root, query) — the count
+  * is a data property that must not inflate every timed rep of the very
+  * control queries the scaling harness measures, but the at-rest inputs are
+  * NOT immutable (the incremental append paths grow them), so the entry is
+  * versioned by the corpus root's writes and any append/replace forces a
+  * recount. Running a bigger
   * control is a deliberate act (`spark.graft.control.maxRows`), never an
   * accident. */
 private[operators] object Controls {
@@ -26,11 +25,10 @@ private[operators] object Controls {
   val MaxRowsDefault = 10000000L
 
   /** Returns `df` unchanged when its row count is within the configured
-    * guard; throws otherwise. `corpus` + its mutation epoch key the
-    * memoized count. */
+    * guard; throws otherwise. `corpus`'s root keys the memoized count. */
   def gate(df: DataFrame, what: String, corpus: String): DataFrame = {
     val max = Conf.long(df.sparkSession, MaxRowsKey, MaxRowsDefault)
-    val n = EpochMemo.scalar(df.sparkSession, what, corpus)(df.count())
+    val n = DerivedCache.scalar(df.sparkSession, corpus, what)(df.count())
     check(n, what, max)
     df
   }
@@ -85,13 +83,13 @@ private[operators] object Controls {
     * quadratic join. `mass` must be the EXACT pre-distinct candidate-join
     * row count, computable from the at-rest index tables with one narrow
     * agg (zero text reads for the prefix/band families); it is memoized per
-    * (session, query, corpus, mutation epoch) like the row-count gates, so
+    * (session, corpus root, query) like the row-count gates, so
     * timed reps never re-pay it but any append forces a re-check. The
     * default admits the sf1 ladder rung (max measured mass 2.1e7) with
     * ~50× headroom; crossing it is a deliberate act, never an accident. */
   def massGate(s: SparkSession, what: String, corpus: String,
       instrument: String)(mass: => Long): Unit = {
-    val m = EpochMemo.scalar(s, s"mass:$what", corpus)(mass)
+    val m = DerivedCache.scalar(s, corpus, s"mass:$what")(mass)
     massCheck(s, what, instrument, m)
   }
 
@@ -112,57 +110,13 @@ private[operators] object Controls {
   }
 }
 
-/** Memoized data properties keyed by (session, name, corpus, mutation
-  * epoch) — the shared machinery behind every size probe that plans a
-  * query (the control gates above, the [[Guard]] ceilings below) and the
-  * collected probe rows folded into plans as literals. Probes are data
-  * properties, so they must not re-run on every timed rep; but the at-rest
-  * inputs are NOT immutable (the incremental append and delete paths
-  * change them), so the corpus's [[DerivedCache.mutationEpoch]]
-  * keys each entry and any append/replace forces a recompute. Entries for
-  * superseded epochs (and stopped sessions) are evicted on access, so a
-  * long-lived ingest session holds at most one entry per (name, corpus).
-  *
-  * Concurrency: the map stores lazily-forced cells, and
-  * `TrieMap.getOrElseUpdate` installs exactly ONE cell per key — two
-  * queries planning the same probe concurrently force the same `lazy val`,
-  * so the Spark count job the memo exists to dedupe runs once (a raced
-  * loser's un-forced cell is garbage, never executed). The eviction scans
-  * are O(live entries) — one per (name, corpus), bounded by the declared
-  * surface. */
-private[operators] object EpochMemo {
-
-  private final class Cell[V](@volatile private var compute: () => V) {
-    // release the thunk once forced: the closure can capture a DataFrame
-    // and its whole plan graph, dead weight next to the small result
-    lazy val value: V = {
-      val v = compute()
-      compute = null
-      v
-    }
-  }
-
-  private val memo = TrieMap.empty[(SparkSession, String, String, Long), Cell[_]]
-
-  /** `name` must identify one value type. */
-  def scalar[V](s: SparkSession, name: String, corpus: String)(compute: => V): V = {
-    memo.keys.filter(_._1.sparkContext.isStopped).foreach(memo.remove)
-    val epoch = DerivedCache.mutationEpoch(corpus)
-    memo.keys
-      .filter(k => k._1 == s && k._2 == name && k._3 == corpus && k._4 != epoch)
-      .foreach(memo.remove)
-    memo.getOrElseUpdate((s, name, corpus, epoch), new Cell(() => compute))
-      .asInstanceOf[Cell[V]].value
-  }
-}
-
 /** The one row ceiling behind every data-sized broadcast — graph state and
   * loop frontiers, text term stats, dedup hash sets, a03's exploded grid,
   * the ss9/ss15 query batch. Under the ceiling the operand broadcasts and
   * the corpus-sized side never moves; above it the join degrades by one
   * exchange and never fails at Spark's broadcast limit or in a driver OOM.
   * The caller supplies the operand's row count, normally a memoized
-  * [[EpochMemo]] probe. One key, [[BroadcastMaxKey]], overrides every
+  * [[DerivedCache.scalar]] probe. One key, [[BroadcastMaxKey]], overrides every
   * family's default `max` (sized per family by row width: 5 M narrow rows
   * is low-hundreds of MB per build); 0 forces every fallback. */
 private[operators] object Guard {

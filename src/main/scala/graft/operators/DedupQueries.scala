@@ -287,7 +287,7 @@ object DedupQueries {
     // round 14 (guide §3.1): with a corpus guard, the duplicated-hash set
     // joins in guarded-broadcast mode — the occurrence rows then flow
     // scan → join → doc_id island merge with ONE exchange instead of
-    // also being re-keyed on h (the probe is a memoized per-epoch scalar
+    // also being re-keyed on h (the probe is a memoized per-version scalar
     // off the at-rest index, the dayVertices discipline; above the
     // ceiling the join degrades to the v1 keyed shuffle, never fails)
     val dupOp = guard.fold(dupH) { case (gs, gd) =>
@@ -300,7 +300,7 @@ object DedupQueries {
     * [[Guard]] probe for the duplicated/boilerplate hash-set joins
     * (dd11/dd12/dd18; 32-char hash rows, ~5 M ≈ 300 MB built). */
   private def dupWindowHashes(s: SparkSession, d: String): Long =
-    EpochMemo.scalar(s, "dedup.dupWindowHashes", d) {
+    DerivedCache.scalar(s, d, "dedup.dupWindowHashes") {
       windows(s, d).groupBy(col("h")).agg(count(lit(1)).as("c"))
         .filter(col("c") > 1).count()
     }
@@ -655,7 +655,7 @@ object DedupQueries {
     * (doc_id, sh). Until round 14 dd4 recomputed every document's hash per
     * query ("one narrow column, cheaper to recompute than to maintain") —
     * but at 100 TB the recompute is a full TEXT scan per query, and the
-    * route-selection probe re-paid it once per mutation epoch per session.
+    * route-selection probe re-paid it once per corpus version per session.
     * The 16-byte-per-document index costs one hash pass at ingest (it is
     * per-document, so append-exact and purgeable like the shingle family)
     * and turns both the query scan and the stats refresh into narrow
@@ -705,11 +705,11 @@ object DedupQueries {
     // size and the band-row denominator — READ from the maintained stats
     // meta row (refreshed at every ingest mutation), so route selection
     // costs a one-row read instead of a corpus aggregation; memoized per
-    // mutation epoch like every planning probe
+    // corpus version like every planning probe
     val single = simhashSingleBands(hashed)
     def stats = simStats.read(s, d).head
-    val mSingle = EpochMemo.scalar(s, "mass1:dd4_simhash", d)(stats.getLong(0))
-    val nBandRows = EpochMemo.scalar(s, "bandrows:dd4_simhash", d)(stats.getLong(1))
+    val mSingle = DerivedCache.scalar(s, d, "mass1:dd4_simhash")(stats.getLong(0))
+    val nBandRows = DerivedCache.scalar(s, d, "bandrows:dd4_simhash")(stats.getLong(1))
     val fanoutMax = Conf.double(s, Controls.SimhashEscalateKey, Controls.SimhashEscalateDefault)
     // same trigger shape as dd7's escalation: average candidate fan-out per
     // band row. Healthy corpora measure ~10 at sf0.1; the saturated sf1
@@ -727,7 +727,7 @@ object DedupQueries {
         .select($"d1", $"d2", $"sh1", $"sh2").distinct()
     } else {
       val pairBands = simhashPairBands(hashed)
-      val mPair = EpochMemo.scalar(s, "mass2:dd4_simhash", d) {
+      val mPair = DerivedCache.scalar(s, d, "mass2:dd4_simhash") {
         pairBands.groupBy($"band", $"v1", $"v2").agg(count(lit(1)).as("occ"))
           .agg(coalesce(sum(expr("occ * (occ - 1) div 2")), lit(0L)))
           .head.getLong(0)
@@ -762,10 +762,10 @@ object DedupQueries {
       expr("conv(substring(md5(cast(doc_id as string)), 1, 2), 16, 10)").cast("long") < 64
     val trainSg = sh.filter(!isEval).select($"sg").distinct()
     // round 14: the train-shingle set is distinct-shingle bounded —
-    // broadcast it under the Guard ceiling (memoized per-epoch probe,
+    // broadcast it under the Guard ceiling (memoized per-version probe,
     // the dd11/dd18 discipline) so the eval rows stream straight into
     // their doc-keyed rollup; keyed shuffle-hash above the ceiling
-    val nSg = EpochMemo.scalar(s, "dedup.distinctShingles", d) {
+    val nSg = DerivedCache.scalar(s, d, "dedup.distinctShingles") {
       sh.select($"sg").distinct().count()
     }
     val trainOp = Guard.sized(trainSg.withColumn("hit", lit(1L)), nSg)
@@ -850,7 +850,7 @@ object DedupQueries {
     * shingle/prefix family (build, append, re-rank, delete), so at query
     * time the escalation decision READS A CONSTANT instead of running the
     * corpus-index aggregation (round-13 verdict stretch: at 100 TB even
-    * the narrow probe agg is a scan, and it ran once per mutation epoch
+    * the narrow probe agg is a scan, and it ran once per corpus version
     * per session — now it runs once per mutation, at ingest, where the
     * index scan is already being paid). */
   private[operators] val PrefixStatsTable = ("sh_stats", 1)
@@ -953,7 +953,7 @@ object DedupQueries {
   }
 
   /** The stats row, refreshed at the END of every shingle/prefix-family
-    * mutation, inside the same epoch. */
+    * mutation, inside the same corpus version. */
   private[operators] val containStats = StatsRow(PrefixStatsTable, statsRowsOf)
 
   /** Maintain the prefix index under a batch append: rank the BATCH's
@@ -1053,17 +1053,17 @@ object DedupQueries {
     * (round-13 verdict stretch; StatsMetaSpec pins meta == live). The
     * predicate-scoped case (dd10's batch-vs-corpus) keeps the live aggs —
     * its masses are query properties, and its probe side is batch-scoped.
-    * Both paths stay memoized per corpus mutation epoch. */
+    * Both paths stay memoized per corpus version. */
   private def singlePreflight(s: SparkSession, d: String, what: String,
       d1Pred: Column, d2Pred: Column, wholeCorpus: Boolean = false): (Long, Long) = {
     import s.implicits._
     if (wholeCorpus) {
       def stats = containStats.read(s, d).head
-      val m1 = EpochMemo.scalar(s, s"mass1:$what", d)(stats.getLong(0))
-      val nPrefixRows = EpochMemo.scalar(s, s"prefrows:$what", d)(stats.getLong(1))
+      val m1 = DerivedCache.scalar(s, d, s"mass1:$what")(stats.getLong(0))
+      val nPrefixRows = DerivedCache.scalar(s, d, s"prefrows:$what")(stats.getLong(1))
       return (m1, nPrefixRows)
     }
-    val m1 = EpochMemo.scalar(s, s"mass1:$what", d) {
+    val m1 = DerivedCache.scalar(s, d, s"mass1:$what") {
       val live = shingles(s, d).filter(d2Pred)
         .groupBy($"sg").agg(count(lit(1)).as("dfm"))
       // rename d1 → doc_id so d2Pred decides the self-probe correction:
@@ -1076,7 +1076,7 @@ object DedupQueries {
           when(d2Pred, 1L).otherwise(0L)), lit(0L)))
         .head.getLong(0)
     }
-    val nPrefixRows = EpochMemo.scalar(s, s"prefrows:$what", d) {
+    val nPrefixRows = DerivedCache.scalar(s, d, s"prefrows:$what") {
       containPrefix(s, d).filter($"core").filter(d1Pred).count()
     }
     (m1, nPrefixRows)
@@ -1125,7 +1125,7 @@ object DedupQueries {
         .select($"d1", xxhash64($"g1", $"g2").as("pk"))
       val singletonPref = pref.filter($"core")
         .join(sizes.filter($"n" === 1L).select($"doc_id".as("d1")), "d1")
-      val m2 = EpochMemo.scalar(s, s"mass2:$what", d) {
+      val m2 = DerivedCache.scalar(s, d, s"mass2:$what") {
         val livePairs = docPairs(s, d).filter(d2Pred)
           .groupBy($"pk").agg(count(lit(1)).as("pdm"))
         val pairMass = prefPairs
@@ -1776,8 +1776,8 @@ object DedupQueries {
     * document's PREFIX-UNIVERSE shingles (the semi-join below), a strict
     * subset of the Σ_doc C(n_d, 2) full [[docPairs]] build it prices
     * (pre-round-14 it paid the full expansion; sf1 ladder: 24 s, vs 5 s
-    * for the escalated dd7) — so reading dd22 runs once per mutation
-    * epoch and is strictly cheaper than provisioning the index and
+    * for the escalated dd7) — so reading dd22 runs once per corpus
+    * version and is strictly cheaper than provisioning the index and
     * finding out it doesn't help. */
   private def dd22(s: SparkSession, d: String): DataFrame = {
     import s.implicits._

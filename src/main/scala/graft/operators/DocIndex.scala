@@ -66,7 +66,7 @@ private[operators] final case class DocFamily(
 
 /** A one-row stats table over the current at-rest indexes, and the one
   * rule that keeps it: `read` builds it when absent (a build or a query,
-  * so a repeat build on a built corpus bumps no epoch); `refresh`, a
+  * so a repeat build on a built corpus bumps no version); `refresh`, a
   * mutation's step, builds it when absent and replaces it otherwise. */
 private[operators] final case class StatsRow(id: (String, Int),
     rowsOf: (SparkSession, String) => DataFrame) {

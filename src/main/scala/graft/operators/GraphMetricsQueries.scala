@@ -118,7 +118,7 @@ object GraphMetricsQueries {
     * shuffle. At 100 TB this is the materialized time-slice subgraph every
     * temporal-graph pipeline snapshots before running structural metrics. */
   private def dayEdges(s: SparkSession, d: String): DataFrame =
-    DerivedCache.table(s, d, "edges_probe_day", 2) {
+    DerivedCache.table(s, d, ("edges_probe_day", 2)) {
       import s.implicits._
       val g = GraphCache(s, d)
       val p = g.probes
@@ -136,7 +136,7 @@ object GraphMetricsQueries {
     * degree join paid once at ingest. The CSR-discipline sibling of g01's
     * `temporal_adj`, scoped to the probe-day window. */
   private def dayAdj(s: SparkSession, d: String): DataFrame =
-    DerivedCache.table(s, d, "adj_probe_day", 1) {
+    DerivedCache.table(s, d, ("adj_probe_day", 1)) {
       import s.implicits._
       val e = dayEdges(s, d)
       val und = e.select($"actor1".as("z"), $"actor2".as("o"), $"f_min")
@@ -153,7 +153,7 @@ object GraphMetricsQueries {
     * every per-day structural sweep starts from this |days × distinct
     * pairs| table instead of re-scanning frame granularity. */
   private def edgesByDay(s: SparkSession, d: String): DataFrame =
-    DerivedCache.table(s, d, "edges_by_day", 1) {
+    DerivedCache.table(s, d, ("edges_by_day", 1)) {
       import s.implicits._
       GraphCache(s, d).frameInteractions
         .select(($"year" * 10000 + $"month" * 100 + $"day").cast("long").as("dkey"),
@@ -169,11 +169,11 @@ object GraphMetricsQueries {
     ()
   }
 
-  /** One memoized vertex-count probe per (corpus, mutation epoch) decides
+  /** One memoized vertex-count probe per (corpus root, version) decides
     * every state-side join mode in this module — a scalar distinct-count
     * over the at-rest day-edge table, cost ≪ any of the joins it plans. */
   private def dayVertices(s: SparkSession, d: String): Long =
-    EpochMemo.scalar(s, "graph.dayVertices", d) {
+    DerivedCache.scalar(s, d, "graph.dayVertices") {
       val e = dayEdges(s, d)
       e.select(col("actor1")).unionAll(e.select(col("actor2"))).distinct().count()
     }

@@ -88,7 +88,7 @@ object Ingest {
       tables: Seq[(String, Int)]): Seq[String] = {
     val max = Conf.int(s, CompactMaxFilesKey, CompactMaxFilesDefault)
     val due = tables.filter(t => DerivedCache.isBuilt(s, d, t) &&
-      DerivedCache.parquetFileCount(s, d, t._1, t._2) > max)
+      DerivedCache.parquetFileCount(s, d, t) > max)
     // §2.6: each compaction is an independent staged replace of its own
     // table's scan — overlap the rewrites
     Par.run(due.map(t => () => DerivedCache.compact(s, d, t)))

@@ -506,7 +506,7 @@ object MultimodalQueries {
     val bands = hashes.select($"assetId", posexplode($"bands").as(Seq("band_idx", "band_val")))
     // pre-flight seatbelt (see mm7 scaladoc): the output is the candidate
     // set, whose exact size is the bucket-occupancy birthday sum — one
-    // narrow agg over the at-rest fingerprints, memoized per mutation epoch
+    // narrow agg over the at-rest fingerprints, memoized per corpus version
     Controls.massGate(s, s"phash:$modality", d, "the (band, value) occupancy") {
       bands.groupBy($"band_idx", $"band_val").agg(count(lit(1)).as("occ"))
         .agg(coalesce(sum(expr("occ * (occ - 1) div 2")), lit(0L)))

@@ -50,7 +50,7 @@ object SessionQueries {
     * downstream query (a02, a03, feature builds) starts from the scan. The
     * one-time build is the single-shuffle window pass. */
   private def sessions(s: SparkSession, d: String): DataFrame =
-    DerivedCache.table(s, d, s"evt_sessions_g$GapSec", 1) {
+    DerivedCache.table(s, d, (s"evt_sessions_g$GapSec", 1)) {
       import s.implicits._
       val w = Window.partitionBy($"user_id").orderBy($"ts", $"event_id")
       val cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -125,7 +125,7 @@ object SessionQueries {
     val distinctRanges = sess.select($"f0", $"f1").distinct()
     val grid = distinctRanges
       .select($"f0", $"f1", explode(sequence($"f0", $"f1")).as("frame_id"))
-    val nGridRows = EpochMemo.scalar(s, "a03.gridRows", d) {
+    val nGridRows = DerivedCache.scalar(s, d, "a03.gridRows") {
       distinctRanges.agg(coalesce(sum($"f1" - $"f0" + 1L), lit(0L))).head.getLong(0)
     }
     val joined =

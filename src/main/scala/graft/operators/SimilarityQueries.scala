@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import org.apache.spark.sql.expressions.Window
 
+import graft.build.DerivedCache
 import graft.functions.Exact.{davg, dsum, sqlAvg, sqlSum}
 import graft.functions.VectorOps.{cosineExact, dotExact, hammingDist, hyperSig, normSqExact}
 import graft.sources.Tables
@@ -151,7 +152,7 @@ object SimilarityQueries {
     // so no first timed rep carries a guard's count() job: ss1's control
     // gate and ss9's batch-size broadcast guard
     Controls.gate(Tables.embeddings(s, d), "ss1_cosine_topk", d)
-    EpochMemo.scalar(s, "ss9_batch_rows", d)(
+    DerivedCache.scalar(s, d, "ss9_batch_rows")(
       index(s, d).filter(col("vec_id") % 10 === 0).count())
     ()
   }
@@ -202,11 +203,11 @@ object SimilarityQueries {
         expr(s"substring(sig, band * $BandWidth + 1, $BandWidth)").as("bkey"))
 
   /** Collected probe row (min vec_id: id, embedding, nsq, sig), memoized per
-    * (session, corpus, mutation epoch) — one tiny index lookup shared by
-    * ss2/ss4 and the other probe readers, re-run after a delete removes
-    * the probe vector. */
+    * (session, corpus root), versioned by the root's writes — one tiny
+    * index lookup shared by ss2/ss4 and the other probe readers, re-run
+    * after a delete removes the probe vector. */
   private def probeRow(s: SparkSession, d: String): org.apache.spark.sql.Row =
-    EpochMemo.scalar(s, "ss.probeRow", d) {
+    DerivedCache.scalar(s, d, "ss.probeRow") {
       index(s, d).orderBy(col("vec_id")).limit(1)
         .select(col("vec_id"), col("embedding"), col("nsq"), col("sig")).collect()(0)
     }
@@ -316,7 +317,7 @@ object SimilarityQueries {
       .select($"vec_id".as("qid"), $"sig".as("qsig"))
     val csig = idx.filter($"vec_id" % 10 =!= 0)
       .select($"vec_id".as("nid"), $"sig".as("nsig"))
-    val nBatch = EpochMemo.scalar(s, "ss9_batch_rows", d)(qsig.count())
+    val nBatch = DerivedCache.scalar(s, d, "ss9_batch_rows")(qsig.count())
     (if (Guard.fits(s, nBatch, 2000000L)) broadcast(qsig) else qsig, csig)
   }
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.build.DerivedCache
 import graft.functions.Fingerprint.fingerprintMd5
 import graft.sources.Tables
 
@@ -208,10 +209,10 @@ object TextQueries {
     * ceiling — keeping the corpus-sized posting scan un-shuffled — and
     * degrade to a keyed shuffle-hash join above it, never fail. The
     * vocabulary probe is one memoized narrow count off the at-rest index
-    * (the dayVertices discipline: one scalar job per corpus mutation
-    * epoch, cost ≪ the join it plans). */
+    * (the dayVertices discipline: one scalar job per corpus
+    * version, cost ≪ the join it plans). */
   private def guardedTerms(s: SparkSession, d: String, stats: DataFrame): DataFrame =
-    Guard.sized(stats, EpochMemo.scalar(s, "text.vocab", d) {
+    Guard.sized(stats, DerivedCache.scalar(s, d, "text.vocab") {
       postings(s, d).select(col("t")).distinct().count()
     })
 
@@ -389,16 +390,14 @@ object TextQueries {
       .orderBy($"rank")
   }
 
-  /** Per-corpus memo of the trained merge table (driver state, 8 rows) —
+  /** The trained merge table (driver state, 8 rows), an entry of the one
+    * memo on the corpus root ([[DerivedCache.scalar]]), per session —
     * training is ingest-time work ([[warm]]); tx12 and tx13 both read the
-    * SAME trained artifact, the ss5/centroid discipline. Keyed by corpus
-    * dir like [[graft.build.DerivedCache]]. */
-  private val mergeMemo =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[BpeTrainer.Merge]]
+    * SAME trained artifact, the ss5/centroid discipline. */
   private[operators] def trainedMerges(
       s: SparkSession, d: String): Seq[BpeTrainer.Merge] =
-    mergeMemo.getOrElseUpdate(
-      d, BpeTrainer.train(Tables.documentsWide(s, d), BpeMerges))
+    DerivedCache.scalar(s, d, "tx.bpeMerges")(
+      BpeTrainer.train(Tables.documentsWide(s, d), BpeMerges))
 
   /** tx13: BPE ENCODING under the trained merge table — the apply side of
     * tx12's train side, closing the tokenizer loop: per document, the
@@ -710,7 +709,7 @@ object TextQueries {
     // vocabulary; broadcast under the Guard ceiling (total-token scalar as
     // the cheap over-bound — distinct bigrams ≤ corpus tokens) keeps the
     // (doc, bigram) rows un-shuffled ahead of their doc-keyed rollup
-    val bigramBound = EpochMemo.scalar(s, "text.bigramBound", d) {
+    val bigramBound = DerivedCache.scalar(s, d, "text.bigramBound") {
       postings(s, d).agg(coalesce(sum($"tf"), lit(0L)).as("n")).head.getLong(0)
     }
     val per = dpc.join(Guard.sized(corpus, bigramBound), Seq("w1", "w2"))

@@ -33,8 +33,7 @@ object Bucketed {
     val dk = DerivedCache.dirKey(dir).replace('.', '_')
     val tbl = s"graft_${dk}_${name}_b${buckets}_v$version"
     if (!s.catalog.tableExists(tbl)) {
-      val path = Paths.get(
-        s"${DerivedCache.baseDir(s)}/${DerivedCache.dirKey(dir)}/bucketed_${name}_b${buckets}_v$version")
+      val path = Paths.get(DerivedCache.path(s, dir, (s"bucketed_${name}_b$buckets", version)))
         .toAbsolutePath
       val marker = path.resolve("_GRAFT_DONE")
       if (Files.exists(marker)) {

@@ -60,8 +60,7 @@ private[streaming] object IdempotentFold {
       ckpt: String): java.nio.file.Path = {
     val ck = java.security.MessageDigest.getInstance("MD5")
       .digest(ckpt.getBytes(UTF_8)).take(4).map("%02x".format(_)).mkString
-    Paths.get(
-      s"${DerivedCache.baseDir(s)}/${DerivedCache.dirKey(d)}/stream_${name}_$ck.ledger")
+    Paths.get(s"${DerivedCache.root(s, d)}/stream_${name}_$ck.ledger")
   }
 
   private def folded(s: SparkSession, name: String, d: String, ckpt: String,

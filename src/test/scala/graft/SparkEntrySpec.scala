@@ -35,6 +35,22 @@ class SparkEntrySpec extends AnyFunSuite {
     assert(bad.isEmpty, s"sampled oracles with environment paths: ${bad.keys.toSeq.sorted}")
   }
 
+  test("bench medians split into stdout parts under the tail capture") {
+    val medians = SparkEntry.queries.keys.toSeq.sorted.zipWithIndex
+      .map { case (q, i) => q -> (123.456789012345 + i) }
+    val parts = Bench.medianParts(medians, "\"unit\":\"sec\",\"sf\":\"testdata/sf0.1\",\"reps\":5")
+    assert(parts.size > 1, "the full surface must not fit one part")
+    assert(parts.forall(_.length <= Bench.PartChars), parts.map(_.length))
+    val got = parts.zipWithIndex.flatMap { case (p, i) =>
+      val j = org.json4s.jackson.JsonMethods.parse(p)
+      assert((j \ "part") == org.json4s.JInt(i + 1) && (j \ "of") == org.json4s.JInt(parts.size))
+      (j \ "bench_queries").asInstanceOf[org.json4s.JObject].obj.map {
+        case (k, v) => k -> v.asInstanceOf[org.json4s.JDouble].num
+      }
+    }
+    assert(got == medians, "the parts together must hold every median, in order")
+  }
+
   test("a subset selector matches query names by prefix") {
     val names = SparkEntry.queries.keySet
     def selected(only: String) = names.filter(SparkEntry.selects(Some(only)))

@@ -18,7 +18,7 @@ class CompactionPolicySpec extends SparkSpec {
     .select($"doc_id", $"text")
 
   private def files(d: String): Int =
-    DerivedCache.parquetFileCount(spark, d, DocTables.Shingles._1, DocTables.Shingles._2)
+    DerivedCache.parquetFileCount(spark, d, DocTables.Shingles)
 
   test("the file-count policy compacts appended indexes, content-neutrally") {
     val d = s"/compact-policy/${java.util.UUID.randomUUID()}"

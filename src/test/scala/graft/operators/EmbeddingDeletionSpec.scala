@@ -1,5 +1,8 @@
 package graft.operators
 
+import java.nio.file.Files
+
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{desc, typedlit}
 
@@ -66,6 +69,30 @@ class EmbeddingDeletionSpec extends SparkSpec {
     val after = ss2(dDel)
     assert(after == ss2(dRef), "ss2 after the delete must equal ss2 on the fresh build")
     assert(after != before, "deleting the probe vector must change ss2's answer")
+  }
+
+  test("ss2 after a cache-root switch == ss2 before the delete") {
+    // the probe row is memoized per corpus ROOT: a delete under root A must
+    // not leak into the same corpus key freshly built under root B
+    val rootKey = "spark.graft.cache.dir"
+    val saved = spark.conf.getOption(rootKey)
+    val roots = Seq("a", "b").map(r => Files.createTempDirectory(s"graft-root-$r-").toFile)
+    val d = s"/emb-del-root/${java.util.UUID.randomUUID()}"
+    def ss2(): Seq[String] = rows(SimilarityQueries.queries("ss2_lsh_topk")(spark, d))
+    try {
+      spark.conf.set(rootKey, roots(0).toString)
+      SimilarityQueries.buildEmbeddingIndexes(spark, d, emb)
+      val before = ss2()
+      SimilarityQueries.deleteEmbeddings(spark, d,
+        emb.filter($"vec_id" === allIds.head).select($"vec_id"))
+      ss2()
+      spark.conf.set(rootKey, roots(1).toString)
+      SimilarityQueries.buildEmbeddingIndexes(spark, d, emb)
+      assert(ss2() == before, "root B holds every vector: ss2 must probe the lowest vec_id")
+    } finally {
+      saved.fold(spark.conf.unset(rootKey))(spark.conf.set(rootKey, _))
+      roots.foreach(FileUtils.deleteDirectory)
+    }
   }
 
   test("ss4 and ss12 after an anchor delete == ss4 and ss12 on a fresh build") {

@@ -49,7 +49,7 @@ class IncrementalEmbeddingSpec extends SparkSpec {
       SimilarityQueries.indexRowsOf(base))
     DerivedCache.table(spark, d, DocTables.EmbSq)(
       SimilarityQueries.sqRowsOf(base))
-    DerivedCache.table(spark, d, ivfName, SimilarityQueries.IvfVersion)(
+    DerivedCache.table(spark, d, (ivfName, SimilarityQueries.IvfVersion))(
       SimilarityQueries.ivfAssignRowsOf(base, centsOf(idx0)))
     val cb0 = DerivedCache.table(spark, d, SimilarityQueries.pqCbTable) {
       DerivedCache.table(spark, d, SimilarityQueries.pqMetaTable)(
