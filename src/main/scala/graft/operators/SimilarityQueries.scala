@@ -345,21 +345,17 @@ object SimilarityQueries {
     import s.implicits._
     val idx = index(s, d)
     val (qside, csig) = batchScanSides(s, d, idx)
-    val pooled = csig.crossJoin(qside)
-      .select($"qid", $"nid", hammingDist($"nsig", $"qsig").as("ham"))
-      .withColumn("pn", row_number().over(
-        Window.partitionBy($"qid").orderBy($"ham", $"nid")))
-      .filter($"pn" <= pool)
+    val pooled = GroupTop.per(
+      csig.crossJoin(qside).select($"qid", $"nid", hammingDist($"nsig", $"qsig").as("ham")),
+      Seq($"qid"), Seq($"ham", $"nid"), pool, "pn")
       .select($"qid", $"nid")
-    pooled
+    val scored = pooled
       .join(idx.select($"vec_id".as("qid"), $"embedding".as("qe"), $"nsq".as("qn")), "qid")
       .join(idx.select($"vec_id".as("nid"), $"embedding".as("ne"), $"nsq".as("nn")), "nid")
       .select($"qid", $"nid",
         (dotExact($"qe", $"ne") / (sqrt($"qn") * sqrt($"nn"))).as("cosine"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy($"qid").orderBy(desc("cosine"), $"nid")).cast("long"))
-      .filter($"rank" <= KnnK)
-      .select($"qid", $"rank", $"nid", $"cosine")
+    GroupTop.per(scored, Seq($"qid"), Seq(desc("cosine"), $"nid"), KnnK, "rank")
+      .select($"qid", $"rank".cast("long").as("rank"), $"nid", $"cosine")
       .orderBy($"qid", $"rank")
   }
 
@@ -405,13 +401,11 @@ object SimilarityQueries {
   private[operators] def ivfAssignRowsOf(vecs: DataFrame, cents: DataFrame): DataFrame = {
     val s = vecs.sparkSession
     import s.implicits._
-    vecs
+    val scored = vecs
       .repartition($"vec_id")
       .crossJoin(broadcast(cents))
       .select($"vec_id", $"cid", cosineExact($"embedding", $"cemb").as("ccos"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy($"vec_id").orderBy(desc("ccos"), $"cid")))
-      .filter($"rn" === 1)
+    GroupTop.per(scored, Seq($"vec_id"), Seq(desc("ccos"), $"cid"), 1, "rn")
       .select($"vec_id", $"cid")
   }
 
@@ -589,20 +583,51 @@ object SimilarityQueries {
     * per corpus vector in ONE pass, at any corpus size. */
   private val ParetoSampleN = 8
 
+  /** The sampled audits' fixed probe set (pid, pemb, pnsq, psig) and its
+    * size: the [[ParetoSampleN]] smallest `md5(vec_id)` hashes (the
+    * p03/tx5 stable-hash construction + a TakeOrdered — deterministic,
+    * corpus-size-independent count, no RNG). */
+  private def paretoProbes(idx: DataFrame): (DataFrame, Long) = {
+    val probes = idx
+      .select(col("vec_id").as("pid"), col("embedding").as("pemb"),
+        col("nsq").as("pnsq"), col("sig").as("psig"),
+        expr("conv(substring(md5(cast(vec_id as string)), 1, 8), 16, 10)")
+          .cast("long").as("h"))
+      .orderBy(col("h"), col("pid")).limit(ParetoSampleN)
+      .drop("h")
+    (probes, probes.count())
+  }
+
+  /** The sampled audits' recall rows: per value of `grid`'s sweep column
+    * `key`, how many `top` rows are exact (pid, vec_id) pairs, and that
+    * count over the nProbes·[[TopK]] exact pairs — micro-averaged recall,
+    * one exact division per row; a value with no hits reads 0. */
+  private def recallRows(grid: DataFrame, key: String, top: DataFrame,
+      exact: DataFrame, nProbes: Long): DataFrame = {
+    // both broadcasts are bounded: `exact` is ≤ nProbes·TopK rows and
+    // `hits` ≤ |grid| (a left-outer join can only build its right side)
+    val hits = top.join(broadcast(exact), Seq("pid", "vec_id"), "left_semi")
+      .groupBy(col(key)).agg(count(lit(1)).as("h"))
+    val h = coalesce(col("h"), lit(0L))
+    grid.join(broadcast(hits), Seq(key), "left")
+      .select(col(key), lit(nProbes).as("n_probes"), h.as("n_hits"),
+        (h.cast("double") / lit((nProbes * TopK).toDouble)).as("recall"))
+      .orderBy(col(key))
+  }
+
   /** ss19b: the recall-Pareto audit ABOVE the [[Controls]] gate (round-9
     * verdict item 4) — ss19's instrument re-based on a FIXED HASH-SAMPLED
     * probe set so it runs where tuning matters most, the full corpus:
     *
-    *  - probes = the [[ParetoSampleN]] smallest `md5(vec_id)` hashes (the
-    *    p03/tx5 stable-hash construction + a TakeOrdered — deterministic,
-    *    corpus-size-independent count, no RNG);
+    *  - probes = [[paretoProbes]], a fixed hash-sampled set;
     *  - ONE corpus pass scores every vector against all probes (Hamming
     *    for the pool arm, exact cosine for the ground truth) off the
     *    narrow at-rest index — cost S·n, embarrassingly parallel, unlike
     *    ss1's per-query brute force this is a batch audit shape;
-    *  - per-probe top-K/top-pool use the two-phase grouped-top-K prune
-    *    (local rank within a vec_id bucket, global rank over the ≤ 32·K
-    *    survivors) so no per-probe corpus-sized window partition exists;
+    *  - per-probe top-K/top-pool are [[GroupTop.per]] cuts: Spark's
+    *    partial `WindowGroupLimit` keeps ≤ k rows per probe in each map
+    *    task before the per-probe exchange, so no probe's corpus-sized
+    *    row set is ever shuffled or sorted as one window partition;
     *  - per pool width, ss2's pool-then-rerank ranking is reproduced and
     *    micro-averaged recall over the probe set reported — one exact
     *    division per row.
@@ -613,53 +638,20 @@ object SimilarityQueries {
   private def ss19b(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val idx = index(s, d)
-    val probes = idx
-      .select($"vec_id".as("pid"), $"embedding".as("pemb"),
-        $"nsq".as("pnsq"), $"sig".as("psig"),
-        expr("conv(substring(md5(cast(vec_id as string)), 1, 8), 16, 10)")
-          .cast("long").as("h"))
-      .orderBy($"h", $"pid").limit(ParetoSampleN)
-      .drop("h")
-    val nProbes = probes.count()
+    val (probes, nProbes) = paretoProbes(idx)
     val scored = idx.crossJoin(broadcast(probes))
       .filter($"vec_id" =!= $"pid")
       .select($"pid", $"vec_id",
         hammingDist($"sig", $"psig").as("ham"),
         (dotExact($"embedding", $"pemb") /
           (sqrt($"nsq") * sqrt($"pnsq"))).as("cosine"))
-    // two-phase grouped top-K: the local prune keeps every window
-    // partition at n/32 rows, the global rank sees ≤ 32·k survivors —
-    // result identical to a direct per-probe top-k (any prune keeping
-    // per-bucket top-k preserves the global top-k), so the oracle ranks
-    // directly
-    def pruned(order: Seq[Column], k: Int, as: String): DataFrame = {
-      val wl = Window.partitionBy($"pid", $"_b").orderBy(order: _*)
-      val wg = Window.partitionBy($"pid").orderBy(order: _*)
-      scored.withColumn("_b", pmod($"vec_id", lit(32)))
-        .withColumn("_lr", row_number().over(wl)).filter($"_lr" <= k)
-        .withColumn(as, row_number().over(wg)).filter(col(as) <= k)
-        .drop("_b", "_lr")
-    }
-    val exact = pruned(Seq(desc("cosine"), $"vec_id".asc), TopK, "xr")
+    val exact = GroupTop.per(scored, Seq($"pid"), Seq(desc("cosine"), $"vec_id"), TopK, "xr")
       .select($"pid", $"vec_id")
-    val pooled = pruned(Seq($"ham".asc, $"vec_id".asc), HamPool, "pr")
+    val pooled = GroupTop.per(scored, Seq($"pid"), Seq($"ham", $"vec_id"), HamPool, "pr")
     val pools = ParetoPools.toDF("pool")
-    val rr = pooled.join(broadcast(pools), $"pr" <= $"pool")
-      .withColumn("rrk", row_number().over(
-        Window.partitionBy($"pid", $"pool").orderBy(desc("cosine"), $"vec_id")))
-      .filter($"rrk" <= TopK)
-    val hits = rr.join(exact, Seq("pid", "vec_id"), "left_semi")
-      .groupBy($"pool").agg(count(lit(1)).as("h"))
-    // broadcast the AGGREGATE side: a left-outer join can only build
-    // (broadcast) its non-preserved right side, so hinting the tiny
-    // `pools` frame on the left is dropped by Spark (HintErrorLogger);
-    // `hits` is a ≤|pools|-row groupBy result — the legal broadcast side
-    pools.join(broadcast(hits), Seq("pool"), "left")
-      .select($"pool", lit(nProbes).as("n_probes"),
-        coalesce($"h", lit(0L)).as("n_hits"),
-        (coalesce($"h", lit(0L)).cast("double") /
-          lit((nProbes * TopK).toDouble)).as("recall"))
-      .orderBy($"pool")
+    val rr = GroupTop.per(pooled.join(broadcast(pools), $"pr" <= $"pool"),
+      Seq($"pid", $"pool"), Seq(desc("cosine"), $"vec_id"), TopK, "rrk")
+    recallRows(pools, "pool", rr, exact, nProbes)
   }
 
   /** nProbe sweep of the declared ss22 audit — the same grid the recall
@@ -673,69 +665,46 @@ object SimilarityQueries {
     * (scan selectivity of the compressed-domain arm), ss22 turns nProbe
     * (cell fan-out of the trained-IVF arm, ss5/ss12's knob), completing
     * the pair every production ANN deployment tunes together. Probes =
-    * the same fixed [[ParetoSampleN]] smallest-md5 sample; ONE corpus
-    * pass scores every (probe, vector) exact cosine; each vector's cell
-    * (the MAINTAINED trained assignment) joins the probe's cell RANKING
-    * against the trained centroids (a cells-bounded window), so "nProbe
-    * = v" candidates are exactly `cell_rank ≤ v` — the declared ss5
-    * search semantics, batch-shaped. Per-(probe, nProbe) top-k runs the
-    * two-phase grouped-top-K prune (no per-probe corpus-sized window),
-    * micro-averaged recall per sweep value, one exact division. The
-    * oracle retrains the quantizer in SQL (kmSql) and re-ranks directly. */
+    * the same [[paretoProbes]] sample; ONE corpus pass scores every
+    * (probe, vector) exact cosine; each vector's cell (the MAINTAINED
+    * trained assignment) joins the probe's cell RANKING against the
+    * trained centroids (a cells-bounded window), so "nProbe = v"
+    * candidates are exactly `cell_rank ≤ v` — the declared ss5 search
+    * semantics, batch-shaped. Per-(probe, nProbe) top-k is a
+    * [[GroupTop.per]] cut (Spark's partial `WindowGroupLimit` prunes each
+    * map task to k rows per group before the exchange), then
+    * [[recallRows]] per sweep value. The oracle retrains the quantizer in
+    * SQL (kmSql) and re-ranks directly. */
   private def ss22(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val idx = index(s, d)
-    val probes = idx
-      .select($"vec_id".as("pid"), $"embedding".as("pemb"), $"nsq".as("pnsq"),
-        expr("conv(substring(md5(cast(vec_id as string)), 1, 8), 16, 10)")
-          .cast("long").as("h"))
-      .orderBy($"h", $"pid").limit(ParetoSampleN)
-      .drop("h")
-    val nProbes = probes.count()
+    val (probes, nProbes) = paretoProbes(idx)
     // probe → cell ranking against the TRAINED centroids: probes × cells
     // cosines (cells-bounded), ranked per probe
     val pev = evRowsOf(probes.select($"pid".as("vec_id"), $"pemb".as("embedding")))
-    val cellRank = assignRank(pev, kmCentroids(s, d, DefaultCells))
+    val cellRank = assignRank(pev, kmCentroids(s, d, DefaultCells), DefaultCells)
     val scored = idx.crossJoin(broadcast(probes))
       .filter($"vec_id" =!= $"pid")
       .select($"pid", $"vec_id",
         (dotExact($"embedding", $"pemb") /
           (sqrt($"nsq") * sqrt($"pnsq"))).as("cosine"))
-    def pruned(src: DataFrame, parts: Seq[Column], k: Int, as: String): DataFrame = {
-      val wl = Window.partitionBy(parts :+ $"_b": _*).orderBy(desc("cosine"), $"vec_id")
-      val wg = Window.partitionBy(parts: _*).orderBy(desc("cosine"), $"vec_id")
-      src.withColumn("_b", pmod($"vec_id", lit(32)))
-        .withColumn("_lr", row_number().over(wl)).filter($"_lr" <= k)
-        .withColumn(as, row_number().over(wg)).filter(col(as) <= k)
-        .drop("_b", "_lr")
-    }
-    val exact = pruned(scored, Seq($"pid"), TopK, "xr").select($"pid", $"vec_id")
+    val byCos = Seq(desc("cosine"), $"vec_id")
+    val exact = GroupTop.per(scored, Seq($"pid"), byCos, TopK, "xr").select($"pid", $"vec_id")
     val tagged = scored
       .join(kmAssign(s, d, DefaultCells), "vec_id")
       .join(broadcast(cellRank), Seq("pid", "cid"))
     val nps = NProbeSweep.toDF("np")
-    val cand = tagged.join(broadcast(nps), $"crk" <= $"np")
-    val topk = pruned(cand, Seq($"pid", $"np"), TopK, "rk")
-    val hits = topk.join(exact, Seq("pid", "vec_id"), "left_semi")
-      .groupBy($"np").agg(count(lit(1)).as("h"))
-    // same legality fix as ss19b: broadcast the ≤|sweep|-row aggregate
-    // (the right side a left-outer join can actually build)
-    nps.join(broadcast(hits), Seq("np"), "left")
-      .select($"np", lit(nProbes).as("n_probes"),
-        coalesce($"h", lit(0L)).as("n_hits"),
-        (coalesce($"h", lit(0L)).cast("double") /
-          lit((nProbes * TopK).toDouble)).as("recall"))
-      .orderBy($"np")
+    val topk = GroupTop.per(tagged.join(broadcast(nps), $"crk" <= $"np"),
+      Seq($"pid", $"np"), byCos, TopK, "rk")
+    recallRows(nps, "np", topk, exact, nProbes)
   }
 
-  /** Full cosine RANKING of exploded probe rows against a centroid frame
-    * — [[assignTo]] without the rn=1 cut: (pid, cid, crk), the per-probe
-    * cell search order ss5 scans in. */
-  private def assignRank(pev: DataFrame, cents: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("vec_id")).orderBy(desc("cos"), col("cid"))
-    cosTo(pev, cents).withColumn("crk", row_number().over(w))
+  /** Full cosine RANKING of exploded probe rows against a frame of at
+    * most `nc` centroids — [[assignTo]] at k = `nc` instead of 1:
+    * (pid, cid, crk), the per-probe cell search order ss5 scans in. */
+  private def assignRank(pev: DataFrame, cents: DataFrame, nc: Int): DataFrame =
+    GroupTop.per(cosTo(pev, cents), Seq(col("vec_id")), Seq(desc("cos"), col("cid")), nc, "crk")
       .select(col("vec_id").as("pid"), col("cid"), col("crk"))
-  }
 
   /** ss6: quantized-scan ANN — rank the WHOLE corpus by the int8
     * approximate cosine (exact integer dot of the codes, rescaled by the
@@ -1040,8 +1009,7 @@ object SimilarityQueries {
     val dist = sub.join(codebook, Seq("m", "pos"))
       .groupBy(col("vec_id"), col("m"), col("cid"))
       .agg(dsum((col("e") - col("ce")) * (col("e") - col("ce"))).as("dist"))
-    val w = Window.partitionBy(col("vec_id"), col("m")).orderBy(col("dist"), col("cid"))
-    dist.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
+    GroupTop.per(dist, Seq(col("vec_id"), col("m")), Seq(col("dist"), col("cid")), 1, "rn")
       .select(col("vec_id"), col("m"), col("cid"))
   }
 
@@ -1202,11 +1170,9 @@ object SimilarityQueries {
 
   /** Hard assignment: each vector to its highest-cosine centroid (ties →
     * lowest cid). */
-  private[operators] def assignTo(ev: DataFrame, cents: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("vec_id")).orderBy(desc("cos"), col("cid"))
-    cosTo(ev, cents).withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1).select(col("vec_id"), col("cid"))
-  }
+  private[operators] def assignTo(ev: DataFrame, cents: DataFrame): DataFrame =
+    GroupTop.per(cosTo(ev, cents), Seq(col("vec_id")), Seq(desc("cos"), col("cid")), 1, "rn")
+      .select(col("vec_id"), col("cid"))
 
   /** At-rest TRAINED centroids (cid, pos, ce): spherical-ish k-means —
     * init = the `cells` lowest-id vectors (ss4's deterministic quantizer as
@@ -2092,9 +2058,9 @@ object SimilarityQueries {
     },
     // ss19b: hash-sampled probe set (smallest md5 prefixes), per-probe
     // exact ranks and Hamming pool ranks via windows, ss2's rerank per
-    // pool width, micro-averaged hits — the engine's two-phase top-K
-    // prune is invisible here (any per-bucket top-k prune preserves the
-    // global top-k), so the oracle ranks directly
+    // pool width, micro-averaged hits — the engine's per-probe cuts are
+    // plain row_number <= k windows (Spark's partial WindowGroupLimit
+    // prunes them inside the plan only), so the oracle ranks directly
     "ss19b_pareto_sampled" -> {
       val h = (1 to 8).map { i =>
         val pow = java.lang.Long.toString(1L << (4 * (8 - i)))
@@ -2151,8 +2117,8 @@ object SimilarityQueries {
     },
     // ss22: the quantizer retrains via the kmSql Lloyd CTEs, the probe's
     // cell ranking re-derives against the trained centroids, and each
-    // sweep value re-ranks the cell-admitted candidates directly (the
-    // engine's two-phase prune must be value-identical)
+    // sweep value re-ranks the cell-admitted candidates directly, the
+    // same row_number <= k cut the engine's GroupTop.per writes
     "ss22_nprobe_sweep" -> {
       val h = (1 to 8).map { i =>
         val pow = java.lang.Long.toString(1L << (4 * (8 - i)))

@@ -296,13 +296,10 @@ object TextQueries {
     // table joins in guarded-broadcast mode so the posting scan itself is
     // never re-keyed on t (guide §2.3/§3.1)
     val byDf = p.groupBy($"t").agg(count(lit(1)).as("df"))
-    val win = org.apache.spark.sql.expressions.Window
-      .partitionBy($"doc_id").orderBy(desc("score"), $"term")
-    p.join(guardedTerms(s, d, byDf), "t")
+    val scored = p.join(guardedTerms(s, d, byDf), "t")
       .select($"doc_id", $"t".as("term"),
         (($"tf" * lit(n)).cast("double") / $"df").as("score"))
-      .withColumn("rn", row_number().over(win))
-      .filter($"rn" <= 3)
+    GroupTop.per(scored, Seq($"doc_id"), Seq(desc("score"), $"term"), 3, "rn")
       .select($"doc_id", $"term", $"score")
       .orderBy($"doc_id", desc("score"), $"term")
   }

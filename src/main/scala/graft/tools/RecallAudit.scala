@@ -3,12 +3,11 @@ package graft.tools
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.SparkEntry
 import graft.functions.VectorOps.{cosineExact, dotExact, normSqExact}
-import graft.operators.SimilarityQueries
+import graft.operators.{GroupTop, SimilarityQueries}
 import graft.sources.Tables
 
 /** Measured recall of every ANN query against its exact control — the
@@ -123,12 +122,10 @@ object RecallAudit {
         .select($"vec_id".as("nid"), $"embedding".as("ne"), normSqExact($"embedding").as("nn"))
       // same score expression as ss9, so rank order differences are purely
       // the candidate pruning under audit
-      val exact9 = q.crossJoin(c)
+      val pairs = q.crossJoin(c)
         .select($"qid", $"nid",
           (dotExact($"qe", $"ne") / (sqrt($"qn") * sqrt($"nn"))).as("cosine"))
-        .withColumn("rank", row_number().over(
-          Window.partitionBy($"qid").orderBy(desc("cosine"), $"nid")))
-        .filter($"rank" <= k9)
+      val exact9 = GroupTop.per(pairs, Seq($"qid"), Seq(desc("cosine"), $"nid"), k9, "rank")
         .select($"qid", $"nid")
         .persist()
       // denominator = the ACTUAL exact-pair count, not nq·k9 — a query

@@ -576,6 +576,45 @@ abstract class PlanAuditBase extends SparkSpec {
     assert(p.split("ReadSchema: ").exists(_.startsWith("struct<doc_id:bigint,n_chars:bigint")),
       s"asset generation needs only (doc_id, n_chars):\n${p.take(1200)}")
   }
+
+  /** `df`'s FINAL adaptive plan (it is collected first), without the
+    * initial-plan section. */
+  private def finalPlan(df: DataFrame): String = {
+    df.collect()
+    val full = df.queryExecution.executedPlan.toString
+    assert(full.contains("isFinalPlan=true"), "plan must be AQE-final before auditing")
+    full.split("== Initial Plan ==")(0)
+  }
+
+  /** A sampled audit's rank-cut pins: hash exchanges and windows in the
+    * final plan (one exchange and one window per cut — a pre-rank level
+    * would add one of each), and Spark's partial `WindowGroupLimit`
+    * directly below every hash exchange that feeds a rank window keyed by
+    * `pid`, so no probe's corpus-sized row set is shuffled whole. */
+  private def assertRankCuts(q: String, exchanges: Int, windows: Int): Unit = {
+    val p = finalPlan(SimilarityQueries.queries(q)(spark, dir))
+    val lines = p.linesIterator.toIndexedSeq
+    val nEx = lines.count(_.contains("Exchange hashpartitioning"))
+    val nWin = lines.count(_.contains("Window ["))
+    assert(nEx == exchanges && nWin == windows,
+      s"$q: $nEx hash exchanges and $nWin windows, pinned at $exchanges and $windows:\n${p.take(4000)}")
+    val rankEx = lines.indices.filter(i =>
+      lines(i).contains("Exchange hashpartitioning(pid") &&
+        lines.take(i).reverse.takeWhile(!_.contains("Exchange")).exists(_.contains("WindowGroupLimit")))
+    assert(rankEx.nonEmpty, s"$q: no per-probe rank exchange found:\n${p.take(4000)}")
+    rankEx.foreach { i =>
+      assert(lines(i + 1).contains("WindowGroupLimit") && lines(i + 1).contains("Partial"),
+        s"$q: a partial WindowGroupLimit must sit below ${lines(i).trim}:\n${p.take(4000)}")
+    }
+  }
+
+  test("ss19b per-probe cuts: Spark's partial WindowGroupLimit, no pre-rank level") {
+    assertRankCuts("ss19b_pareto_sampled", 3, 3)
+  }
+
+  test("ss22 per-probe cuts: Spark's partial WindowGroupLimit, no pre-rank level") {
+    assertRankCuts("ss22_nprobe_sweep", 5, 3)
+  }
 }
 
 /** Plan audits at the tiny scale — the fast default. */
